@@ -386,6 +386,18 @@ def _publish_exclusive(path: str, name: str, manifest: dict) -> None:
         os.remove(tmp)
 
 
+def _claim_version(path: str, v: int, manifest: dict, doing: str) -> None:
+    """Publish ``manifest`` as EXACTLY batch version ``v`` — the CAS claim
+    of every commit pinned to a version it read. A lost claim raises
+    :class:`ConcurrentManifestWriteError`; ``doing`` ends its message."""
+    try:
+        _publish_exclusive(path, f"{_V_PREFIX}{v:08d}", manifest)
+    except FileExistsError:
+        raise ConcurrentManifestWriteError(
+            f"version {v} in {path} was claimed by a concurrent writer {doing}"
+        ) from None
+
+
 def _publish_last_wins(path: str, name: str, manifest: dict) -> None:
     """Atomically publish a manifest where the LAST publication wins
     (``os.replace``) — the idempotent variant a retried streaming batch
@@ -1381,17 +1393,12 @@ class ManifestSinkWriter(DataSourceArrowWriter):
                     f"expectedVersion={self.expected_version} would leave a "
                     f"gap: version {pv} does not exist in {self.path}"
                 )
-            try:
-                _publish_exclusive(
-                    self.path, f"{_V_PREFIX}{self.expected_version:08d}", manifest
-                )
-            except FileExistsError:
-                raise ConcurrentManifestWriteError(
-                    f"version {self.expected_version} in {self.path} was "
-                    "claimed by a concurrent writer after this commit's base "
-                    "snapshot was read; re-read the snapshot and retry"
-                ) from None
             v = self.expected_version
+            _claim_version(
+                self.path, v, manifest,
+                "after this commit's base snapshot was read; re-read the "
+                "snapshot and retry",
+            )
         else:
             while True:
                 try:
@@ -2235,6 +2242,26 @@ def read_manifest_sink(
     return df
 
 
+def _batch_state(
+    path: str,
+    needs: str,
+    version: int | None = None,
+    with_stats: bool = True,
+    holds: str | None = None,
+) -> dict:
+    """Resolve ``path`` (at ``version``) and refuse anything but a batch
+    commit log — the family check of every batch-only op. ``needs``
+    opens the error (``"clone_manifest_sink expects"``); ``holds``
+    replaces its account of what the directory holds."""
+    state = _resolve_state(path, version, with_stats)
+    if state["kind"] != "batch":
+        kind = "a stream log" if state["kind"] == "stream" else "no log"
+        raise ValueError(
+            f"{needs} a batch commit log; {path} holds {holds or kind}"
+        )
+    return state
+
+
 def optimize_manifest_sink(
     spark: SparkSession,
     path: str,
@@ -2275,12 +2302,10 @@ def optimize_manifest_sink(
     columns are added to the re-recorded ``statsColumns``."""
     from pyspark.sql import functions as F
 
-    state = _resolve_state(path)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"optimize_manifest_sink expects a batch commit log; {path} "
-            "holds a stream log — use compact_stream_manifests there"
-        )
+    state = _batch_state(
+        path, "optimize_manifest_sink expects",
+        holds="a stream log — use compact_stream_manifests there",
+    )
     base_version = state["version"]
     fmts = {m.get("format", "jsonl") for m in state["metas"]}
     fmt = fmts.pop() if len(fmts) == 1 else "parquet"
@@ -2306,15 +2331,9 @@ def optimize_manifest_sink(
         stats_cols = sorted(set(stats_cols) | set(cluster_by))
     else:
         shaped = snapshot.repartition(target_files)
-    writer = (
-        shaped.write.format("manifestsink")
-        .option("path", path)
-        .option("format", fmt)
-        .option("expectedVersion", str(base_version + 1))
-    )
-    if stats_cols:
-        writer = writer.option("statsColumns", ",".join(stats_cols))
-    writer.mode("overwrite").save()
+    _staged_writer(shaped, path, fmt, base_version + 1, stats_cols).mode(
+        "overwrite"
+    ).save()
 
 
 def _basename_of_uri(uri: str) -> str:
@@ -2329,10 +2348,9 @@ def _read_file_list(spark: SparkSession, files: list[str], fmt: str, schema):
     return reader.parquet(*files) if fmt == "parquet" else reader.json(files)
 
 
-def _project_logical_df(df, physical_schema, mapping, keep=()):
+def _project_logical_df(df, physical_schema, mapping):
     """Project a physically-named DataFrame to the logical view (no-op
-    without a mapping); ``keep`` preserves extra bookkeeping columns
-    (e.g. ``__src``) untouched."""
+    without a mapping)."""
     if not mapping:
         return df
     from pyspark.sql import functions as F
@@ -2341,37 +2359,53 @@ def _project_logical_df(df, physical_schema, mapping, keep=()):
         *[
             F.col(p).alias(l)
             for l, p, _t in _logical_projection(physical_schema, mapping)
-        ],
-        *[F.col(k) for k in keep],
+        ]
     )
 
 
-def _snapshot_for_rmw(path: str) -> tuple[dict, str, StructType, list[str]]:
-    """Shared preamble of the copy-on-write ops: pin the snapshot, pin
-    the recorded schema (legacy no-schema logs are refused — a rewrite
-    must re-stage EXACTLY the recorded types, and inference can't
-    promise that), derive the stats columns to re-record."""
-    state = _resolve_state(path)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"copy-on-write commits need a batch commit log; {path} holds "
-            f"{'a stream log' if state['kind'] == 'stream' else 'no log'}"
-        )
+def _snapshot_for_rmw(
+    path: str,
+) -> tuple[dict, str, StructType, StructType, list[str]]:
+    """Pin step of the copy-on-write skeleton (:func:`_copy_on_write`):
+    pin the snapshot, pin the recorded schema (legacy no-schema logs are
+    refused — a rewrite must re-stage EXACTLY the recorded types, and
+    inference can't promise that), derive the stats columns to
+    re-record. Returns ``(state, fmt, physical_schema, logical_schema,
+    stats_cols)``; the logical schema is the column-mapped view the ops
+    work in."""
+    state = _batch_state(path, "copy-on-write commits need")
     fmt, schema = _pin_read_schema(state["metas"])
     if schema is None:
         raise ValueError(
             f"the log under {path} predates recorded schemas; rewrite it "
             "(optimize after one schema-recording commit) before MERGE/DELETE"
         )
-    stats_cols = sorted({c for st in state["file_stats"].values() for c in st})
-    if state.get("mapping"):
-        # a DROPPED column's physical stats keys linger in old files'
-        # entries; re-recording them would name a column the rewrite's
-        # physical schema no longer carries (writer init would refuse —
-        # every merge/delete on the table would fail until OPTIMIZE)
-        _dropped = set(_mapping_parts(state["mapping"])[1])
-        stats_cols = [c for c in stats_cols if c not in _dropped]
-    return state, fmt, schema, stats_cols
+    # a DROPPED column's physical stats keys linger in old files'
+    # entries; re-recording them would name a column the rewrite's
+    # physical schema no longer carries (writer init would refuse —
+    # every merge/delete on the table would fail until OPTIMIZE)
+    dropped = set(_mapping_parts(state.get("mapping"))[1])
+    stats_cols = sorted(
+        {c for st in state["file_stats"].values() for c in st if c not in dropped}
+    )
+    lschema = _snapshot_logical_schema(state["metas"], state.get("mapping"))[1]
+    return state, fmt, schema, lschema, stats_cols
+
+
+def _staged_writer(
+    df: DataFrame, path: str, fmt: str, expected_version: int, stats_cols: list[str]
+):
+    """The manifestsink writer a read-modify-write commit stages through:
+    it claims EXACTLY ``expected_version`` and re-records ``stats_cols``."""
+    writer = (
+        df.write.format("manifestsink")
+        .option("path", path)
+        .option("format", fmt)
+        .option("expectedVersion", str(expected_version))
+    )
+    if stats_cols:
+        writer = writer.option("statsColumns", ",".join(stats_cols))
+    return writer
 
 
 def _publish_replace(
@@ -2382,16 +2416,9 @@ def _publish_replace(
     expected_version: int,
     stats_cols: list[str],
 ) -> None:
-    writer = (
-        df.write.format("manifestsink")
-        .option("path", path)
-        .option("format", fmt)
-        .option("replacedFiles", json.dumps(sorted(removed)))
-        .option("expectedVersion", str(expected_version))
-    )
-    if stats_cols:
-        writer = writer.option("statsColumns", ",".join(stats_cols))
-    writer.mode("append").save()
+    _staged_writer(df, path, fmt, expected_version, stats_cols).option(
+        "replacedFiles", json.dumps(sorted(removed))
+    ).mode("append").save()
 
 
 def _is_concurrent_write_error(e: BaseException) -> bool:
@@ -2473,32 +2500,116 @@ def _replace_conflict_reason(
     return None
 
 
-def _publish_replace_with_retry(
-    df: DataFrame,
+def _copy_on_write(
+    spark: SparkSession,
     path: str,
-    fmt: str,
-    removed: list[str],
-    base_version: int,
-    stats_cols: list[str],
-    key_preds: dict | None,
+    snap: tuple,
     op_name: str,
-    max_retries: int = 4,
-) -> int:
-    """Publish a ``replace`` commit with Delta's transparent-conflict
-    retry: claim ``base_version+1``; on a lost CAS, re-validate the
-    winners via :func:`_replace_conflict_reason` and — when provably
-    disjoint — re-claim the SAME staged rewrite at the new head+1
-    (the DataFrame recomputes from the pinned files, which survive
-    until vacuum; content is identical by construction). Raises
-    :class:`ConcurrentManifestWriteError` only on TRUE conflicts, or
-    after ``max_retries`` lost re-claims (livelock guard). Returns the
-    version actually claimed."""
-    expected = base_version + 1
-    attempt = 0
+    candidates: list[str],
+    match,
+    added: DataFrame | None = None,
+    dropped: list[str] = (),
+    key_preds: dict | None = None,
+) -> dict:
+    """The copy-on-write skeleton MERGE, DELETE and retention DELETE
+    share, over the snapshot ``snap`` from :func:`_snapshot_for_rmw`
+    (version k). The op supplies its ``candidates`` (full paths of the
+    files that may hold a matching row), its ``match`` — a filter Column,
+    or a key DataFrame whose columns are the join keys (merge's join
+    mode) — the rows it ``added`` and the entries it ``dropped`` without
+    scanning.
+
+    1. TOUCHED set: scan only the candidates with ``input_file_name()``;
+       a file is rewritten iff it truly holds a matching row (pruning is
+       a superset; this scan is the truth).
+    2. Rewrite = touched rows minus the matched rows, plus ``added``,
+       one output file per touched input file.
+    3. Publish ONE ``replace`` commit removing the dropped and touched
+       files, claiming EXACTLY k+1. A lost claim is re-validated against
+       the winners' change sets (:func:`_replace_conflict_reason`,
+       Delta's logical conflict rule): when provably disjoint the SAME
+       staged rewrite re-claims head+1 (the frame recomputes from the
+       pinned files, which survive until vacuum; content is identical by
+       construction); a true conflict, or a fifth lost claim in a row
+       (livelock guard), raises :class:`ConcurrentManifestWriteError`.
+       ``key_preds`` (logical names) is what a winner's added file must
+       provably miss; ``None`` means additions are
+       serialization-reorderable for this op (DELETE).
+
+    With nothing touched, dropped or added (a DELETE matching no row)
+    no commit is published. Returns ``{"version", "base_version",
+    "rewritten_files", "candidate_files", "total_files"}``."""
+    from pyspark.sql import functions as F
+
+    state, fmt, schema, lschema, stats_cols = snap
+    base_version, mapping = state["version"], state.get("mapping")
+
+    def scan(files: list[str]) -> DataFrame:
+        return _project_logical_df(
+            _read_file_list(spark, files, fmt, schema), schema, mapping
+        )
+
+    keys = match.columns if isinstance(match, DataFrame) else None
+    # snapshot entries may be dst-local basenames OR absolute references
+    # (a shallow CLONE); input_file_name gives a URI, so map its basename
+    # back to the manifest's entry name (staged names are uuid-unique)
+    by_base = {os.path.basename(f): f for f in state["files"]}
+    touched: list[str] = []
+    if candidates:
+        # a filter goes BEFORE input_file_name(): the nondeterministic
+        # projection blocks predicate pushdown, so the filter must sit
+        # under it to reach the scan (PushedFilters: In(...) — parquet
+        # row-group skipping inside the candidate files). A key frame
+        # instead needs __src attached FIRST: input_file_name() is
+        # single-source only, so it must bind below the semi join.
+        if keys is None:
+            hits = scan(candidates).filter(match)
+            hits = hits.withColumn("__src", F.input_file_name())
+        else:
+            hits = scan(candidates).withColumn("__src", F.input_file_name())
+            hits = hits.join(match, keys, "left_semi")
+        touched = sorted(
+            by_base[_basename_of_uri(r["__src"])]
+            for r in hits.select("__src").distinct().collect()
+        )
+    result = {
+        "version": base_version,
+        "base_version": base_version,
+        "rewritten_files": touched,
+        "candidate_files": len(candidates),
+        "total_files": len(state["files"]),
+    }
+    if not (touched or dropped) and added is None:
+        return result
+    if touched:
+        kept = scan([os.path.join(path, f) for f in touched])
+        if keys is None:
+            # anti-join semantics with a literal predicate: a row whose
+            # match is NULL (a NULL key, a NULL condition) is KEPT
+            kept = kept.filter(~F.coalesce(match, F.lit(False)))
+        else:
+            kept = kept.join(match, keys, "left_anti")
+        new_data = kept.select(*lschema.fieldNames())
+        if added is not None:
+            new_data = new_data.unionByName(added)
+        # one output file per rewritten input file: the rewrite's volume is
+        # the touched files' volume, so this keeps file sizes stable across
+        # merge generations (zero-row partitions stage nothing regardless)
+        new_data = new_data.coalesce(len(touched))
+    elif added is not None:
+        new_data = added
+    else:
+        new_data = local_relation_df(spark, [], lschema)
+    removed = sorted(dropped) + touched
+    if mapping and key_preds:
+        # winners' staged stats are keyed by PHYSICAL name
+        renamed = _mapping_parts(mapping)[0]
+        key_preds = {renamed.get(c, c): v for c, v in key_preds.items()}
+    expected, attempt = base_version + 1, 0
     while True:
         try:
-            _publish_replace(df, path, fmt, removed, expected, stats_cols)
-            return expected
+            _publish_replace(new_data, path, fmt, removed, expected, stats_cols)
+            return {**result, "version": expected}
         except Exception as e:
             if not _is_concurrent_write_error(e):
                 raise
@@ -2514,7 +2625,7 @@ def _publish_replace_with_retry(
                     f"{op_name}"
                 ) from None
             attempt += 1
-            if attempt > max_retries:
+            if attempt > 4:
                 raise ConcurrentManifestWriteError(
                     f"{op_name} on {path} lost {attempt} consecutive claims "
                     "to non-conflicting writers (livelock guard) — retry "
@@ -2560,6 +2671,8 @@ def merge_into_manifest_sink(
        surfaces as :class:`ConcurrentManifestWriteError` (re-read,
        redo), never as silently-superseded rows.
 
+    Steps 3 and 4 are the :func:`_copy_on_write` skeleton DELETE shares.
+
     ``delete_condition`` is the WHEN MATCHED ... THEN DELETE clause
     (Delta's merge-delete): a SQL predicate over the UPDATE row's
     columns; source rows where it is TRUE delete their matched table
@@ -2577,21 +2690,13 @@ def merge_into_manifest_sink(
     ``candidate_files`` ⊂ ``total_files`` on a stats-pruned log."""
     from pyspark.sql import functions as F
 
-    state, fmt, schema, stats_cols = _snapshot_for_rmw(path)
-    base_version = state["version"]
+    snap = _snapshot_for_rmw(path)
+    state, lschema = snap[0], snap[3]
     # column mapping (r15): the table's files carry immutable PHYSICAL
     # names; the merge operates entirely in the LOGICAL view (updates
     # arrive logical, scans are projected, the staged rewrite maps back
     # at write time), and stats/conflict predicates translate at the
     # boundaries
-    mapping = state.get("mapping")
-    lschema = schema
-    if mapping:
-        from pyspark.sql.types import StructField as _SF
-
-        lschema = StructType(
-            [_SF(l, t, True) for l, _p, t in _logical_projection(schema, mapping)]
-        )
     cols = lschema.fieldNames()
     missing = [c for c in cols if c not in updates.columns]
     extra = [c for c in updates.columns if c not in cols]
@@ -2645,15 +2750,13 @@ def merge_into_manifest_sink(
     ]
     MAX_POINT_KEYS = 128
     head = updates.limit(MAX_POINT_KEYS + 1).collect()
-    point = len(head) <= MAX_POINT_KEYS
-    preds: dict = {}
     # conflict_preds drive the lost-CAS logical-conflict check (what a
     # WINNING commit's added files must provably miss for this merge to
     # re-claim transparently) — built even when the TABLE has no stats,
     # because it is the winner's STAGED stats that get consulted; {}
-    # means "unprovable" (any concurrent addition is a true conflict)
-    conflict_preds: dict = {}
-    if point:
+    # means "unprovable" (any concurrent addition is a true conflict).
+    # When the table has stats they also prune the candidate files.
+    if len(head) <= MAX_POINT_KEYS:
         seen: set = set()
         for r in head:
             kv = tuple(r[k] for k in keys)
@@ -2663,10 +2766,66 @@ def merge_into_manifest_sink(
                     f"merge would be ambiguous (first offender: {r})"
                 )
             seen.add(kv)
-        for k in orderable:
-            conflict_preds[k] = [(v, v) for v in sorted({r[k] for r in head})]
-        if state["file_stats"]:
-            preds = dict(conflict_preds)
+        conflict_preds = {
+            k: [(v, v) for v in sorted({r[k] for r in head})] for k in orderable
+        }
+        # the matched-key test drives both the touched-set probe and the
+        # rewrite's row drop. The probe already COLLECTED the distinct
+        # keys (<= 128 rows), so compile them into a literal membership
+        # predicate instead of a join: a single-key merge becomes
+        # ``col IN (...)`` — pushed into the parquet scan as an In filter
+        # (row-group skipping at any scale) — and the touched and rewrite
+        # jobs never re-run the updates' lineage for the key side (a
+        # streamed CDC merge used to recompute its micro-batch twice per
+        # commit)
+        if not head:
+            # EMPTY updates (e.g. an empty CDC micro-batch in a
+            # foreachBatch merge): no key can match — the probe and the
+            # rewrite degenerate to no-ops and the commit publishes an
+            # empty replace (r15 regression: reduce() over zero sample
+            # rows raised TypeError on the compound-key path)
+            match = F.lit(False)
+        elif len(keys) == 1:
+            match = F.col(keys[0]).isin([r[keys[0]] for r in head])
+        else:
+            # compound key: ONE struct-IN node — struct(keys) IN
+            # (struct(v...), ...) — instead of a 128-term OR-chain of
+            # conjunctions; the literal list hangs off a single In
+            # expression, so Catalyst's analysis cost stays flat at
+            # merge depth (NULL semantics identical: a NULL key field
+            # yields NULL/false, never a match)
+            match = F.struct(*[F.col(k) for k in keys]).isin(
+                [
+                    F.struct(
+                        *[
+                            F.lit(r[k])
+                            .cast(lschema[k].dataType)
+                            .alias(k)
+                            for k in keys
+                        ]
+                    )
+                    for r in head
+                ]
+            )
+        # WHEN MATCHED DELETE: the match above covers ALL update rows (a
+        # delete-intent key must count as matched so its file is
+        # rewritten), but only the non-delete rows re-enter the table; a
+        # delete-intent row whose key never matched inserts nothing (WHEN
+        # NOT MATCHED has no DELETE arm) because it simply isn't in
+        # `surviving`. The rows the probe collected become a literal
+        # LocalRelation (util.local_relation_df), so the staged rewrite's
+        # lineage is just touched-file scan + literals: the update
+        # pipeline never re-runs inside the write job, and a
+        # nondeterministic update source stages exactly the audited rows.
+        surviving = local_relation_df(
+            spark,
+            [
+                tuple(r[c] for c in cols)
+                for r in head
+                if delete_condition is None or not r[mdel]
+            ],
+            lschema,
+        )
     else:
         # join mode (> MAX_POINT_KEYS rows): materialize the update set
         # ONCE (Delta's materialize-source move). The audit aggregate,
@@ -2697,146 +2856,21 @@ def merge_into_manifest_sink(
             for k in orderable
             if b[f"__lo_{k}"] is not None
         }
-        if state["file_stats"]:
-            preds = dict(conflict_preds)
-    all_files = list(state["files"])
-    candidates = [os.path.join(path, f) for f in all_files]
-    if preds:
-        candidates, _total = prune_manifest_files(path, preds, version=base_version)
-    # the matched-key test drives both the touched-set probe and the
-    # rewrite's row drop. In POINT mode the probe already COLLECTED the
-    # distinct keys (<= 128 rows), so compile them into a literal
-    # membership predicate instead of a join: a single-key merge becomes
-    # ``col IN (...)`` — pushed into the parquet scan as an In filter
-    # (row-group skipping at any scale) — and a compound key an OR-chain
-    # of conjunctions. No join, no broadcast build, and the touched and
-    # rewrite jobs never re-run the updates' lineage for the key side (a
-    # streamed CDC merge used to recompute its micro-batch twice per
-    # commit). Beyond 128 keys the semi/anti join over the distinct key
-    # frame remains the right tool.
-    matched_cond = None
-    key_df = None
-    if point:
-        if not head:
-            # EMPTY updates (e.g. an empty CDC micro-batch in a
-            # foreachBatch merge): no key can match — the probe and the
-            # rewrite degenerate to no-ops and the commit publishes an
-            # empty replace, exactly what the join path did on an empty
-            # distinct frame (r15 regression: reduce() over zero sample
-            # rows raised TypeError on the compound-key path)
-            matched_cond = F.lit(False)
-        elif len(keys) == 1:
-            matched_cond = F.col(keys[0]).isin([r[keys[0]] for r in head])
-        else:
-            # compound key: ONE struct-IN node — struct(keys) IN
-            # (struct(v...), ...) — instead of a 128-term OR-chain of
-            # conjunctions; the literal list hangs off a single In
-            # expression, so Catalyst's analysis cost stays flat at
-            # merge depth (NULL semantics identical: a NULL key field
-            # yields NULL/false, never a match)
-            matched_cond = F.struct(*[F.col(k) for k in keys]).isin(
-                [
-                    F.struct(
-                        *[
-                            F.lit(r[k])
-                            .cast(lschema[k].dataType)
-                            .alias(k)
-                            for k in keys
-                        ]
-                    )
-                    for r in head
-                ]
-            )
-    else:
-        key_df = updates.select(*keys).distinct()
-    # snapshot entries may be dst-local basenames OR absolute references
-    # (a shallow CLONE); input_file_name gives a URI, so map its basename
-    # back to the manifest's entry name (staged names are uuid-unique)
-    by_base = {os.path.basename(f): f for f in all_files}
-    touched: list[str] = []
-    if candidates:
-        cand_df = _project_logical_df(
-            _read_file_list(spark, candidates, fmt, schema), schema, mapping
-        )
-        # filter BEFORE attaching input_file_name(): the nondeterministic
-        # projection blocks predicate pushdown, so the membership filter
-        # must sit under it to reach the scan (PushedFilters: In(...) —
-        # parquet row-group skipping inside the candidate files). The
-        # join path instead attaches __src FIRST: input_file_name() is
-        # single-source only, so it must bind below the semi join.
-        if matched_cond is not None:
-            hits = cand_df.filter(matched_cond).withColumn(
-                "__src", F.input_file_name()
-            )
-        else:
-            hits = cand_df.withColumn("__src", F.input_file_name()).join(
-                key_df, keys, "left_semi"
-            )
-        touched = sorted(
-            by_base[_basename_of_uri(r["__src"])]
-            for r in hits.select("__src").distinct().collect()
-        )
-    # WHEN MATCHED DELETE: the key frame above covers ALL update rows (a
-    # delete-intent key must count as matched so its file is rewritten),
-    # but only the non-delete rows re-enter the table; a delete-intent
-    # row whose key never matched inserts nothing (WHEN NOT MATCHED has
-    # no DELETE arm) because it simply isn't in `surviving`.
-    # POINT mode rebuilds `surviving` from the rows the probe already
-    # collected — a literal relation (LocalRelation where types allow;
-    # util.local_relation_df) — so the staged rewrite's lineage is just
-    # touched-file scan + literals: the update pipeline never re-runs
-    # inside the write job, and a nondeterministic update source stages
-    # exactly the audited rows.
-    if point:
-        surv_rows = (
-            head
-            if delete_condition is None
-            else [r for r in head if not r[mdel]]
-        )
-        surviving = local_relation_df(
-            spark, [tuple(r[c] for c in cols) for r in surv_rows], lschema
-        )
-    elif delete_condition is not None:
-        surviving = updates.filter(~F.col(mdel)).select(*cols)
-    else:
+        # beyond 128 keys the semi/anti join over the distinct key frame
+        # is the right tool
+        match = updates.select(*keys).distinct()
         surviving = updates
-    if touched:
-        kept = _project_logical_df(
-            _read_file_list(
-                spark, [os.path.join(path, f) for f in touched], fmt, schema
-            ),
-            schema, mapping,
+        if delete_condition is not None:
+            surviving = updates.filter(~F.col(mdel)).select(*cols)
+    candidates = [os.path.join(path, f) for f in state["files"]]
+    if state["file_stats"] and conflict_preds:
+        candidates, _total = prune_manifest_files(
+            path, dict(conflict_preds), version=state["version"]
         )
-        if matched_cond is not None:
-            # anti-join semantics with a literal predicate: a NULL-key
-            # table row never equals any update key, so it is KEPT
-            # (IN over a NULL key yields NULL — coalesce it to False)
-            kept = kept.filter(~F.coalesce(matched_cond, F.lit(False)))
-        else:
-            kept = kept.join(key_df, keys, "left_anti")
-        # one output file per rewritten input file: the rewrite's volume is
-        # the touched files' volume, so this keeps file sizes stable across
-        # merge generations (zero-row partitions stage nothing regardless)
-        new_data = kept.select(*cols).unionByName(surviving).coalesce(
-            max(1, len(touched))
-        )
-    else:
-        new_data = surviving
-    if mapping and conflict_preds:
-        # winners' staged stats are keyed by PHYSICAL name
-        _cm, _ = _mapping_parts(mapping)
-        conflict_preds = {_cm.get(c, c): v for c, v in conflict_preds.items()}
-    claimed = _publish_replace_with_retry(
-        new_data, path, fmt, touched, base_version, stats_cols,
-        conflict_preds, "MERGE",
+    return _copy_on_write(
+        spark, path, snap, "MERGE", candidates, match, surviving,
+        key_preds=conflict_preds,
     )
-    return {
-        "version": claimed,
-        "base_version": base_version,
-        "rewritten_files": touched,
-        "candidate_files": len(candidates),
-        "total_files": len(all_files),
-    }
 
 
 def delete_from_manifest_sink(
@@ -2856,67 +2890,20 @@ def delete_from_manifest_sink(
     as for merge."""
     from pyspark.sql import functions as F
 
-    state, fmt, schema, stats_cols = _snapshot_for_rmw(path)
-    base_version = state["version"]
-    mapping = state.get("mapping")
-    cols = (
-        [l for l, _p, _t in _logical_projection(schema, mapping)]
-        if mapping else schema.fieldNames()
-    )
+    snap = _snapshot_for_rmw(path)
+    state = snap[0]
     candidates = [os.path.join(path, f) for f in state["files"]]
     if prune:
-        candidates, _total = prune_manifest_files(path, prune, version=base_version)
-    # see merge: map URI basenames back to entry names (clone-safe)
-    by_base = {os.path.basename(f): f for f in state["files"]}
-    touched: list[str] = []
-    if candidates:
-        # filter UNDER the nondeterministic input_file_name() projection
-        # so the delete predicate reaches the scan (see merge)
-        cand_df = _project_logical_df(
-            _read_file_list(spark, candidates, fmt, schema), schema, mapping
+        candidates, _total = prune_manifest_files(
+            path, prune, version=state["version"]
         )
-        touched = sorted(
-            by_base[_basename_of_uri(r["__src"])]
-            for r in cand_df.filter(F.expr(condition))
-            .withColumn("__src", F.input_file_name())
-            .select("__src")
-            .distinct()
-            .collect()
-        )
-    if not touched:
-        return {
-            "version": base_version,
-            "base_version": base_version,
-            "rewritten_files": [],
-            "candidate_files": len(candidates),
-            "total_files": len(state["files"]),
-        }
-    kept = (
-        _project_logical_df(
-            _read_file_list(
-                spark, [os.path.join(path, f) for f in touched], fmt, schema
-            ),
-            schema, mapping,
-        )
-        .filter(~F.coalesce(F.expr(condition), F.lit(False)))
-        .select(*cols)
-        .coalesce(max(1, len(touched)))  # layout-stable, see merge
-    )
     # additions are serialization-reorderable for a DELETE
     # (WriteSerializable: an appended row simply lands "after" the
     # delete), so key_preds=None — only overlapping rewrites/bases
     # are true conflicts
-    claimed = _publish_replace_with_retry(
-        kept, path, fmt, touched, base_version, stats_cols, None, "DELETE",
+    return _copy_on_write(
+        spark, path, snap, "DELETE", candidates, F.expr(condition)
     )
-    return {
-        "version": claimed,
-        "base_version": base_version,
-        "rewritten_files": touched,
-        "candidate_files": len(candidates),
-        "total_files": len(state["files"]),
-    }
-
 
 
 def delete_range_from_manifest_sink(
@@ -2954,23 +2941,12 @@ def delete_range_from_manifest_sink(
     if lo is None and hi is None:
         raise ValueError("pass at least one bound (lo/hi); an unbounded "
                          "range delete is a truncate — use mode('overwrite')")
-    state, fmt, schema, stats_cols = _snapshot_for_rmw(path)
-    mapping = state.get("mapping")
-    if mapping:
-        proj = _logical_projection(schema, mapping)
-        cols = [l for l, _p, _t in proj]
-        _cm = {l: p for l, p, _t in proj}
-        pcol = _cm.get(col)
-        if pcol is None:
-            raise ValueError(f"range column {col!r} not in table columns "
-                             f"{cols}")
-    else:
-        cols = schema.fieldNames()
-        pcol = col
-        if col not in cols:
-            raise ValueError(f"range column {col!r} not in table columns "
-                             f"{cols}")
-    base_version = state["version"]
+    snap = _snapshot_for_rmw(path)
+    state, cols = snap[0], snap[3].fieldNames()
+    if col not in cols:
+        raise ValueError(f"range column {col!r} not in table columns {cols}")
+    # skipping stats are keyed by PHYSICAL name
+    pcol = _mapping_parts(state.get("mapping"))[0].get(col, col)
     fstats = state.get("file_stats", {})
     dropped: list[str] = []
     scan: list[str] = []
@@ -2994,62 +2970,12 @@ def delete_range_from_manifest_sink(
         cond = cond & (F.col(col) >= F.lit(lo))
     if hi is not None:
         cond = cond & (F.col(col) <= F.lit(hi))
-    by_base = {os.path.basename(f): f for f in state["files"]}
-    touched: list[str] = []
-    if scan:
-        # filter UNDER the nondeterministic input_file_name() projection
-        # so the range predicate reaches the scan (see merge)
-        cand_df = _project_logical_df(
-            _read_file_list(
-                spark, [os.path.join(path, f) for f in scan], fmt, schema
-            ),
-            schema, mapping,
-        )
-        touched = sorted(
-            by_base[_basename_of_uri(r["__src"])]
-            for r in cand_df.filter(cond)
-            .withColumn("__src", F.input_file_name())
-            .select("__src")
-            .distinct()
-            .collect()
-        )
-    if not dropped and not touched:
-        return {
-            "version": base_version,
-            "base_version": base_version,
-            "dropped_files": [],
-            "rewritten_files": [],
-            "scanned_files": len(scan),
-            "total_files": len(state["files"]),
-        }
-    if touched:
-        kept = (
-            _project_logical_df(
-                _read_file_list(
-                    spark, [os.path.join(path, f) for f in touched], fmt, schema
-                ),
-                schema, mapping,
-            )
-            .filter(~F.coalesce(cond, F.lit(False)))
-            .select(*cols)
-            .coalesce(max(1, len(touched)))
-        )
-    else:
-        kept = local_relation_df(
-            spark, [], _snapshot_logical_schema(state["metas"], mapping)[1]
-        )
-    claimed = _publish_replace_with_retry(
-        kept, path, fmt, sorted(dropped) + touched, base_version, stats_cols,
-        None, "retention DELETE",
+    res = _copy_on_write(
+        spark, path, snap, "retention DELETE",
+        [os.path.join(path, f) for f in scan], cond, dropped=dropped,
     )
-    return {
-        "version": claimed,
-        "base_version": base_version,
-        "dropped_files": sorted(dropped),
-        "rewritten_files": touched,
-        "scanned_files": len(scan),
-        "total_files": len(state["files"]),
-    }
+    res["scanned_files"] = res.pop("candidate_files")
+    return {**res, "dropped_files": sorted(dropped)}
 
 
 def _mapping_parts(mapping: dict | None) -> tuple[dict, list]:
@@ -3169,7 +3095,7 @@ def _metadata_commit(path: str, new_mapping: dict, operation: str) -> int:
     writes, or OPTIMIZE after."""
     with open(os.path.join(path, _COLMAP_MARKER), "w") as f:
         f.write("1")
-    state = _resolve_state(path, with_stats=False)
+    target = _resolve_state(path, with_stats=False)["version"] + 1
     man = {
         "files": [],
         "mode": "metadata",
@@ -3177,18 +3103,39 @@ def _metadata_commit(path: str, new_mapping: dict, operation: str) -> int:
         "operation": operation,
         "ts": time.time(),
     }
-    target = state["version"] + 1
-    try:
-        _publish_exclusive(path, f"{_V_PREFIX}{target:08d}", man)
-    except FileExistsError:
-        raise ConcurrentManifestWriteError(
-            f"version {target} in {path} was claimed by a concurrent writer "
-            f"while committing {operation!r}; re-read and retry"
-        ) from None
-    hint = _read_hint(path)
-    _write_hint(path, "batch", target,
-                hint.get("checkpoint") if hint else None)
+    _claim_version(
+        path, target, man, f"while committing {operation!r}; re-read and retry"
+    )
+    _write_hint(path, "batch", target, (_read_hint(path) or {}).get("checkpoint"))
     return target
+
+
+def _mapping_target(
+    path: str, op: str, name: str
+) -> tuple[StructType, list[str], dict, list, str]:
+    """The preamble RENAME and DROP COLUMN share: resolve the batch log,
+    pin its recorded physical schema (legacy no-schema logs are refused —
+    nothing pins what ``name`` means in their files) and check ``name``
+    is a current logical column. Returns ``(physical_schema,
+    logical_names, cols, dropped, physical_name)``, ``cols``/``dropped``
+    as :func:`_mapping_parts` gives them."""
+    state = _batch_state(
+        path, f"{op.lower().replace(' ', '_')} expects", with_stats=False
+    )
+    _fmt, phys = _pin_read_schema(state["metas"])
+    if phys is None:
+        raise ValueError(
+            f"the log under {path} predates recorded schemas; rewrite it "
+            f"(optimize) before {op}"
+        )
+    proj = _logical_projection(phys, state.get("mapping"))
+    names = [l for l, _p, _t in proj]
+    if name not in names:
+        raise ValueError(
+            f"{op}: {name!r} is not a column of {path} (columns: {names})"
+        )
+    cols, dropped = _mapping_parts(state.get("mapping"))
+    return phys, names, cols, dropped, next(p for l, p, _t in proj if l == name)
 
 
 def rename_column_manifest_sink(path: str, old: str, new: str) -> int:
@@ -3206,37 +3153,17 @@ def rename_column_manifest_sink(path: str, old: str, new: str) -> int:
     so that old files can never be mis-projected. Returns the committed
     version. Legacy no-schema logs are refused (nothing pins what ``old``
     means in their files)."""
-    state = _resolve_state(path, with_stats=False)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"rename_column expects a batch commit log; {path} holds "
-            f"{'a stream log' if state['kind'] == 'stream' else 'no log'}"
-        )
-    _fmt, phys = _pin_read_schema(state["metas"])
-    if phys is None:
-        raise ValueError(
-            f"the log under {path} predates recorded schemas; rewrite it "
-            "(optimize) before RENAME COLUMN"
-        )
-    mapping = state.get("mapping")
-    proj = _logical_projection(phys, mapping)
-    logical_names = [l for l, _p, _t in proj]
-    if old not in logical_names:
-        raise ValueError(
-            f"RENAME COLUMN: {old!r} is not a column of {path} "
-            f"(columns: {logical_names})"
-        )
-    if new in logical_names:
+    phys, names, cols, dropped, physical_old = _mapping_target(
+        path, "RENAME COLUMN", old
+    )
+    if new in names:
         raise ValueError(f"RENAME COLUMN: {new!r} already exists in {path}")
-    cols, dropped = _mapping_parts(mapping)
-    used_physical = {f.name for f in phys.fields} | set(dropped) | set(cols.values())
-    if new in used_physical:
+    if new in {f.name for f in phys.fields} | set(dropped) | set(cols.values()):
         raise ValueError(
             f"RENAME COLUMN: {new!r} collides with a physical column name "
             "already used by this table's files; physical names are never "
             "reused — pick a fresh name"
         )
-    physical_old = next(p for l, p, _t in proj if l == old)
     cols.pop(old, None)
     cols[new] = physical_old
     return _metadata_commit(
@@ -3255,35 +3182,45 @@ def drop_column_manifest_sink(path: str, name: str) -> int:
     Storage is reclaimed lazily: OPTIMIZE rewrites the snapshot without
     the column (it materializes the logical view), after which expire +
     vacuum drop the old files. Returns the committed version."""
-    state = _resolve_state(path, with_stats=False)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"drop_column expects a batch commit log; {path} holds "
-            f"{'a stream log' if state['kind'] == 'stream' else 'no log'}"
-        )
-    _fmt, phys = _pin_read_schema(state["metas"])
-    if phys is None:
-        raise ValueError(
-            f"the log under {path} predates recorded schemas; rewrite it "
-            "(optimize) before DROP COLUMN"
-        )
-    mapping = state.get("mapping")
-    proj = _logical_projection(phys, mapping)
-    logical_names = [l for l, _p, _t in proj]
-    if name not in logical_names:
-        raise ValueError(
-            f"DROP COLUMN: {name!r} is not a column of {path} "
-            f"(columns: {logical_names})"
-        )
-    if len(logical_names) == 1:
+    _phys, names, cols, dropped, physical = _mapping_target(
+        path, "DROP COLUMN", name
+    )
+    if len(names) == 1:
         raise ValueError("DROP COLUMN: cannot drop a table's only column")
-    cols, dropped = _mapping_parts(mapping)
-    physical = next(p for l, p, _t in proj if l == name)
     cols.pop(name, None)
     dropped.append(physical)
     return _metadata_commit(
         path, {"cols": cols, "dropped": dropped}, f"DROP COLUMN {name}"
     )
+
+
+def _base_manifest(
+    state: dict, files: list[str], file_stats: dict, **provenance
+) -> dict:
+    """The base (overwrite) commit RESTORE and CLONE publish: it lists
+    ``files`` of the resolved snapshot ``state`` under that snapshot's
+    recorded schema and column mapping (an overwrite otherwise RESETS
+    the mapping), with ``file_stats`` keyed by those entries. No data
+    file is read or written."""
+    fmt, schema = _pin_read_schema(state["metas"])
+    manifest = {
+        "files": files,
+        "n_rows": None,  # not tracked per file outside stats; readers never use it
+        "fields": schema.fieldNames() if schema is not None else sorted(
+            {f for m in state["metas"] for f in (m.get("fields") or [])}
+        ),
+        "format": fmt,
+        "mode": "overwrite",
+        "ts": time.time(),
+        **provenance,
+    }
+    if schema is not None:
+        manifest["schema_json"] = schema.json()
+    if file_stats:
+        manifest["file_stats"] = file_stats
+    if state.get("mapping"):
+        manifest["column_mapping"] = state["mapping"]
+    return manifest
 
 
 def restore_manifest_sink(path: str, version: int) -> int:
@@ -3300,50 +3237,23 @@ def restore_manifest_sink(path: str, version: int) -> int:
     stats ride along (the restored files' stats were recorded by their
     original commits), and the restore is itself a legal retention
     floor (mode=overwrite)."""
-    state = _resolve_state(path, version)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"restore_manifest_sink expects a batch commit log; {path} "
-            f"holds {'a stream log' if state['kind'] == 'stream' else 'no log'}"
-        )
+    state = _batch_state(path, "restore_manifest_sink expects", version)
     latest = _resolve_state(path, with_stats=False)["version"]
     if version > latest:
         raise ValueError(
             f"cannot restore {path} to version {version}: the log only "
             f"reaches {latest}"
         )
-    fmt, schema = _pin_read_schema(state["metas"])
-    manifest = {
-        "files": list(state["files"]),
-        "n_rows": None,  # not tracked per file outside stats; readers never use it
-        "fields": schema.fieldNames() if schema is not None else sorted(
-            {f for m in state["metas"] for f in (m.get("fields") or [])}
-        ),
-        "format": fmt,
-        "mode": "overwrite",
-        "ts": time.time(),
-        "restored_from": version,
-    }
-    if state.get("mapping"):
-        # the column mapping AS OF the restored version rides the base
-        # commit (an overwrite otherwise RESETS the mapping)
-        manifest["column_mapping"] = state["mapping"]
-    if schema is not None:
-        manifest["schema_json"] = schema.json()
-    if state["file_stats"]:
-        manifest["file_stats"] = state["file_stats"]
-    target = latest + 1
-    try:
-        _publish_exclusive(path, f"{_V_PREFIX}{target:08d}", manifest)
-    except FileExistsError:
-        raise ConcurrentManifestWriteError(
-            f"version {target} in {path} was claimed by a concurrent writer "
-            "while restoring; re-read the log and retry"
-        ) from None
-    hint = _read_hint(path)
-    _write_hint(
-        path, "batch", target, hint.get("checkpoint") if hint else None
+    # skipping stats ride along: the restored files' stats were recorded
+    # by their original commits
+    manifest = _base_manifest(
+        state, list(state["files"]), state["file_stats"], restored_from=version
     )
+    target = latest + 1
+    _claim_version(
+        path, target, manifest, "while restoring; re-read the log and retry"
+    )
+    _write_hint(path, "batch", target, (_read_hint(path) or {}).get("checkpoint"))
     return target
 
 
@@ -3392,12 +3302,7 @@ def clone_manifest_sink(
         raise ValueError("pass version or timestamp, not both")
     if timestamp is not None:
         version = version_at_timestamp(src, timestamp)
-    state = _resolve_state(src, version)
-    if state["kind"] != "batch":
-        raise ValueError(
-            f"clone_manifest_sink expects a batch commit log; {src} holds "
-            f"{'a stream log' if state['kind'] == 'stream' else 'no log'}"
-        )
+    state = _batch_state(src, "clone_manifest_sink expects", version)
     kind, _c, _k = _scan_names(dst) if os.path.isdir(dst) else (None, [], [])
     if kind is not None:
         raise ValueError(
@@ -3407,18 +3312,12 @@ def clone_manifest_sink(
     if relative and deep:
         raise ValueError("relative=True is a shallow-clone option; a deep "
                          "clone copies files and has no external references")
-    fmt, schema = _pin_read_schema(state["metas"])
-    os.makedirs(dst, exist_ok=True)
     src_abs = os.path.abspath(src)
     dst_abs = os.path.abspath(dst)
+    # each source entry's name in the clone; skipping stats are re-keyed
+    # the same way, so merges against the clone still prune
     if deep:
-        import shutil
-
-        entries = []
-        for f in state["files"]:
-            full = os.path.join(src_abs, f)
-            entries.append(os.path.basename(f))
-            shutil.copy2(full, os.path.join(dst, os.path.basename(f)))
+        entry_of = os.path.basename
     elif relative:
         # r15: store refs RELATIVE to the clone directory ("../src/f"),
         # resolved by the same os.path.join every read already does —
@@ -3426,53 +3325,36 @@ def clone_manifest_sink(
         # root, a renamed mount) keeps the clone alive, where absolute
         # refs break. Source entries that are themselves absolute (a
         # clone of a clone) re-relativize against THIS dst.
-        entries = [
-            os.path.relpath(
-                f if os.path.isabs(f) else os.path.join(src_abs, f), dst_abs
-            )
-            for f in state["files"]
-        ]
+        entry_of = lambda f: os.path.relpath(  # noqa: E731
+            f if os.path.isabs(f) else os.path.join(src_abs, f), dst_abs
+        )
     else:
-        entries = [os.path.join(src_abs, f) for f in state["files"]]
-    manifest = {
-        "files": entries,
-        "n_rows": None,  # not tracked outside stats; readers never use it
-        "fields": schema.fieldNames() if schema is not None else sorted(
-            {f for m in state["metas"] for f in (m.get("fields") or [])}
-        ),
-        "format": fmt,
-        "mode": "overwrite",
-        "ts": time.time(),
-        "cloned_from": {"path": src_abs, "version": state["version"],
-                        "deep": deep, "relative": relative},
-    }
-    if schema is not None:
-        manifest["schema_json"] = schema.json()
-    if state["file_stats"]:
-        # re-key the stats to the clone's entry names so pruning keeps
-        # working against the cloned references
-        old = state["file_stats"]
-        if deep:
-            key_of = os.path.basename
-        elif relative:
-            key_of = lambda f: os.path.relpath(  # noqa: E731
-                f if os.path.isabs(f) else os.path.join(src_abs, f), dst_abs
+        entry_of = lambda f: os.path.join(src_abs, f)  # noqa: E731
+    entries = [entry_of(f) for f in state["files"]]
+    old = state["file_stats"]
+    manifest = _base_manifest(
+        state, entries,
+        {entry_of(f): old[f] for f in state["files"] if f in old},
+        cloned_from={"path": src_abs, "version": state["version"],
+                     "deep": deep, "relative": relative},
+    )
+    os.makedirs(dst, exist_ok=True)
+    if deep:
+        import shutil
+
+        for f in state["files"]:
+            shutil.copy2(
+                os.path.join(src_abs, f), os.path.join(dst, os.path.basename(f))
             )
-        else:
-            key_of = lambda f: os.path.join(src_abs, f)  # noqa: E731
-        manifest["file_stats"] = {
-            key_of(f): old[f] for f in state["files"] if f in old
-        }
-    wrote_marker = False
     if state.get("mapping"):
-        manifest["column_mapping"] = state["mapping"]
         with open(os.path.join(dst, _COLMAP_MARKER), "w") as f:
             f.write("1")
-        wrote_marker = True
     try:
-        _publish_exclusive(dst, f"{_V_PREFIX}{1:08d}", manifest)
-    except FileExistsError:
-        if wrote_marker and _resolve_state(dst).get("mapping") is None:
+        _claim_version(
+            dst, 1, manifest, "while cloning; clone into a fresh directory"
+        )
+    except ConcurrentManifestWriteError:
+        if state.get("mapping") and _resolve_state(dst).get("mapping") is None:
             # lost the creation race to a winner WITHOUT a mapping: our
             # advisory marker would tax every future append with a log
             # resolve for nothing — clean it up (the marker is purely
@@ -3481,10 +3363,7 @@ def clone_manifest_sink(
                 os.remove(os.path.join(dst, _COLMAP_MARKER))
             except FileNotFoundError:
                 pass
-        raise ConcurrentManifestWriteError(
-            f"version 1 in {dst} was claimed by a concurrent writer while "
-            "cloning; clone into a fresh directory"
-        ) from None
+        raise
     _write_hint(dst, "batch", 1, None)
     return {
         "version": 1,
@@ -3743,8 +3622,6 @@ def manifest_history(spark: SparkSession, path: str) -> DataFrame:
                 float(ts) if ts is not None else None,
             )
         )
-    # commit_ts is wall-clock time.time() — never NaN, so the double
-    # column may ride the LocalRelation path
     return local_relation_df(
         spark,
         rows,
@@ -3753,7 +3630,6 @@ def manifest_history(spark: SparkSession, path: str) -> DataFrame:
             "n_rows long, n_files int, n_removed int, fields_csv string, "
             "format string, is_compaction boolean, commit_ts double"
         ),
-        nan_safe_floats=True,
     )
 
 

@@ -488,6 +488,7 @@ def drain_interval_join_with_sentinel_flush(
     # two generations) where one suffices.
     import shutil as _shutil
     import tempfile as _tempfile
+    import uuid as _uuid
 
     stage_dir = _tempfile.mkdtemp(prefix="sentinel-stage-")
     gens = spark.range(1).select(
@@ -513,6 +514,9 @@ def drain_interval_join_with_sentinel_flush(
     gens.coalesce(1).write.partitionBy("__gen").mode("overwrite").parquet(
         stage_dir
     )
+    # one token per drain: a later drain over the same inputs lands NEW
+    # sentinel files instead of overwriting ones a stream already ingested
+    token = _uuid.uuid4().hex
     try:
         for k in range(len(list(zip(sentinel_ids, sentinel_days)))):
             (part,) = _glob.glob(
@@ -520,7 +524,7 @@ def drain_interval_join_with_sentinel_flush(
             )
             stamp = stamp_base + 10.0 * (k + 1)
             for d in (left_in, right_in):
-                dst = os.path.join(d, f"sentinel-gen{k}.parquet")
+                dst = os.path.join(d, f"sentinel-gen{k}-{token}.parquet")
                 _shutil.copyfile(part, dst)
                 os.utime(dst, (stamp, stamp))
     finally:

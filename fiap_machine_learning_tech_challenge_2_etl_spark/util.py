@@ -106,81 +106,43 @@ def spread(df: DataFrame, by: str | None = None) -> DataFrame:
     return df.repartition(target, by) if by is not None else df.repartition(target)
 
 
-# "Repartition 32, true" (round robin) / "RepartitionByExpression [c], 32"
+# "Repartition 32, true" (round robin) / "RepartitionByExpression [c], 32".
+# coalesce(N) prints as "Repartition N, false" and never adds partitions,
+# so it must not count as a fan-out.
 _REPARTITION_N = re.compile(
-    r"Repartition (\d+), |RepartitionByExpression \[[^\]]*\], (\d+)"
+    r"Repartition (\d+), true|RepartitionByExpression \[[^\]]*\], (\d+)"
 )
 
 
-# pandas-safe field types for local_relation_df: types whose Python ->
-# pandas -> Arrow round trip is value-faithful (EXACT simpleString match —
-# a prefix test would let "interval" ride in on "int"). Floating point is
-# EXCLUDED by default: pandas cannot distinguish NaN from NULL in a float
-# column, so a collected NaN would silently become NULL through the Arrow
-# conversion (verified live in this container). Nested/binary/decimal
-# types take the pickle path for the same "exact by construction" reason.
-_LOCAL_REL_SAFE_TYPES = frozenset(
-    {
-        "tinyint",
-        "smallint",
-        "int",
-        "bigint",
-        "string",
-        "boolean",
-        "date",
-        "timestamp",
-        "timestamp_ntz",
-    }
-)
-
-
-def local_relation_df(spark, rows, schema, nan_safe_floats: bool = False) -> DataFrame:
-    """Build a small literal DataFrame as a JVM ``LocalRelation`` when the
-    types allow it, else fall back to ``spark.createDataFrame(rows, ...)``.
+def local_relation_df(spark, rows, schema) -> DataFrame:
+    """Build a small literal DataFrame as a JVM ``LocalRelation``.
 
     ``spark.createDataFrame(list_of_rows)`` plans as a ``LogicalRDD`` over
     a pickled ``ParallelCollectionRDD``: every ACTION that evaluates the
-    frame round-trips a Python worker to unpickle the rows (measured
-    ~0.3-0.5 s per action warm, ~2 s cold on this box) — pure guide-§4
-    boundary tax for data the driver already holds. The pandas path plans
-    as a ``LocalRelation``: rows are converted driver-side via Arrow once,
-    tasks never touch Python. Used for the <=128-row literal frames on the
-    merge/report hot paths; the declared ``schema`` (a StructType or DDL
-    string accepted by createDataFrame) pins the result schema either way,
-    so callers see identical frames — only the physical plan differs.
+    frame starts a Python worker to unpickle rows the driver already
+    holds. Here the rows become a ``pyarrow.Table`` typed by Spark's own
+    Arrow mapping of ``schema`` (a StructType or DDL string), which plans
+    as a ``LocalRelation``: tasks never touch Python. Used for the
+    <=128-row literal frames on the merge/report hot paths.
 
-    ``nan_safe_floats=True`` lets float/double columns take the
-    LocalRelation path too — callers assert their float values are never
-    NaN (e.g. wall-clock timestamps), which is the one value the pandas
-    conversion cannot carry faithfully.
+    Exact for every type: the Arrow arrays are built column by column from
+    Python values, never through pandas, so a NULL beside a 64-bit integer
+    stays an exact long and NaN stays apart from NULL. Values first pass
+    through ``StructType.toInternal``, Spark's own Python-to-internal rule,
+    so a naive ``datetime`` in a ``timestamp`` column means process-local
+    wall time exactly as ``createDataFrame(rows)`` reads it (pyarrow alone
+    would read it as UTC).
     """
-    from pyspark.sql.types import StructType
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
 
-    if isinstance(schema, StructType):
-        names = schema.fieldNames()
-        simple = [f.dataType.simpleString() for f in schema.fields]
-    else:
-        parsed = T_struct_from_ddl(schema)
-        names = parsed.fieldNames()
-        simple = [f.dataType.simpleString() for f in parsed.fields]
-    safe = _LOCAL_REL_SAFE_TYPES
-    if nan_safe_floats:
-        safe = safe | {"float", "double"}
-    if all(s in safe for s in simple):
-        try:
-            import pandas as pd
-
-            pdf = pd.DataFrame.from_records(list(rows), columns=names)
-            return spark.createDataFrame(pdf, schema)
-        except Exception:
-            pass  # fall through to the exact pickle path
-    return spark.createDataFrame(list(rows), schema)
-
-
-def T_struct_from_ddl(ddl: str):
-    """Parse a DDL schema string to StructType (shared by
-    local_relation_df; kept tiny to avoid importing pyspark.sql.types at
-    module import for the common StructType-argument case)."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    return _parse_datatype_string(ddl)
+    if not isinstance(schema, StructType):
+        schema = DataType.fromDDL(schema)
+    aschema = to_arrow_schema(schema)
+    # rows -> columns; zero rows still need one (empty) column per field
+    cols = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(aschema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, aschema)], schema=aschema
+    )
+    return spark.createDataFrame(table, schema)

@@ -1095,6 +1095,49 @@ def test_drain_sentinel_flush_guards(spark, tmp_path):
         spark.conf.set(conf, "true")
 
 
+def test_drain_sentinel_files_unique_per_drain(spark, tmp_path):
+    """Each drain lands its OWN sentinel files: a second drain over the
+    same input directories (fresh checkpoint) must not overwrite the
+    sentinel files the first drain's stream already ingested."""
+    import datetime
+    import glob
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.streaming.incremental import (
+        drain_interval_join_with_sentinel_flush,
+        stream_stream_interval_join,
+    )
+
+    lin, rin = str(tmp_path / "l"), str(tmp_path / "r")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "event_id long, user_id long, event_type string, ts_s string"
+    ).select(
+        "event_id", F.col("ts_s").cast("timestamp").alias("ts"), "user_id",
+        "event_type",
+    )
+    mk([(100, 1, "click", "2024-01-01 10:00:00")]).coalesce(1).write.parquet(lin)
+    mk([(10, 1, "view", "2024-01-01 09:30:00")]).coalesce(1).write.parquet(rin)
+    schema = spark.read.parquet(lin).schema
+
+    def build_join(left, right):
+        return stream_stream_interval_join(
+            left, right, key="user_id", max_delay="1 hour",
+            watermark="1 hour", how="left_outer",
+        ).select(F.col("event_id").alias("click_id"), "user_id")
+
+    for i in range(2):
+        drain_interval_join_with_sentinel_flush(
+            spark, lin, rin, str(tmp_path / f"out{i}"),
+            str(tmp_path / f"ck{i}"), schema,
+            datetime.datetime(2024, 1, 1, 10), build_join,
+        )
+        got = spark.read.parquet(str(tmp_path / f"out{i}"))
+        assert [r.click_id for r in got.filter("user_id = 1").collect()] == [100]
+    for d in (lin, rin):
+        names = glob.glob(os.path.join(d, "sentinel-gen*.parquet"))
+        # two generations per drain, two drains, no file reused
+        assert len(names) == 4, names
+
+
 def test_stream_interval_join_validation(spark):
     """Invalid ``how`` and malformed interval bodies fail eagerly at the
     call site with the parameter name, not at analysis time with a

@@ -1629,6 +1629,55 @@ def test_rmw_retry_livelock_guard(spark, tmp_path, monkeypatch):
         delete_from_manifest_sink(spark, d, "id = 3")
 
 
+def test_point_merge_plans_stay_native(spark, tmp_path, monkeypatch):
+    """Plan pin for a point merge on a table with a ``double`` column:
+    the touched-file probe pushes ``In(id, ...)`` into the parquet scan
+    with no join, and the staged rewrite frame reads only the touched
+    files plus a literal ``LocalRelation`` — no pickled ``LogicalRDD``
+    leaf that would start a Python worker inside the write job."""
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    spark.range(0, 10).select(
+        "id", (F.col("id") / 4).alias("price")
+    ).repartition(1).write.format("manifestsink").option("path", d).option(
+        "format", "parquet"
+    ).option("statsColumns", "id").mode("append").save()
+    probes, staged = [], []
+    frame_cls = type(spark.range(1))
+    orig_collect = frame_cls.collect
+
+    def spy_collect(self):
+        if self.columns == ["__src"]:
+            probes.append(self)
+        return orig_collect(self)
+
+    orig_publish = pysink._publish_replace
+
+    def spy_publish(df, *a, **k):
+        staged.append(df)
+        return orig_publish(df, *a, **k)
+
+    monkeypatch.setattr(frame_cls, "collect", spy_collect)
+    monkeypatch.setattr(pysink, "_publish_replace", spy_publish)
+    updates = spark.createDataFrame(
+        [(3, float("nan")), (50, 1.5)], "id long, price double"
+    )
+    res = merge_into_manifest_sink(spark, d, updates, ["id"])
+    assert len(res["rewritten_files"]) == 1
+    (probe,) = probes
+    qe = probe._jdf.queryExecution()
+    assert "Join" not in qe.optimizedPlan().toString()
+    scan = qe.sparkPlan().toString()
+    assert "In(id, [3,50])" in scan, scan
+    (rewrite,) = staged
+    tree = rewrite._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in tree, tree
+    assert "LocalRelation" in tree, tree
+    got = {r.id: r.price for r in read_manifest_sink(spark, d).collect()}
+    assert got[50] == 1.5 and got[3] != got[3]  # NaN stays NaN, not NULL
+    assert len(got) == 11
+
+
 @pytest.mark.slow
 def test_disjoint_merge_race_multiprocess(tmp_path):
     """TRUE multi-process leg (smaller twin of the stress tool's): two

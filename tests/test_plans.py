@@ -899,3 +899,21 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_spread_repartitions_coalesce_lineage(spark):
+    """``spread()`` skips only when an upstream round-robin or hash
+    repartition already fans the lineage out. ``coalesce(64)`` prints as
+    ``Repartition 64, false`` and never adds partitions, so it must not
+    count: the stage after it would stay as narrow as its input."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.util import spread
+
+    target = spark.sparkContext.defaultParallelism
+    wide = max(64, target)
+    fanned = spark.range(100).repartition(wide)
+    assert spread(fanned) is fanned
+    coalesced = spark.range(100).coalesce(wide)
+    out = spread(coalesced)
+    assert out is not coalesced
+    tree = out._jdf.queryExecution().logical().treeString()
+    assert tree.startswith(f"Repartition {target}, true"), tree

@@ -4,6 +4,8 @@ example counts are kept small."""
 
 from __future__ import annotations
 
+import datetime
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -1323,3 +1325,98 @@ def test_bloom_never_false_negative(stored, probe):
         # no assertion on the answer (false positives are legal) — but
         # the probe must at least be computable for every supported type
         assert _bloom_key(probe) is not None
+
+
+# ------------------------------------------------- exact literal frames
+
+_LITERAL_DDL = (
+    "b bigint, i int, s smallint, t tinyint, d double, f float, "
+    "dec decimal(20,2), str string, bo boolean, dt date, ts timestamp, "
+    "tn timestamp_ntz, bin binary, arr array<bigint>, "
+    "m map<string,double>, st struct<x:bigint,y:timestamp>"
+)
+_I64 = st.one_of(
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    st.sampled_from([-(2**63), 2**63 - 1, 2**53 + 1, -(2**53) - 1, 0]),
+)
+_F64 = st.floats(allow_nan=True, allow_infinity=True)
+_TEXT = st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)
+_NAIVE = st.datetimes(
+    min_value=datetime.datetime(1902, 1, 1),
+    max_value=datetime.datetime(2200, 12, 31),
+)
+_LITERAL_ROW = st.tuples(
+    *[
+        st.none() | s
+        for s in (
+            _I64,
+            st.integers(min_value=-(2**31), max_value=2**31 - 1),
+            st.integers(min_value=-(2**15), max_value=2**15 - 1),
+            st.integers(min_value=-128, max_value=127),
+            _F64,
+            st.floats(width=32),
+            st.decimals(
+                min_value=-(10**18) + 1, max_value=10**18 - 1, places=2,
+                allow_nan=False, allow_infinity=False,
+            ),
+            _TEXT,
+            st.booleans(),
+            st.dates(
+                min_value=datetime.date(1, 1, 1),
+                max_value=datetime.date(9999, 12, 31),
+            ),
+            _NAIVE,
+            _NAIVE,
+            st.binary(max_size=6),
+            st.lists(st.none() | _I64, max_size=3),
+            st.dictionaries(_TEXT, st.none() | _F64, max_size=3),
+            st.tuples(st.none() | _I64, st.none() | _NAIVE),
+        )
+    ]
+)
+
+
+def _canon(v):
+    """Comparable form of a collected value: floats by repr (NaN equals
+    NaN, -0.0 differs from 0.0), maps as sorted items."""
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, dict):
+        return sorted((_canon(k), _canon(x)) for k, x in v.items())
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v]
+    return v
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(_LITERAL_ROW, max_size=6))
+def test_local_relation_df_matches_create_dataframe(spark, rows):
+    """``local_relation_df`` (Arrow -> LocalRelation) collects exactly
+    what ``spark.createDataFrame(rows, schema)`` (pickled rows) does,
+    for every literal type: NULL beside 64-bit extremes, NaN apart from
+    NULL, +-inf, decimals, nested arrays/maps/structs, binary, and naive
+    timestamps read as process-local wall time under a non-UTC ``TZ``.
+    And it plans as a ``LocalRelation``, never a Python RDD."""
+    import os
+    import time
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.util import (
+        local_relation_df,
+    )
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Sao_Paulo"
+    time.tzset()
+    try:
+        fast = local_relation_df(spark, rows, _LITERAL_DDL)
+        slow = spark.createDataFrame(rows, _LITERAL_DDL)
+        assert fast.schema == slow.schema
+        assert _canon(fast.collect()) == _canon(slow.collect())
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    plan = fast._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()

@@ -51,12 +51,13 @@ two-phase shape as Hadoop's FileOutputCommitter and table formats'
 snapshot commit):
 
 1. Each TASK stages its partition to a uniquely-named data file
-   (``part-<partition>-<uuid>.jsonl`` or ``.parquet`` with
-   ``option("format", "parquet")``) and returns the file name in its
-   ``WriterCommitMessage`` — executor-side, no coordination. A task that
-   fails MID-write removes its own in-progress file before re-raising,
-   so task-level failure leaves no staging garbage even though no commit
-   message is ever produced for it.
+   (``part-<partition>-<write token><attempt uuid>.jsonl`` or
+   ``.parquet`` with ``option("format", "parquet")``) and returns the
+   file name in its ``WriterCommitMessage`` — executor-side, no
+   coordination. A task that fails MID-write removes its own
+   in-progress file before re-raising, so task-level failure leaves no
+   staging garbage even though no commit message is ever produced for
+   it.
 2. The DRIVER's ``commit(messages)`` publishes ONE immutable manifest
    ``_MANIFEST.v<n>`` listing exactly the staged files of SUCCESSFUL
    tasks. The version number is CLAIMED atomically (``os.link`` of a
@@ -989,7 +990,16 @@ class ManifestSinkWriter(DataSourceArrowWriter):
     writes whole batches, removing the per-row Python loop that
     dominated every manifest write task (optimization guide §4.1-4.2 —
     same staged bytes, same commit protocol, ~5-10x less Python time
-    per staged row)."""
+    per staged row).
+
+    Two routes drive the same ``write`` and ``commit``: a user's
+    ``df.write.format("manifestsink")`` (and the streaming sink) go
+    through :class:`ManifestSinkDataSource`, where Spark builds the
+    writer and commits it in Python planner processes; the
+    copy-on-write commits (MERGE, DELETE, range DELETE) and OPTIMIZE
+    build it in the driver and run it through :func:`_stage_and_commit`
+    — the same staging, stats, blooms, claim and checkpoints, without a
+    fresh Python process per save."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         opts = {str(k).lower(): v for k, v in dict(options).items()}
@@ -1000,6 +1010,10 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         self.schema = schema
         self.fields = schema.fieldNames()
         self.overwrite = overwrite
+        # one token per write job, in every name its tasks stage: a
+        # failed job's staged files are found by it (the task attempt's
+        # own uuid half keeps names unique)
+        self._token = uuid.uuid4().hex[:16]
         # r15 column mapping: when the table carries one (presence
         # marker, authoritative state from the log), APPEND-family
         # writes arrive with LOGICAL column names and stage under the
@@ -1025,34 +1039,11 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # named columns, computed DURING staging (one compare per row per
         # column — zero cost unless opted in) and published in the commit
         # manifest, so readers can prune whole files from metadata alone
-        self.stats_columns = [
-            c.strip()
-            for c in str(opts.get("statscolumns", "")).split(",")
-            if c.strip()
-        ]
-        if self.mapping:
-            # stats/bloom entries are keyed by PHYSICAL name (immutable
-            # across renames — pruning stays correct); accept logical
-            # names in the option and translate
-            _cm = self.mapping.get("cols", {})
-            self.stats_columns = [_cm.get(c, c) for c in self.stats_columns]
-        unknown = [c for c in self.stats_columns if c not in self.fields]
-        if unknown:
-            raise ValueError(
-                f"statsColumns {unknown} not in the write schema {self.fields}"
-            )
-        # validate stats types UP FRONT (init runs before any task stages
-        # anything): a stats value json.dump can't carry would otherwise
-        # fail the job at commit(), after all the work ran
-        for f in self.schema.fields:
-            if f.name in self.stats_columns:
-                t = f.dataType.simpleString()
-                if not t.startswith(_STATS_OK_PREFIXES):
-                    raise ValueError(
-                        f"statsColumns column {f.name!r} has type {t}: min/max "
-                        "skipping supports numeric/string/boolean/date/"
-                        "timestamp/decimal columns only"
-                    )
+        self.stats_columns = self._tier_columns(
+            opts, "statsColumns", lambda t: t.startswith(_STATS_OK_PREFIXES),
+            "min/max skipping supports numeric/string/boolean/date/"
+            "timestamp/decimal columns only",
+        )
         # bloom-filter skipping (the Delta/Parquet bloom idea at MANIFEST
         # level): per-file blooms over the named columns let point
         # predicates prune files whose [min, max] admits the key but
@@ -1061,30 +1052,12 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # on columns the table is NOT clustered by. Equality-only, int/
         # string/boolean columns; files above the distinct-count cap
         # record no bloom (superset contract, stated at prune).
-        self.bloom_columns = [
-            c.strip()
-            for c in str(opts.get("bloomfiltercolumns", "")).split(",")
-            if c.strip()
-        ]
-        if self.mapping:
-            _cm = self.mapping.get("cols", {})
-            self.bloom_columns = [_cm.get(c, c) for c in self.bloom_columns]
-        unknown_b = [c for c in self.bloom_columns if c not in self.fields]
-        if unknown_b:
-            raise ValueError(
-                f"bloomFilterColumns {unknown_b} not in the write schema "
-                f"{self.fields}"
-            )
-        for f in self.schema.fields:
-            if f.name in self.bloom_columns:
-                t = f.dataType.simpleString()
-                if t not in ("bigint", "int", "smallint", "tinyint",
-                             "string", "boolean"):
-                    raise ValueError(
-                        f"bloomFilterColumns column {f.name!r} has type {t}: "
-                        "bloom skipping supports integer/string/boolean "
-                        "columns (equality point lookups) only"
-                    )
+        self.bloom_columns = self._tier_columns(
+            opts, "bloomFilterColumns",
+            lambda t: t in ("bigint", "int", "smallint", "tinyint", "string", "boolean"),
+            "bloom skipping supports integer/string/boolean columns "
+            "(equality point lookups) only",
+        )
         # r15 partition-values tier (Hive-style partition columns in
         # the MANIFEST): .option("partitionColumns", "a,b") records, per
         # staged file, the single EXACT value each named column holds —
@@ -1094,31 +1067,11 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # on data columns may be arbitrarily wide; an all-null column
         # records the all-null form (Hive's default partition), prunable
         # by IS [NOT] NULL.
-        self.partition_columns = [
-            c.strip()
-            for c in str(opts.get("partitioncolumns", "")).split(",")
-            if c.strip()
-        ]
-        if self.mapping:
-            _cm = self.mapping.get("cols", {})
-            self.partition_columns = [
-                _cm.get(c, c) for c in self.partition_columns
-            ]
-        unknown_p = [c for c in self.partition_columns if c not in self.fields]
-        if unknown_p:
-            raise ValueError(
-                f"partitionColumns {unknown_p} not in the write schema "
-                f"{self.fields}"
-            )
-        for f in self.schema.fields:
-            if f.name in self.partition_columns:
-                t = f.dataType.simpleString()
-                if not t.startswith(_STATS_OK_PREFIXES):
-                    raise ValueError(
-                        f"partitionColumns column {f.name!r} has type {t}: "
-                        "partition values support numeric/string/boolean/"
-                        "date/timestamp/decimal columns only"
-                    )
+        self.partition_columns = self._tier_columns(
+            opts, "partitionColumns", lambda t: t.startswith(_STATS_OK_PREFIXES),
+            "partition values support numeric/string/boolean/date/"
+            "timestamp/decimal columns only",
+        )
         # r14 copy-on-write: .option("replacedFiles", json.dumps([...]))
         # turns this append into a REPLACE commit — the manifest removes
         # exactly those files from the running snapshot before adding the
@@ -1168,6 +1121,27 @@ class ManifestSinkWriter(DataSourceArrowWriter):
                 "legacy bare _MANIFEST"
             )
 
+    def _tier_columns(self, opts: dict, option: str, type_ok, supports: str) -> list:
+        """Parse one skipping tier's column option. Entries are keyed by
+        PHYSICAL name (immutable across renames — pruning stays
+        correct), so logical names translate through the mapping. Names
+        and types are validated UP FRONT (init runs before any task
+        stages anything): a value json.dump can't carry would otherwise
+        fail the job at commit(), after all the work ran."""
+        cols = [c.strip() for c in str(opts.get(option.lower(), "")).split(",")]
+        cols = [c for c in cols if c]
+        if self.mapping:
+            renamed = self.mapping.get("cols", {})
+            cols = [renamed.get(c, c) for c in cols]
+        unknown = [c for c in cols if c not in self.fields]
+        if unknown:
+            raise ValueError(f"{option} {unknown} not in the write schema {self.fields}")
+        for f in self.schema.fields:
+            t = f.dataType.simpleString()
+            if f.name in cols and not type_ok(t):
+                raise ValueError(f"{option} column {f.name!r} has type {t}: {supports}")
+        return cols
+
     # -- executor side ------------------------------------------------
     def write(self, iterator) -> _StagedFile:
         """Consume the task's Arrow RecordBatches (the
@@ -1177,7 +1151,7 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.{self.format}"
+        name = f"part-{pid:05d}-{self._token}{uuid.uuid4().hex[:16]}.{self.format}"
         os.makedirs(self.path, exist_ok=True)
         staged = os.path.join(self.path, name)
         obs = (
@@ -2289,8 +2263,8 @@ def optimize_manifest_sink(
     :class:`ConcurrentManifestWriteError` instead of being silently
     superseded (its rows would have vanished from the latest snapshot).
     Callers retry by re-running optimize on the new snapshot. Skipping
-    stats survive: the rewrite re-records ``statsColumns`` derived from
-    the union of the resolved snapshot's stats keys (ADVICE fix).
+    stats survive: the rewrite re-records the snapshot's min/max and
+    bloom tiers (:func:`_rewrite_tiers`).
 
     ``cluster_by`` (r14) is OPTIMIZE's clustered variant (Delta's
     ``ZORDER BY`` role for the 1-D/lexicographic case): the rewrite
@@ -2309,17 +2283,13 @@ def optimize_manifest_sink(
     base_version = state["version"]
     fmts = {m.get("format", "jsonl") for m in state["metas"]}
     fmt = fmts.pop() if len(fmts) == 1 else "parquet"
-    stats_cols = sorted({c for st in state["file_stats"].values() for c in st})
-    if state.get("mapping"):
-        # OPTIMIZE materializes the mapping: it reads the LOGICAL view
-        # and overwrites (which resets the mapping), so the rewrite's
-        # stats columns are the logical names of the surviving physical
-        # stats keys (dropped physicals simply fall away)
-        _cm, _dropped = _mapping_parts(state["mapping"])
-        _inv = {pn: ln for ln, pn in _cm.items()}
-        stats_cols = sorted(
-            _inv.get(c, c) for c in stats_cols if c not in _dropped
-        )
+    # OPTIMIZE materializes the mapping: it reads the LOGICAL view and
+    # overwrites (which resets the mapping), so the rewrite's tiers are
+    # the logical names of the surviving physical keys
+    inv = {pn: ln for ln, pn in _mapping_parts(state.get("mapping"))[0].items()}
+    stats_cols, bloom_cols = (
+        sorted(inv.get(c, c) for c in tier) for tier in _rewrite_tiers(state)
+    )
     snapshot = read_manifest_sink(spark, path, version=base_version)
     if cluster_by:
         missing = [c for c in cluster_by if c not in snapshot.columns]
@@ -2331,9 +2301,11 @@ def optimize_manifest_sink(
         stats_cols = sorted(set(stats_cols) | set(cluster_by))
     else:
         shaped = snapshot.repartition(target_files)
-    _staged_writer(shaped, path, fmt, base_version + 1, stats_cols).mode(
-        "overwrite"
-    ).save()
+    _stage_and_commit(
+        shaped,
+        _rewrite_options(path, fmt, base_version + 1, (stats_cols, bloom_cols)),
+        overwrite=True,
+    )
 
 
 def _basename_of_uri(uri: str) -> str:
@@ -2365,14 +2337,14 @@ def _project_logical_df(df, physical_schema, mapping):
 
 def _snapshot_for_rmw(
     path: str,
-) -> tuple[dict, str, StructType, StructType, list[str]]:
+) -> tuple[dict, str, StructType, StructType, tuple[list[str], list[str]]]:
     """Pin step of the copy-on-write skeleton (:func:`_copy_on_write`):
     pin the snapshot, pin the recorded schema (legacy no-schema logs are
     refused — a rewrite must re-stage EXACTLY the recorded types, and
-    inference can't promise that), derive the stats columns to
+    inference can't promise that), derive the skipping tiers to
     re-record. Returns ``(state, fmt, physical_schema, logical_schema,
-    stats_cols)``; the logical schema is the column-mapped view the ops
-    work in."""
+    tiers)``; the logical schema is the column-mapped view the ops work
+    in, ``tiers`` is :func:`_rewrite_tiers` of the snapshot."""
     state = _batch_state(path, "copy-on-write commits need")
     fmt, schema = _pin_read_schema(state["metas"])
     if schema is None:
@@ -2380,32 +2352,90 @@ def _snapshot_for_rmw(
             f"the log under {path} predates recorded schemas; rewrite it "
             "(optimize after one schema-recording commit) before MERGE/DELETE"
         )
-    # a DROPPED column's physical stats keys linger in old files'
-    # entries; re-recording them would name a column the rewrite's
-    # physical schema no longer carries (writer init would refuse —
-    # every merge/delete on the table would fail until OPTIMIZE)
-    dropped = set(_mapping_parts(state.get("mapping"))[1])
-    stats_cols = sorted(
-        {c for st in state["file_stats"].values() for c in st if c not in dropped}
-    )
     lschema = _snapshot_logical_schema(state["metas"], state.get("mapping"))[1]
-    return state, fmt, schema, lschema, stats_cols
+    return state, fmt, schema, lschema, _rewrite_tiers(state)
 
 
-def _staged_writer(
-    df: DataFrame, path: str, fmt: str, expected_version: int, stats_cols: list[str]
-):
-    """The manifestsink writer a read-modify-write commit stages through:
-    it claims EXACTLY ``expected_version`` and re-records ``stats_cols``."""
-    writer = (
-        df.write.format("manifestsink")
-        .option("path", path)
-        .option("format", fmt)
-        .option("expectedVersion", str(expected_version))
-    )
-    if stats_cols:
-        writer = writer.option("statsColumns", ",".join(stats_cols))
-    return writer
+def _rewrite_tiers(state: dict) -> tuple[list[str], list[str]]:
+    """The skipping tiers a rewrite of ``state``'s files re-records, as
+    the snapshot keys them: ``(statsColumns, bloomFilterColumns)``. A key
+    whose entries carry min/max, null counts or a partition value joins
+    the first (a partition value comes back as min/max: a rewrite keeps
+    no one-value-per-file layout); a key whose entries carry a bloom
+    joins the second, so a bloom-only column stays bloom-only. A DROPPED
+    column's physical keys linger in old files' entries; re-recording
+    them would name a column the rewrite's physical schema no longer
+    carries (writer init would refuse), so they fall away."""
+    dropped = set(_mapping_parts(state.get("mapping"))[1])
+    stats: set[str] = set()
+    blooms: set[str] = set()
+    for st in state["file_stats"].values():
+        for c, entry in st.items():
+            if c in dropped:
+                continue
+            if not isinstance(entry, dict) or entry.keys() & {
+                "min", "max", "nulls", "pv"
+            }:
+                stats.add(c)
+            if isinstance(entry, dict) and "bloom" in entry:
+                blooms.add(c)
+    return sorted(stats), sorted(blooms)
+
+
+def _rewrite_options(
+    path: str, fmt: str, expected_version: int, tiers: tuple[list[str], list[str]]
+) -> dict:
+    """The writer options a read-modify-write commit stages under: it
+    claims EXACTLY ``expected_version`` and re-records ``tiers``."""
+    return {
+        "path": path,
+        "format": fmt,
+        "expectedVersion": str(expected_version),
+        "statsColumns": ",".join(tiers[0]),
+        "bloomFilterColumns": ",".join(tiers[1]),
+    }
+
+
+def _stage_and_commit(df: DataFrame, options: dict, overwrite: bool) -> None:
+    """Run one :class:`ManifestSinkWriter` job from the driver process:
+    each task stages its partition with ``writer.write`` inside
+    ``mapInArrow`` and returns its pickled :class:`_StagedFile`; the
+    driver collects them and calls ``writer.commit``. Spark's own
+    DataSource write is this same ``mapInArrow``, but it also starts two
+    fresh, non-reused Python planner processes per save only to build
+    the writer and to call ``commit()`` — the copy-on-write commits skip
+    both. The abort contract is the DataSource one: a commit that raises
+    (a lost claim included) aborts its staged files before re-raising,
+    and a failed staging job sweeps what its successful tasks staged,
+    found by the write token every staged name of this job carries."""
+    import pickle
+
+    import pyarrow as pa
+
+    writer = ManifestSinkWriter(options, df.schema, overwrite)
+
+    def stage(batches):
+        msg = pickle.dumps(writer.write(batches))
+        yield pa.RecordBatch.from_arrays([pa.array([msg], pa.binary())], ["m"])
+
+    try:
+        rows = df.mapInArrow(stage, "m binary").collect()
+    except BaseException:
+        # a failed job returns no messages: its successful tasks' files
+        # are the ones carrying this write's token
+        for name in os.listdir(writer.path) if os.path.isdir(writer.path) else ():
+            if name.startswith("part-") and writer._token in name:
+                try:
+                    os.remove(os.path.join(writer.path, name))
+                except FileNotFoundError:
+                    pass
+        raise
+    messages = [pickle.loads(r.m) for r in rows]
+    try:
+        writer.commit(messages)
+    except BaseException:
+        writer.abort(messages)
+        raise
 
 
 def _publish_replace(
@@ -2414,24 +2444,11 @@ def _publish_replace(
     fmt: str,
     removed: list[str],
     expected_version: int,
-    stats_cols: list[str],
+    tiers: tuple[list[str], list[str]],
 ) -> None:
-    _staged_writer(df, path, fmt, expected_version, stats_cols).option(
-        "replacedFiles", json.dumps(sorted(removed))
-    ).mode("append").save()
-
-
-def _is_concurrent_write_error(e: BaseException) -> bool:
-    """The CAS loss surfaces directly when raised driver-side, but the
-    Spark write path raises it inside a Python worker and the driver
-    sees a wrapped exception — match both forms."""
-    if isinstance(e, ConcurrentManifestWriteError):
-        return True
-    s = str(e)
-    return (
-        "ConcurrentManifestWriteError" in s
-        or "claimed by a concurrent writer" in s
-    )
+    options = _rewrite_options(path, fmt, expected_version, tiers)
+    options["replacedFiles"] = json.dumps(sorted(removed))
+    _stage_and_commit(df, options, overwrite=False)
 
 
 def _replace_conflict_reason(
@@ -2541,7 +2558,7 @@ def _copy_on_write(
     "rewritten_files", "candidate_files", "total_files"}``."""
     from pyspark.sql import functions as F
 
-    state, fmt, schema, lschema, stats_cols = snap
+    state, fmt, schema, lschema, tiers = snap
     base_version, mapping = state["version"], state.get("mapping")
 
     def scan(files: list[str]) -> DataFrame:
@@ -2608,11 +2625,9 @@ def _copy_on_write(
     expected, attempt = base_version + 1, 0
     while True:
         try:
-            _publish_replace(new_data, path, fmt, removed, expected, stats_cols)
+            _publish_replace(new_data, path, fmt, removed, expected, tiers)
             return {**result, "version": expected}
-        except Exception as e:
-            if not _is_concurrent_write_error(e):
-                raise
+        except ConcurrentManifestWriteError:
             head = _resolve_state(path, with_stats=False)["version"]
             reason = _replace_conflict_reason(
                 path, base_version, head, set(removed), key_preds

@@ -2036,3 +2036,179 @@ def test_pyarrowless_resolve_ok_when_floor_is_a_base(spark, tmp_path, monkeypatc
     without_pa = _resolve_state(d)
     assert without_pa["files"] == with_pa["files"]
     assert without_pa["version"] == with_pa["version"]
+
+
+def _write_keyed(spark, d, **opts):
+    """Four parquet files of even ids 0..78 plus a ``code`` string
+    column: file i holds ids 20*i .. 20*i+18, so an odd id inside a
+    file's [min, max] is a key only its bloom can rule out."""
+    w = (
+        spark.range(0, 80, 2, 4)
+        .select("id", F.concat(F.lit("c"), F.col("id").cast("string")).alias("code"))
+        .write.format("manifestsink")
+        .option("path", d)
+        .option("format", "parquet")
+    )
+    for k, v in opts.items():
+        w = w.option(k, v)
+    w.mode("append").save()
+
+
+def test_rewrites_keep_bloom_tier(spark, tmp_path):
+    """A copy-on-write rewrite and an OPTIMIZE re-record the snapshot's
+    bloom tier, not only its min/max tier: every rewritten file carries
+    a bloom, a point prune on a key absent from a file whose [min, max]
+    admits it drops the file, and a bloom-only column stays bloom-only."""
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    _write_keyed(spark, d, statsColumns="id", bloomFilterColumns="id,code")
+
+    def check_tiers():
+        fstats = pysink._resolve_state(d)["file_stats"]
+        assert len(fstats) == len(_snapshot_files(d))
+        for st in fstats.values():
+            assert {"bloom", "min", "max"} <= set(st["id"])
+            assert set(st["code"]) == {"bloom"}  # bloom-only stays so
+        # 7 lies inside one file's [min, max] but no file holds it
+        assert prune_manifest_files(d, {"id": [(7, 7)]})[0] == []
+        assert prune_manifest_files(d, {"code": [("c7", "c7")]})[0] == []
+
+    res = merge_into_manifest_sink(
+        spark, d, spark.createDataFrame([(6, "x")], "id long, code string"), ["id"]
+    )
+    assert len(res["rewritten_files"]) == 1
+    check_tiers()
+    optimize_manifest_sink(spark, d, target_files=2)
+    check_tiers()
+    got = {r.id: r.code for r in read_manifest_sink(spark, d).collect()}
+    assert got == {i: ("x" if i == 6 else f"c{i}") for i in range(0, 80, 2)}
+
+
+@pytest.mark.parametrize("renamed", [False, True])
+def test_join_mode_merge_matches_model(spark, tmp_path, renamed):
+    """Merge's join mode (more than 128 update keys: a checkpointed
+    update set, semi/anti joins on the key frame) with updates, inserts
+    and WHEN MATCHED DELETE rows, on a plain table and on one whose key
+    column was renamed — compared row for row with a Python model."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
+        rename_column_manifest_sink,
+    )
+
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    spark.range(0, 400, 1, 4).selectExpr("id", "id * 10 AS val").write.format(
+        "manifestsink"
+    ).option("path", d).option("format", "parquet").option(
+        "statsColumns", "id"
+    ).option("bloomFilterColumns", "id").mode("append").save()
+    key = "id"
+    if renamed:
+        rename_column_manifest_sink(d, "id", "key")
+        key = "key"
+    model = {i: i * 10 for i in range(400)}
+    # 250 keys: 150 updates and 50 deletes spread over the table, 50
+    # inserts past its end
+    rows = []
+    for i in range(200):
+        k = i * 2
+        op = "D" if i % 4 == 0 else "U"
+        rows.append((k, -k, op))
+        if op == "D":
+            del model[k]
+        else:
+            model[k] = -k
+    for k in range(1000, 1050):
+        rows.append((k, k, "U"))
+        model[k] = k
+    updates = spark.createDataFrame(rows, f"{key} long, val long, op string")
+    res = merge_into_manifest_sink(
+        spark, d, updates, [key], delete_condition="op = 'D'"
+    )
+    assert res["version"] == res["base_version"] + 1
+    got = [tuple(r) for r in read_manifest_sink(spark, d).select(key, "val").collect()]
+    assert sorted(got) == sorted(model.items())
+
+
+def test_publish_replace_staging_failure_leaves_nothing(spark, tmp_path):
+    """A staging job that fails in one task (a Python UDF raising) makes
+    ``_publish_replace`` raise with no commit published and none of the
+    files its successful tasks staged left in the table directory."""
+    import time
+
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    _write(spark, d, 0, 5, statsColumns="id")
+    snap = pysink._snapshot_for_rmw(d)
+    before = sorted(os.listdir(d))
+
+    @F.udf("long")
+    def boom(x):
+        if x == 35:
+            time.sleep(1.0)  # the other tasks stage their files first
+            raise ValueError("staging task fails")
+        return x
+
+    frame = spark.range(0, 40, 1, 4).select(boom("id").alias("id"))
+    with pytest.raises(Exception, match="staging task fails"):
+        pysink._publish_replace(frame, d, "jsonl", [], 2, snap[4])
+    assert sorted(os.listdir(d)) == before
+    assert pysink._resolve_state(d)["version"] == 1
+    assert _ids(read_manifest_sink(spark, d)) == [0, 1, 2, 3, 4]
+
+
+def test_merge_lost_claim_aborts_its_staged_files(spark, tmp_path, monkeypatch):
+    """A merge that loses its claim to a truly conflicting winner raises
+    and removes every file it staged: the directory holds exactly what
+    it held once the winner published."""
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    _write(spark, d, 0, 5, statsColumns="id")
+    orig_snap = pysink._snapshot_for_rmw
+    after_winner = []
+
+    def race_overlapping(path):
+        snap = orig_snap(path)
+        _write(spark, d, 1, 2, statsColumns="id")  # may hold key 1
+        after_winner.append(sorted(os.listdir(d)))
+        return snap
+
+    monkeypatch.setattr(pysink, "_snapshot_for_rmw", race_overlapping)
+    with pytest.raises(ConcurrentManifestWriteError, match="cannot prove"):
+        merge_into_manifest_sink(
+            spark, d, spark.createDataFrame([(1,)], "id long"), ["id"]
+        )
+    assert sorted(os.listdir(d)) == after_winner[0]
+    assert _ids(read_manifest_sink(spark, d)) == [0, 1, 1, 2, 3, 4]
+
+
+def test_copy_on_write_commits_bypass_datasource_save(spark, tmp_path, monkeypatch):
+    """Structural pin: MERGE (point and join mode), DELETE, range DELETE
+    and OPTIMIZE stage and commit from the driver, never through
+    ``DataFrameWriter.save`` — the route that starts Python DataSource
+    planner processes for every save."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
+        delete_range_from_manifest_sink,
+    )
+
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    _write_keyed(spark, d, statsColumns="id", bloomFilterColumns="id")
+
+    def no_save(self, *a, **k):
+        raise AssertionError("DataFrameWriter.save called")
+
+    monkeypatch.setattr(DataFrameWriter, "save", no_save)
+    schema = "id long, code string"
+    merge_into_manifest_sink(
+        spark, d, spark.createDataFrame([(4, "p")], schema), ["id"]
+    )
+    join_rows = [(i, "j") for i in range(0, 300, 2)]
+    merge_into_manifest_sink(spark, d, spark.createDataFrame(join_rows, schema), ["id"])
+    delete_from_manifest_sink(spark, d, "id = 10")
+    delete_range_from_manifest_sink(spark, d, "id", 200, 239)
+    optimize_manifest_sink(spark, d, target_files=2)
+    want = {i: "j" for i in range(0, 300, 2) if i != 10 and not 200 <= i <= 239}
+    got = {r.id: r.code for r in read_manifest_sink(spark, d).collect()}
+    assert got == want

@@ -7,6 +7,17 @@ coalescing and skew-join handling, Arrow for any pandas interchange, and a
 shuffle-partition count sized to the local core count instead of Spark's
 default 200 (right for local testing; on a real cluster AQE re-sizes
 post-shuffle partitions at runtime anyway).
+
+Python workers start from the package's own daemon
+(``spark.python.daemon.module`` = ``worker_daemon``; ``extra_conf`` can
+override it). Spark's worker calls ``importlib.invalidate_caches()`` before
+every task, which on CPython < 3.13 re-parses ``pyspark.zip``'s directory
+for each of its ``zipimporter``s (about 0.17 s per task); the daemon re-reads
+an archive only when it changed on disk, so ``mapInArrow`` staging tasks,
+pandas UDFs and Python DataSource read tasks skip that cost. Spark starts
+its Python DataSource planner processes from its own daemon whatever this
+setting says, and a session built without ``get_session`` (a plain
+``SparkSession.builder`` one) keeps Spark's daemon too; both still pay it.
 """
 
 from __future__ import annotations
@@ -16,6 +27,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# named, not imported: the daemon runs as __main__ (python -m) in workers
+WORKER_DAEMON = f"{__package__}.worker_daemon"
 
 
 def get_session(
@@ -63,6 +76,7 @@ def get_session(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON)
     )
     if streaming:
         builder = builder.config(

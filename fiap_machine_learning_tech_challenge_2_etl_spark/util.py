@@ -93,25 +93,33 @@ def spread(df: DataFrame, by: str | None = None) -> DataFrame:
     # found corpus_clean_pipeline carrying THREE spread exchanges where
     # its docstring promised one shuffle total (guide §2.4: remove
     # shuffles outright). inputFiles() cannot see an upstream
-    # repartition, so check the logical plan for one that already fans
+    # repartition, so walk the logical plan for one that already fans
     # this lineage out to >= target partitions; smaller fixture
     # repartitions (repartition(1)/(4) file-count shaping) don't count.
     try:
-        tree = df._jdf.queryExecution().logical().treeString()
-        for m in _REPARTITION_N.finditer(tree):
-            if int(m.group(1) or m.group(2)) >= target:
-                return df
+        if _fanned_out(df._jdf.queryExecution().logical(), target):
+            return df
     except Exception:  # Connect sessions etc.: fall through to repartition
         pass
     return df.repartition(target, by) if by is not None else df.repartition(target)
 
 
-# "Repartition 32, true" (round robin) / "RepartitionByExpression [c], 32".
-# coalesce(N) prints as "Repartition N, false" and never adds partitions,
-# so it must not count as a fan-out.
-_REPARTITION_N = re.compile(
-    r"Repartition (\d+), true|RepartitionByExpression \[[^\]]*\], (\d+)"
-)
+def _fanned_out(node, target: int) -> bool:
+    """Whether the nearest repartition below ``node``, on some path, is a
+    shuffle to at least ``target`` partitions. Each path stops at its first
+    ``Repartition``/``RepartitionByExpression``: a ``coalesce(N)``
+    (``Repartition`` without shuffle) or a narrower repartition above a wide
+    one sets the partition count the next stage runs with. A
+    ``repartition(col)`` without a count is not a fan-out either: AQE may
+    coalesce it down to one partition."""
+    name = node.nodeName()
+    if name == "Repartition":
+        return node.shuffle() and node.numPartitions() >= target
+    if name == "RepartitionByExpression":
+        n = node.optNumPartitions()
+        return n.isDefined() and n.get() >= target
+    kids = node.children()
+    return any(_fanned_out(kids.apply(i), target) for i in range(kids.size()))
 
 
 def local_relation_df(spark, rows, schema) -> DataFrame:

@@ -917,3 +917,21 @@ def test_spread_repartitions_coalesce_lineage(spark):
     assert out is not coalesced
     tree = out._jdf.queryExecution().logical().treeString()
     assert tree.startswith(f"Repartition {target}, true"), tree
+
+
+def test_spread_ignores_fan_out_below_a_coalesce(spark):
+    """A wide repartition BELOW a later ``coalesce(1)`` does not fan the
+    frame out: the stage after the coalesce runs as one task, so
+    ``spread()`` must still repartition to the default parallelism."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.util import spread
+
+    target = spark.sparkContext.defaultParallelism
+    narrowed = spark.range(1000).repartition(max(64, target)).coalesce(1)
+    out = spread(narrowed)
+    assert out.rdd.getNumPartitions() == target
+    # a narrower repartition above a wide one decides the same way
+    shrunk = spark.range(1000).repartition(max(64, target)).repartition(1)
+    assert spread(shrunk).rdd.getNumPartitions() == target
+    # a fan-out above the coalesce still counts
+    refanned = narrowed.repartition(target)
+    assert spread(refanned) is refanned

@@ -101,24 +101,34 @@ def test_theta_sketch_exact_mode_set_algebra(spark):
     assert (row["u"], row["i"], row["d"]) == (1000, 200, 400)
 
 
-def test_hll_union_of_partials_equals_direct_sketch(spark):
+def test_hll_union_of_partials_keeps_direct_sketch_bound(spark):
     """The HLL mergeability invariant the hll_distinct_rollup query
-    attests: unioning per-bucket partial sketches yields the same
-    estimate as sketching the whole column directly, for any bucketing
-    (register-wise MAX is associative and order-free)."""
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 7).alias("bucket"), (F.col("id") % 1900).alias("v")
-    )
-    partial = df.groupBy("bucket").agg(F.expr("hll_sketch_agg(v, 14)").alias("sk"))
-    merged = partial.agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est")
-    ).collect()[0]["est"]
+    attests: a union of per-bucket partial sketches carries the same error
+    bound as sketching the whole column directly, for any bucketing and
+    any grouping of the union. DataSketches promises that bound, not equal
+    estimates: 7 buckets gave 1900, the same partials regrouped 1897, and
+    the direct sketch 1902."""
+    exact = 1900
+    est = "hll_sketch_estimate(hll_union_agg(sk))"
+    for buckets in (1, 3, 7, 13):
+        df = spark.range(0, 5000).select(
+            (F.col("id") % buckets).alias("bucket"), (F.col("id") % exact).alias("v")
+        )
+        partial = df.groupBy("bucket").agg(F.expr("hll_sketch_agg(v, 14)").alias("sk"))
+        merged = partial.agg(F.expr(est).alias("est")).collect()[0]["est"]
+        two_level = (
+            partial.groupBy((F.col("bucket") % 2).alias("half"))
+            .agg(F.expr("hll_union_agg(sk)").alias("sk"))
+            .agg(F.expr(est).alias("est"))
+            .collect()[0]["est"]
+        )
+        # lgK=14 relative standard error ~0.8%; observed within 0.3%
+        for got in (merged, two_level):
+            assert abs(got - exact) * 100 <= exact, (buckets, merged, two_level)
     direct = df.agg(
         F.expr("hll_sketch_estimate(hll_sketch_agg(v, 14))").alias("est")
     ).collect()[0]["est"]
-    assert merged == direct
-    # lgK=14 relative error ~0.8%; observed 1903/1900 = 0.16%
-    assert abs(merged - 1900) * 100 <= 1900
+    assert abs(direct - exact) * 100 <= exact, direct
 
 
 def test_synthdocs_arrow_path_bit_equal_to_tuple_path(spark):

@@ -371,20 +371,37 @@ class _StagedFile(WriterCommitMessage):
         self.stats = stats
 
 
-def _publish_exclusive(path: str, name: str, manifest: dict) -> None:
-    """Atomically publish an IMMUTABLE manifest: write the full content
-    to a temp file, then ``os.link`` it onto the target name — which
-    fails with FileExistsError if the name is taken, making the claim
-    exclusive AND complete-on-arrival (readers can never observe a
-    partial manifest). Raises FileExistsError for the caller to retry
-    with the next version number."""
+def _publish(path: str, name: str, write, place) -> None:
+    """Publish ``name`` complete-on-arrival: ``write(tmp)`` fills a
+    uniquely-named dot temp file, then ``place(tmp, target)`` puts it
+    in place — ``os.link`` (fails with FileExistsError if the name is
+    taken: an exclusive claim) or ``os.replace`` (last publication
+    wins). The temp file is removed whatever happens, so a failed
+    write (a full disk, an unserializable value) leaves no ``.tmp``
+    behind — vacuum never sweeps dot-files."""
     tmp = os.path.join(path, f".{name}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
     try:
-        os.link(tmp, os.path.join(path, name))
+        write(tmp)
+        place(tmp, os.path.join(path, name))
     finally:
-        os.remove(tmp)
+        if os.path.lexists(tmp):
+            os.remove(tmp)
+
+
+def _json_to(manifest: dict):
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+
+    return write
+
+
+def _publish_exclusive(path: str, name: str, manifest: dict) -> None:
+    """Atomically publish an IMMUTABLE manifest (``os.link`` claim):
+    readers can never observe a partial manifest. Raises
+    FileExistsError for the caller to retry with the next version
+    number."""
+    _publish(path, name, _json_to(manifest), os.link)
 
 
 def _claim_version(path: str, v: int, manifest: dict, doing: str) -> None:
@@ -404,10 +421,7 @@ def _publish_last_wins(path: str, name: str, manifest: dict) -> None:
     (``os.replace``) — the idempotent variant a retried streaming batch
     needs: re-running batch k republishes ``_MANIFEST-k`` and readers
     still see exactly one pointer for that batch."""
-    tmp = os.path.join(path, f".{name}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, name))
+    _publish(path, name, _json_to(manifest), os.replace)
 
 
 def _read_hint(path: str) -> dict | None:
@@ -479,6 +493,18 @@ def _scan_names(path: str) -> tuple[str | None, list, list]:
     return kind, sorted(batch or stream), sorted(ckpts)
 
 
+def _log_head(path: str) -> tuple[str | None, int, int | None]:
+    """``(kind, latest version, newest checkpoint)`` — from the hint in
+    one tiny read; only a hint-less directory pays the name scan. The
+    commit paths' family check and version claim start here."""
+    hint = _read_hint(path)
+    if hint is not None:
+        return hint.get("kind"), int(hint.get("version", 0)), hint.get("checkpoint")
+    kind, commits, ckpts = _scan_names(path)
+    newest_ckpt = ckpts[-1][0] if ckpts else None
+    return kind, (commits[-1][0] if commits else 0), newest_ckpt
+
+
 def _load(path: str, name: str) -> dict:
     with open(os.path.join(path, name)) as f:
         return json.load(f)
@@ -496,18 +522,11 @@ def _load_checkpoint(path: str, name: str, with_stats: bool = True) -> dict:
     500k-file snapshot (BENCH_NOTES r14); decoding the stats column is
     where the per-file cost lives, so only stats consumers pay it.
     ``with_stats=False`` returns ``file_stats={}`` for the checkpointed
-    prefix — callers must not prune from such a state.
-
-    The existence check precedes the pyarrow import: in a pyarrow-less
-    environment (explicitly supported — ``_publish_checkpoint`` falls
-    back to JSON on ImportError) the by-version probe must see
-    FileNotFoundError for an absent ``.parquet`` name and fall through
-    to the JSON name, not die on ImportError."""
+    prefix — callers must not prune from such a state. Bare-JSON
+    checkpoints are only ever READ: pre-r14 logs hold them. An absent
+    name raises FileNotFoundError in either format."""
     if not name.endswith(".parquet"):
         return _load(path, name)
-    full = os.path.join(path, name)
-    if not os.path.exists(full):
-        raise FileNotFoundError(full)
     import pyarrow.parquet as pq
 
     cols = None if with_stats else ["filename"]
@@ -536,28 +555,21 @@ def _load_checkpoint_by_version(path: str, v: int, with_stats: bool = True) -> d
     """Resolve-by-version used on the hint fast path: the hint records a
     checkpoint VERSION, not a name, so probe the parquet name first
     (current writers), then the bare JSON name (pre-r14 logs). Raises
-    FileNotFoundError when neither exists (expired under a stale hint).
-    ImportError (parquet checkpoint present, pyarrow absent) also falls
-    through to the JSON name — a prior writer may have had pyarrow that
-    this reader lacks, and an older JSON twin still resolves."""
+    FileNotFoundError when neither exists (expired under a stale hint)."""
     try:
         return _load_checkpoint(path, f"{_CKPT_PREFIX}{v:08d}.parquet", with_stats)
-    except (FileNotFoundError, ImportError):
+    except FileNotFoundError:
         return _load_checkpoint(path, f"{_CKPT_PREFIX}{v:08d}", with_stats)
 
 
 def _publish_checkpoint(path: str, v: int, ck: dict) -> None:
-    """Publish a checkpoint rollup with the SAME exclusive-claim contract
-    as commits (temp file + os.link). Parquet when pyarrow is available,
-    bare JSON otherwise — the two encode identical logical content, and
-    since checkpoint content is a pure function of the log prefix <= v,
-    losing the claim race to either format is a no-op."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:
-        _publish_exclusive(path, f"{_CKPT_PREFIX}{v:08d}", ck)
-        return
+    """Publish a parquet checkpoint rollup with the SAME exclusive-claim
+    contract as commits (temp file + os.link): checkpoint content is a
+    pure function of the log prefix <= v, so losing the claim race is a
+    no-op."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     fstats = ck.get("file_stats", {})
     table = pa.table(
         {
@@ -578,13 +590,10 @@ def _publish_checkpoint(path: str, v: int, ck: dict) -> None:
             )
         }
     )
-    name = f"{_CKPT_PREFIX}{v:08d}.parquet"
-    tmp = os.path.join(path, f".{name}.{uuid.uuid4().hex}.tmp")
-    pq.write_table(table, tmp)
-    try:
-        os.link(tmp, os.path.join(path, name))
-    finally:
-        os.remove(tmp)
+    _publish(
+        path, f"{_CKPT_PREFIX}{v:08d}.parquet",
+        lambda tmp: pq.write_table(table, tmp), os.link,
+    )
 
 
 def _meta_of(man: dict) -> dict:
@@ -662,102 +671,64 @@ def _resolve_state(
     consecutively, and expire only ever removes a prefix, taking its
     checkpoints with it), so the first missing name is the end of the
     log. A stale/missing hint or a pin below the hinted checkpoint falls
-    back to the full name scan."""
+    back to the full name scan (newest checkpoint at or below the pin,
+    then the commits after it by name). Both ways only pick the start
+    and the commit sequence; one replay over :func:`_apply_commit`
+    folds it."""
     hint = _read_hint(path)
+    ck = None
     if (
         hint
         and hint.get("kind") == "batch"
         and hint.get("checkpoint") is not None
         and (version is None or version >= int(hint["checkpoint"]))
     ):
-        c = int(hint["checkpoint"])
+        start = int(hint["checkpoint"])
         try:
-            ck = _load_checkpoint_by_version(path, c, with_stats)
+            ck = _load_checkpoint_by_version(path, start, with_stats)
         except FileNotFoundError:
-            ck = None  # checkpoint expired under a stale hint — slow path
-        if ck is not None:
-            files = list(ck["files"])
-            metas = list(ck.get("metas", []))
-            fstats = dict(ck.get("file_stats", {}))
-            mapping = ck.get("mapping")
-            last = c
-            v = c + 1
-            while version is None or v <= version:
-                try:
-                    man = _load(path, f"{_V_PREFIX}{v:08d}")
-                except FileNotFoundError:
-                    break
-                files, metas, fstats, mapping = _apply_commit(
-                    man, files, metas, fstats, mapping
-                )
-                last = v
-                v += 1
-            return {"kind": "batch", "files": files, "metas": metas,
-                    "file_stats": fstats, "version": last,
-                    "mapping": mapping}
-    kind, commits, ckpts = _scan_names(path)
-    files: list[str] = []
-    metas: list[dict] = []
-    fstats: dict[str, dict] = {}
-    mapping: dict | None = None
-    start_after = -1
-    last = -1
-    if kind == "batch":
+            pass  # checkpoint expired under a stale hint — name scan
+    if ck is not None:
+        kind, tail = "batch", _probe_commits(path, start + 1, version)
+    else:
+        kind, commits, ckpts = _scan_names(path)
         usable = [c for c in ckpts if version is None or c[0] <= version]
-        # newest usable checkpoint first; a parquet checkpoint this
-        # reader can't parse (pyarrow absent) falls back to the next
-        # older one (a JSON twin from a pyarrow-less writer era), and
-        # ultimately to a full log walk — which is only CORRECT if the
-        # prefix survives, so raise a diagnostic instead of replaying a
-        # truncated log into a silently-wrong snapshot
-        ck = None
-        for cv, cname in reversed(usable):
-            try:
-                ck = _load_checkpoint(path, cname, with_stats)
-            except ImportError:
-                continue
-            break
-        if (
-            usable
-            and ck is None
-            and commits
-            and commits[0][0] > 1
-            and _load(path, commits[0][1]).get("mode") != "overwrite"
-        ):
-            # expire only ever floors the log on an overwrite BASE, so a
-            # base-first log replays correctly without any checkpoint;
-            # raise only when the surviving prefix is truly deltas-on-
-            # expired-history (should be unreachable via expire, but a
-            # hand-damaged log must fail loudly, not resolve wrong)
-            raise RuntimeError(
-                f"{path}: only parquet checkpoints survive but pyarrow is "
-                "not importable, and the surviving commits are deltas on "
-                "expired history — this snapshot cannot be resolved "
-                "without pyarrow"
-            )
-        if ck is not None:
-            files = list(ck["files"])
-            metas = list(ck.get("metas", []))
-            fstats = dict(ck.get("file_stats", {}))
-            mapping = ck.get("mapping")
-            start_after = cv
-            last = cv
-    for v, name in commits:
-        if v <= start_after:
-            continue
-        if version is not None and v > version:
-            break
-        man = _load(path, name)
+        start = usable[-1][0] if kind == "batch" and usable else -1
+        if start >= 0:
+            ck = _load_checkpoint(path, usable[-1][1], with_stats)
+        tail = (
+            (v, _load(path, name)) for v, name in commits
+            if start < v and (version is None or v <= version)
+        )
+    files, metas, fstats, mapping = (
+        (list(ck["files"]), list(ck.get("metas", [])),
+         dict(ck.get("file_stats", {})), ck.get("mapping"))
+        if ck is not None else ([], [], {}, None)
+    )
+    last = start
+    for last, man in tail:
         files, metas, fstats, mapping = _apply_commit(
             man, files, metas, fstats, mapping
         )
-        last = v
     # an empty log reports version 0 ("nothing committed yet" — real
     # versions start at 1, a legacy bare manifest folds in AT 0), so a
     # CAS writer's base+1 claim on a fresh directory is v1
     return {"kind": kind, "files": files, "metas": metas,
             "file_stats": fstats, "version": max(last, 0),
             "mapping": mapping}
+
+
+def _probe_commits(path: str, v: int, version: int | None):
+    """``(version, manifest)`` from batch version ``v`` upward by
+    constructed name, up to ``version``: the first missing name is the
+    end of the dense log."""
+    while version is None or v <= version:
+        try:
+            man = _load(path, f"{_V_PREFIX}{v:08d}")
+        except FileNotFoundError:
+            return
+        yield v, man
+        v += 1
 
 
 def _arrow_py(scalar):
@@ -770,6 +741,20 @@ def _arrow_py(scalar):
     if isinstance(v, _dt.datetime) and v.tzinfo is not None:
         return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _partition_error(c: str, *two) -> ValueError:
+    """The refusal of a staged file whose ``partitionColumns`` column
+    ``c`` holds more than one value: ``two`` of them, or NULL beside
+    non-NULL rows."""
+    what = (
+        f"holds two values ({two[0]!r}, {two[1]!r})" if two
+        else "mixes NULL and non-NULL rows"
+    )
+    return ValueError(
+        f"partitionColumns column {c!r} {what} in one staged file — "
+        "repartition by the partition columns so each file holds one value"
+    )
 
 
 class _BatchStatsObserver:
@@ -799,43 +784,17 @@ class _BatchStatsObserver:
         for c in self.partition_columns:
             col = batch.column(self.idx[c])
             n_null = col.null_count
-            if n_null and n_null < len(col):
-                raise ValueError(
-                    f"partitionColumns column {c!r} mixes NULL and "
-                    "non-NULL rows in one staged file — repartition by "
-                    "the partition columns so each file holds one value"
-                )
-            if n_null == len(col):  # all-null batch
-                if c in self.pvals:
-                    raise ValueError(
-                        f"partitionColumns column {c!r} mixes NULL and "
-                        "non-NULL rows in one staged file — repartition by "
-                        "the partition columns so each file holds one value"
-                    )
+            if n_null == len(col) and c not in self.pvals:  # all-null batch
                 self.pnulls[c] += n_null
                 continue
-            if self.pnulls[c]:
-                raise ValueError(
-                    f"partitionColumns column {c!r} mixes NULL and "
-                    "non-NULL rows in one staged file — repartition by "
-                    "the partition columns so each file holds one value"
-                )
+            if n_null or self.pnulls[c]:
+                raise _partition_error(c)
             u = pc.unique(col)
             if len(u) > 1:
-                a, b = _arrow_py(u[0]), _arrow_py(u[1])
-                raise ValueError(
-                    f"partitionColumns column {c!r} holds two values "
-                    f"({a!r}, {b!r}) in one staged file — repartition by "
-                    "the partition columns so each file holds one value"
-                )
+                raise _partition_error(c, _arrow_py(u[0]), _arrow_py(u[1]))
             v = _arrow_py(u[0])
             if c in self.pvals and self.pvals[c] != v:
-                raise ValueError(
-                    f"partitionColumns column {c!r} holds two values "
-                    f"({self.pvals[c]!r}, {v!r}) in one staged file — "
-                    "repartition by the partition columns so each file "
-                    "holds one value"
-                )
+                raise _partition_error(c, self.pvals[c], v)
             self.pvals[c] = v
         for c in self.stats_columns:
             col = batch.column(self.idx[c])
@@ -999,7 +958,9 @@ class ManifestSinkWriter(DataSourceArrowWriter):
     copy-on-write commits (MERGE, DELETE, range DELETE) and OPTIMIZE
     build it in the driver and run it through :func:`_stage_and_commit`
     — the same staging, stats, blooms, claim and checkpoints, without a
-    fresh Python process per save."""
+    fresh Python process per save. Only that route publishes a REPLACE
+    commit: it sets ``replaced_files`` on the writer it built (no
+    option does)."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         opts = {str(k).lower(): v for k, v in dict(options).items()}
@@ -1072,39 +1033,10 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             "partition values support numeric/string/boolean/date/"
             "timestamp/decimal columns only",
         )
-        # r14 copy-on-write: .option("replacedFiles", json.dumps([...]))
-        # turns this append into a REPLACE commit — the manifest removes
-        # exactly those files from the running snapshot before adding the
-        # staged ones. This is the primitive MERGE/DELETE publish through
-        # (merge_into/delete_from_manifest_sink build on it).
+        # r14 copy-on-write: the snapshot entries a REPLACE commit removes
+        # before adding the staged files — set only by the driver-side
+        # _stage_and_commit of MERGE/DELETE (None: append or overwrite)
         self.replaced_files: list[str] | None = None
-        if "replacedfiles" in opts:
-            if overwrite:
-                raise ValueError(
-                    "replacedFiles is a copy-on-write DELTA commit; it cannot "
-                    "be combined with mode('overwrite') — an overwrite already "
-                    "supersedes every file"
-                )
-            rf = json.loads(opts["replacedfiles"])
-            if not isinstance(rf, list) or not all(isinstance(x, str) for x in rf):
-                raise ValueError("replacedFiles must be a JSON list of file names")
-            # entries are staged basenames, or ABSOLUTE / dst-RELATIVE
-            # references when replacing a shallow CLONE's external files
-            # (relative=True clones store "../src/f" refs); log-file
-            # names stay refused. replacedFiles only removes NAMES from
-            # metadata — it never unlinks anything — so a stray path is
-            # inert, not a traversal
-            bad = [
-                x for x in rf
-                if not os.path.basename(x)
-                or os.path.basename(x).startswith(("_", "."))
-            ]
-            if bad:
-                raise ValueError(
-                    f"replacedFiles must name staged data files (basenames "
-                    f"or clone references), got {bad}"
-                )
-            self.replaced_files = rf
         # r14 optimistic concurrency: .option("expectedVersion", k+1) claims
         # EXACTLY that version and raises ConcurrentManifestWriteError if it
         # is taken — the compare-and-swap a read-modify-write commit (merge/
@@ -1165,10 +1097,7 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             else None
         )
         try:
-            if self.format == "parquet":
-                n = self._stage_parquet(staged, iterator, obs)
-            else:
-                n = self._stage_jsonl(staged, iterator, obs)
+            n = self._stage(staged, iterator, obs)
         except BaseException:
             # a task that dies mid-write never returns a commit message,
             # so abort() can't see its file — clean up our own staging
@@ -1205,49 +1134,51 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             batch = batch.cast(aschema)
         return batch
 
-    def _stage_jsonl(self, staged: str, iterator, obs) -> int:
-        """NDJSON staging with Python cost O(batches), not O(rows): the
-        common all-int/string/bool batch is rendered and assembled
-        entirely inside ``pyarrow.compute`` (r16 — the per-row
-        ``to_pylist()`` + ``json.dump`` walk was the last row-at-a-time
-        loop on the write path); batches the columnar encoder cannot
+    def _stage(self, staged: str, iterator, obs) -> int:
+        """Stream the task's batches into one staged file, memory
+        O(batch) regardless of partition size. Parquet: the Arrow schema
+        is derived from the WRITER's Spark schema, so the staged footer
+        carries real types — what lets readers pin the schema instead of
+        inferring it. NDJSON: Python cost O(batches), not O(rows) — the
+        common all-int/string/bool batch is rendered inside
+        ``pyarrow.compute`` (r16); batches the columnar encoder cannot
         prove safe fall back to a per-row encoder producing lines that
-        parse to identical records."""
+        parse to identical records (:func:`_jsonl_batch_bytes`)."""
         aschema = self._arrow_schema()
+        if self.format == "parquet":
+            import pyarrow.parquet as pq
+
+            out = pq.ParquetWriter(staged, aschema)
+            put = out.write_batch
+        else:
+            out = open(staged, "wb")
+            put = lambda batch: out.write(_jsonl_batch_bytes(batch))  # noqa: E731
         n = 0
-        with open(staged, "wb") as f:
+        with out:
             for batch in iterator:
                 batch = self._shape_batch(batch, aschema)
                 if obs is not None:
                     obs.observe(batch)
                 if batch.num_rows:
-                    f.write(_jsonl_batch_bytes(batch))
-                n += batch.num_rows
-        return n
-
-    def _stage_parquet(self, staged: str, iterator, obs) -> int:
-        """Columnar staging through the same commit protocol: Arrow
-        batches stream straight into one parquet file, so memory is
-        O(batch) regardless of partition size. The Arrow schema is
-        derived from the WRITER's Spark schema — the staged footer
-        carries real types, which is what lets readers pin the schema
-        instead of inferring it."""
-        import pyarrow.parquet as pq
-
-        aschema = self._arrow_schema()
-        n = 0
-        with pq.ParquetWriter(staged, aschema) as w:
-            for batch in iterator:
-                batch = self._shape_batch(batch, aschema)
-                if obs is not None:
-                    obs.observe(batch)
-                if batch.num_rows:
-                    w.write_batch(batch)
+                    put(batch)
                 n += batch.num_rows
         return n
 
     # -- driver side --------------------------------------------------
-    def commit(self, messages) -> None:
+    def _manifest(self, messages, **extra) -> dict:
+        """The commit manifest both writer families publish: the staged
+        files of the SUCCESSFUL tasks, the writer's schema and format,
+        ``extra`` (the mode, the stream's ``batch_id``, a replace's
+        ``removed_files``), the wall-clock commit
+        time and the per-file skipping stats. Mode semantics live in how
+        readers resolve the log: an append commit is a delta; an
+        overwrite commit is a BASE readers start from (older versions
+        stay time-travelable until expired, then vacuum reclaims their
+        files); a replace commit is a copy-on-write delta that swaps a
+        named subset. The commit time is what TIMESTAMP AS OF resolves
+        on: clock skew between writers is tolerated at READ time (the
+        resolver clamps timestamps to be monotone in version order,
+        Delta's rule), so the manifest stays a plain fact log."""
         files = sorted(
             (m.filename, m.n_rows)
             for m in messages
@@ -1259,23 +1190,9 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             "fields": self.fields,
             "schema_json": self.schema.json(),
             "format": self.format,
-            # mode semantics live HERE, in how readers resolve the log:
-            # an append commit is a delta; an overwrite commit is a BASE
-            # readers start from (older versions stay time-travelable
-            # until expired, then vacuum reclaims their files); a replace
-            # commit is a copy-on-write delta that swaps a named subset
-            "mode": "overwrite" if self.overwrite else (
-                "replace" if self.replaced_files is not None else "append"
-            ),
-            # wall-clock commit time: what TIMESTAMP AS OF resolves on.
-            # Clock skew between writers is tolerated at READ time (the
-            # resolver clamps timestamps to be monotone in version order,
-            # Delta's rule) — recording the raw clock keeps the manifest
-            # a plain fact log.
+            **extra,
             "ts": time.time(),
         }
-        if self.replaced_files is not None:
-            manifest["removed_files"] = sorted(set(self.replaced_files))
         file_stats = {
             m.filename: m.stats
             for m in messages
@@ -1283,6 +1200,18 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         }
         if file_stats:
             manifest["file_stats"] = file_stats
+        return manifest
+
+    def commit(self, messages) -> None:
+        if self.overwrite:
+            manifest = self._manifest(messages, mode="overwrite")
+        elif self.replaced_files is None:
+            manifest = self._manifest(messages, mode="append")
+        else:
+            manifest = self._manifest(
+                messages, mode="replace",
+                removed_files=sorted(set(self.replaced_files)),
+            )
         os.makedirs(self.path, exist_ok=True)
         # column-mapping re-check at COMMIT time: a RENAME/DROP landing
         # between write planning (where the mapping was applied to the
@@ -1305,28 +1234,14 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         # commit into a stream-written directory would create two
         # unordered version spaces — refuse while the job is still
         # invisible (Spark then calls abort(), sweeping the staging).
-        # The hint answers both questions (family + latest version) in
-        # one tiny read; only a hint-less directory pays the name scan.
-        hint = _read_hint(self.path)
-        if hint is not None:
-            if hint.get("kind") == "stream":
-                raise ValueError(
-                    f"{self.path} already holds a STREAM log "
-                    f"(_MANIFEST-<batchId> manifests); refusing to publish a "
-                    "batch commit into it — one writer family per directory"
-                )
-            v = int(hint.get("version", 0)) + 1
-            ckpt_v = hint.get("checkpoint")
-        else:
-            kind, commits, ckpts = _scan_names(self.path)
-            if kind == "stream":
-                raise ValueError(
-                    f"{self.path} already holds a STREAM log "
-                    f"(_MANIFEST-<batchId> manifests); refusing to publish a "
-                    "batch commit into it — one writer family per directory"
-                )
-            v = 1 + max((c[0] for c in commits), default=0)
-            ckpt_v = ckpts[-1][0] if ckpts else None
+        kind, head, ckpt_v = _log_head(self.path)
+        if kind == "stream":
+            raise ValueError(
+                f"{self.path} already holds a STREAM log "
+                f"(_MANIFEST-<batchId> manifests); refusing to publish a "
+                "batch commit into it — one writer family per directory"
+            )
+        v = head + 1
         # claim the next log position by EXCLUSIVE publication (no
         # manifest is opened, no read-modify-write of any other commit's
         # manifest): concurrent jobs serialize on the os.link claim
@@ -1449,38 +1364,16 @@ class ManifestStreamSinkWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         # family check FIRST (nothing published yet): a stream manifest
         # next to a batch commit log would wedge the directory for every
-        # future reader and writer. Hint answers it in one read; a
-        # hint-less directory pays the name scan.
-        hint = _read_hint(self.path)
-        kind = hint.get("kind") if hint is not None else _scan_names(self.path)[0]
-        if kind == "batch":
+        # future reader and writer
+        if _log_head(self.path)[0] == "batch":
             raise ValueError(
                 f"{self.path} already holds a BATCH commit log "
                 f"(_MANIFEST.v* manifests); refusing to publish a stream "
                 "batch manifest into it — one writer family per directory"
             )
-        files = sorted(
-            (m.filename, m.n_rows)
-            for m in messages
-            if m is not None and m.filename
+        manifest = self._delegate._manifest(
+            messages, batch_id=batchId, mode="append"
         )
-        manifest = {
-            "files": [f for f, _ in files],
-            "n_rows": sum(n for _, n in files),
-            "fields": self._delegate.fields,
-            "schema_json": self._delegate.schema.json(),
-            "format": self._delegate.format,
-            "batch_id": batchId,
-            "mode": "append",
-            "ts": time.time(),
-        }
-        file_stats = {
-            m.filename: m.stats
-            for m in messages
-            if m is not None and getattr(m, "stats", None)
-        }
-        if file_stats:
-            manifest["file_stats"] = file_stats
         os.makedirs(self.path, exist_ok=True)
         _publish_last_wins(self.path, f"{_B_PREFIX}{batchId}", manifest)
         _write_hint(self.path, "stream", batchId, None)
@@ -1626,10 +1519,7 @@ class ManifestLogStreamReader(DataSourceStreamReader):
             # a typo'd far-future timestamp must be a diagnostic, not an
             # empty forever-waiting stream (ADVICE r14)
             eff = 0.0
-            for v, name in commits:
-                raw = _load(self.path, name).get("ts")
-                if raw is not None:
-                    eff = max(eff, float(raw))
+            for v, eff in _effective_times(self.path, commits):
                 if eff >= self.starting_timestamp:
                     return {"v": v - 1}
             raise ValueError(
@@ -2064,6 +1954,14 @@ def prune_manifest_files(
     Files above the distinct cap record no bloom and are never
     bloom-pruned; non-point predicates ignore blooms entirely."""
     state = _resolve_state(path, version)
+    return _prune_state(path, state, predicates), len(state["files"])
+
+
+def _prune_state(path: str, state: dict, predicates: dict) -> list[str]:
+    """:func:`prune_manifest_files` over a state the caller already
+    resolved WITH stats: the kept files' full paths. Reads, MERGE and
+    DELETE prune the snapshot they pinned, so one operation sees one
+    snapshot."""
     if state.get("mapping"):
         # predicates arrive with LOGICAL names; stats are keyed by the
         # immutable PHYSICAL names — translate (pruning is unaffected
@@ -2103,7 +2001,20 @@ def prune_manifest_files(
                     break
         if not drop:
             kept.append(os.path.join(path, name))
-    return kept, len(state["files"])
+    return kept
+
+
+def _effective_times(path: str, commits: list):
+    """``(version, effective time)`` in version order: the running
+    MAXIMUM of the recorded wall-clock times (Delta's clamp rule — see
+    :func:`version_at_timestamp`); a commit without one inherits its
+    predecessor's time, 0.0 before any."""
+    eff = 0.0
+    for v, name in commits:
+        raw = _load(path, name).get("ts")
+        if raw is not None:
+            eff = max(eff, float(raw))
+        yield v, eff
 
 
 def version_at_timestamp(path: str, timestamp) -> int:
@@ -2127,16 +2038,11 @@ def version_at_timestamp(path: str, timestamp) -> int:
     _kind, commits, _ck = _scan_names(path)
     if not commits:
         raise ValueError(f"no manifest log under {path}")
-    eff = 0.0
     best = None
-    for v, name in commits:
-        raw = _load(path, name).get("ts")
-        if raw is not None:
-            eff = max(eff, float(raw))
-        if eff <= ts:
-            best = v
-        else:
+    for v, eff in _effective_times(path, commits):
+        if eff > ts:
             break  # effective times are monotone — nothing later qualifies
+        best = v
     if best is None:
         raise ValueError(
             f"timestamp {ts} predates the first surviving commit in {path} "
@@ -2173,47 +2079,35 @@ def read_manifest_sink(
         if version is not None:
             raise ValueError("pass version= or timestamp=, not both")
         version = version_at_timestamp(path, timestamp)
-    # stats are never consumed here (prune_manifest_files re-resolves with
-    # them when asked), so the checkpoint load can skip the stats column
-    state = _resolve_state(path, version, with_stats=False)
+    # ONE resolve serves the schema pin and the pruning, so a commit
+    # landing mid-read cannot mix two snapshots; stats are only loaded
+    # when pruning consumes them (checkpoint loads skip the column)
+    state = _resolve_state(path, version, with_stats=bool(prune))
     mapping = state.get("mapping")
-    files = [os.path.join(path, name) for name in state["files"]]
+    fmt, schema = _pin_read_schema(state["metas"])
+    if prune:
+        files = _prune_state(path, state, prune)
+    else:
+        files = [os.path.join(path, name) for name in state["files"]]
     if not files:
         # an EMPTY snapshot is legal state, not an error, whenever the log
         # recorded a schema to pin it to (a delete that removed every row,
-        # an overwrite truncate): return the schema-true empty frame
-        # (logical view when a column mapping exists)
-        if state["metas"]:
-            _fmt0, schema0 = _snapshot_logical_schema(state["metas"], mapping)
-            if schema0 is not None:
-                return local_relation_df(spark, [], schema0)
+        # an overwrite truncate), and so is a provably-empty pruned read:
+        # return the schema-true empty frame (logical view when a column
+        # mapping exists)
+        lschema = _snapshot_logical_schema(state["metas"], mapping)[1]
+        if lschema is not None:
+            return local_relation_df(spark, [], lschema)
         raise ValueError(
             f"no committed manifest files under {path}"
             + (f" at version <= {version}" if version is not None else "")
         )
-    fmt, schema = _pin_read_schema(state["metas"])
-    if prune:
-        files, _total = prune_manifest_files(path, prune, version)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if not files:  # everything provably pruned: an empty, schema-true frame
-        _fmt0, lschema = _snapshot_logical_schema(state["metas"], mapping)
-        return local_relation_df(spark, [], lschema)
-    df = reader.parquet(*files) if fmt == "parquet" else reader.json(files)
-    if mapping and schema is not None:
-        # project the immutable physical names to the CURRENT (or
-        # as-of-version) logical view: renames surface, drops vanish —
-        # a pure projection, column-pruned at the scan by Catalyst
-        from pyspark.sql import functions as F
-
-        df = df.select(
-            *[
-                F.col(phys).alias(logical)
-                for logical, phys, _t in _logical_projection(schema, mapping)
-            ]
-        )
-    return df
+    # the immutable physical names project to the CURRENT (or
+    # as-of-version) logical view: renames surface, drops vanish — a pure
+    # projection, column-pruned at the scan by Catalyst
+    return _project_logical_df(
+        _read_file_list(spark, files, fmt, schema), schema, mapping
+    )
 
 
 def _batch_state(
@@ -2316,7 +2210,8 @@ def _basename_of_uri(uri: str) -> str:
 
 
 def _read_file_list(spark: SparkSession, files: list[str], fmt: str, schema):
-    reader = spark.read.schema(schema)
+    # schema None: a legacy no-schema log, read by inference
+    reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(*files) if fmt == "parquet" else reader.json(files)
 
 
@@ -2396,8 +2291,11 @@ def _rewrite_options(
     }
 
 
-def _stage_and_commit(df: DataFrame, options: dict, overwrite: bool) -> None:
-    """Run one :class:`ManifestSinkWriter` job from the driver process:
+def _stage_and_commit(
+    df: DataFrame, options: dict, overwrite: bool, removed: list[str] | None = None
+) -> None:
+    """Run one :class:`ManifestSinkWriter` job from the driver process
+    (a REPLACE commit when ``removed`` lists the entries it swaps out):
     each task stages its partition with ``writer.write`` inside
     ``mapInArrow`` and returns its pickled :class:`_StagedFile`; the
     driver collects them and calls ``writer.commit``. Spark's own
@@ -2413,6 +2311,7 @@ def _stage_and_commit(df: DataFrame, options: dict, overwrite: bool) -> None:
     import pyarrow as pa
 
     writer = ManifestSinkWriter(options, df.schema, overwrite)
+    writer.replaced_files = removed
 
     def stage(batches):
         msg = pickle.dumps(writer.write(batches))
@@ -2446,9 +2345,9 @@ def _publish_replace(
     expected_version: int,
     tiers: tuple[list[str], list[str]],
 ) -> None:
-    options = _rewrite_options(path, fmt, expected_version, tiers)
-    options["replacedFiles"] = json.dumps(sorted(removed))
-    _stage_and_commit(df, options, overwrite=False)
+    _stage_and_commit(
+        df, _rewrite_options(path, fmt, expected_version, tiers), False, removed
+    )
 
 
 def _replace_conflict_reason(
@@ -2879,9 +2778,7 @@ def merge_into_manifest_sink(
             surviving = updates.filter(~F.col(mdel)).select(*cols)
     candidates = [os.path.join(path, f) for f in state["files"]]
     if state["file_stats"] and conflict_preds:
-        candidates, _total = prune_manifest_files(
-            path, dict(conflict_preds), version=state["version"]
-        )
+        candidates = _prune_state(path, state, conflict_preds)
     return _copy_on_write(
         spark, path, snap, "MERGE", candidates, match, surviving,
         key_preds=conflict_preds,
@@ -2909,9 +2806,7 @@ def delete_from_manifest_sink(
     state = snap[0]
     candidates = [os.path.join(path, f) for f in state["files"]]
     if prune:
-        candidates, _total = prune_manifest_files(
-            path, prune, version=state["version"]
-        )
+        candidates = _prune_state(path, state, prune)
     # additions are serialization-reorderable for a DELETE
     # (WriteSerializable: an appended row simply lands "after" the
     # delete), so key_preds=None — only overlapping rewrites/bases
@@ -2966,20 +2861,18 @@ def delete_range_from_manifest_sink(
     dropped: list[str] = []
     scan: list[str] = []
     for f in state["files"]:
-        mn, mx, nulls, rows = _stat_bounds((fstats.get(f) or {}).get(pcol))
-        if mn is not None and mx is not None:
-            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                continue  # provably disjoint: untouched
-            if (
-                nulls == 0
-                and (lo is None or mn >= lo)
-                and (hi is None or mx <= hi)
-            ):
-                dropped.append(f)  # provably fully covered: never opened
-                continue
-        elif nulls is not None and rows is not None and rows > 0 and nulls == rows:
-            continue  # provably all-null: a range never matches NULL
-        scan.append(f)
+        entry = (fstats.get(f) or {}).get(pcol)
+        if entry is not None and _entry_proves_miss(entry, [(lo, hi)]):
+            continue  # provably disjoint or all-null: untouched
+        mn, mx, nulls, _rows = _stat_bounds(entry)
+        if (
+            nulls == 0 and mn is not None and mx is not None
+            and (lo is None or mn >= lo)
+            and (hi is None or mx <= hi)
+        ):
+            dropped.append(f)  # provably fully covered: never opened
+        else:
+            scan.append(f)
     cond = F.lit(True)
     if lo is not None:
         cond = cond & (F.col(col) >= F.lit(lo))
@@ -3686,19 +3579,12 @@ def compact_stream_manifests(path: str, upto_batch: int) -> str:
     covered = [(v, name) for v, name in commits if v <= upto_batch]
     if not covered:
         raise ValueError(f"no stream manifests at or below batch {upto_batch}")
-    files: list[str] = []
-    metas: list[dict] = []
-    n_rows = 0
-    for v, name in covered:
+    files, metas, n_rows = [], [], 0
+    for _v, name in covered:
         man = _load(path, name)
-        if man.get("mode", "append") == "overwrite":
-            files, metas, n_rows = [], [], 0  # an earlier compaction's base
-        files.extend(man["files"])
-        n_rows += man["n_rows"]
-        if man["files"]:
-            m = _meta_of(man)
-            if m not in metas:
-                metas.append(m)
+        # an earlier compaction's base resets the count with the files
+        n_rows = man["n_rows"] + (0 if man.get("mode") == "overwrite" else n_rows)
+        files, metas, _fs, _m = _apply_commit(man, files, metas, {}, None)
     # the compacted base must present ONE coherent schema — reuse the
     # reader's drift rules so compaction can't paper over a drifted log
     fmt, schema = _pin_read_schema(metas)

@@ -127,6 +127,34 @@ def test_checkpoint_fast_path_matches_name_scan_exactly(tmp_path):
     assert len(resolve_manifest_files(d)) == 20  # base + 19 later deltas
 
 
+def test_fast_path_resolves_and_commits_without_a_listing(tmp_path, monkeypatch):
+    """With the hint and a checkpoint present, resolving at the head or
+    at any pin at or above the checkpoint — and claiming the next batch
+    version — never lists the directory: the name scan is only the
+    fallback. Each resolve equals the name-scan path's exactly."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources import pysink
+
+    d = str(tmp_path / "log")
+    for i in range(1, 21):
+        _batch_commit(d, [i], f"v{i}", overwrite=(i == 18))
+    pins = [None, 16, 17, 18, 20]
+    hint = os.path.join(d, _HINT)
+    os.rename(hint, hint + ".bak")
+    scanned = {k: pysink._resolve_state(d, k) for k in pins}
+    os.rename(hint + ".bak", hint)
+
+    def no_listing(path):
+        raise AssertionError(f"{path} was listed on the fast path")
+
+    monkeypatch.setattr(pysink, "_scan_names", no_listing)
+    for k in pins:
+        assert pysink._resolve_state(d, k) == scanned[k], k
+    _batch_commit(d, [21], "v21")
+    assert json.load(open(hint))["version"] == 21
+    monkeypatch.undo()
+    assert len(resolve_manifest_files(d)) == 4  # base 18 + 19, 20, 21
+
+
 def test_stale_hint_only_costs_probes_never_correctness(tmp_path):
     d = str(tmp_path / "log")
     for i in range(1, 20):
@@ -146,7 +174,7 @@ def test_expire_drops_stale_checkpoints_and_repairs_hint(tmp_path):
         _batch_commit(d, [i], f"v{i}", overwrite=(i == 33))
     removed = expire_manifest_versions(d, min_version=33)
     names = set(removed)
-    # r14: checkpoints are parquet by default, JSON when pyarrow absent
+    # r14: checkpoints are parquet (pre-r14 logs may still hold JSON ones)
     assert any(n.startswith("_CHECKPOINT.v00000016") for n in names)
     assert any(n.startswith("_CHECKPOINT.v00000032") for n in names)
     assert json.load(open(os.path.join(d, _HINT)))["checkpoint"] is None

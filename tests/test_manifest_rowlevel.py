@@ -1426,57 +1426,20 @@ def test_manifestlog_starting_timestamp_past_head_raises(spark, tmp_path):
         )
 
 
-def test_checkpoint_json_fallback_without_pyarrow(tmp_path, monkeypatch):
-    """ADVICE r14 (medium): in a pyarrow-less environment (explicitly
-    supported — ``_publish_checkpoint`` falls back to JSON) the hint
-    fast path must resolve via the JSON checkpoint name, not die on
-    ImportError probing the parquet name that was never written."""
-    import sys
-
-    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
-        _load_checkpoint_by_version,
-        _publish_checkpoint,
-    )
-
+def test_checkpoint_by_version_reads_pre_r14_json_name(tmp_path):
+    """The hint records a checkpoint VERSION, not a name: a pre-r14
+    log's bare-JSON checkpoint loads by version (its parquet name is
+    absent), and a version with neither name raises FileNotFoundError —
+    the stale-hint signal the resolve fast path falls back on."""
     d = str(tmp_path)
     ck = {"version": 4, "files": ["part-a.jsonl"], "metas": [],
           "file_stats": {"part-a.jsonl": {"id": [1, 9]}}}
-    monkeypatch.setitem(sys.modules, "pyarrow", None)
-    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
-    _publish_checkpoint(d, 4, ck)  # JSON fallback era
-    got = _load_checkpoint_by_version(d, 4)
-    assert got["version"] == 4 and got["files"] == ["part-a.jsonl"]
-    assert got["file_stats"]["part-a.jsonl"] == {"id": [1, 9]}
-    # neither name present -> FileNotFoundError (stale hint), still no
-    # ImportError even with pyarrow blocked
+    pysink._publish_exclusive(d, "_CHECKPOINT.v00000004", ck)
+    got = pysink._load_checkpoint_by_version(d, 4)
+    assert got["files"] == ["part-a.jsonl"]
+    assert got["file_stats"] == ck["file_stats"]
     with pytest.raises(FileNotFoundError):
-        _load_checkpoint_by_version(d, 7)
-
-
-def test_resolve_skips_unreadable_parquet_checkpoint(spark, tmp_path, monkeypatch):
-    """Mixed-era log: a parquet checkpoint exists (written WITH pyarrow)
-    but this reader lacks pyarrow. As long as the commit prefix
-    survives, resolve falls back to the full log walk and produces the
-    identical snapshot; if the prefix were expired it raises a
-    diagnostic instead of replaying a truncated log."""
-    import sys
-
-    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import _resolve_state
-
-    d = str(tmp_path / "t")
-    spark.dataSource.register(ManifestSinkDataSource)
-    for lo in (0, 10, 20, 30):
-        _write(spark, d, lo, lo + 3, checkpointInterval="2")
-    with_pa = _resolve_state(d)
-    assert any(
-        n.startswith("_CHECKPOINT.") and n.endswith(".parquet")
-        for n in os.listdir(d)
-    )
-    monkeypatch.setitem(sys.modules, "pyarrow", None)
-    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
-    without_pa = _resolve_state(d)
-    assert without_pa["files"] == with_pa["files"]
-    assert without_pa["version"] == with_pa["version"]
+        pysink._load_checkpoint_by_version(d, 7)
 
 
 # -------------------------------------------- r15: transparent RMW retry
@@ -2011,33 +1974,6 @@ def test_stats_type_validation_covers_renamed_columns(spark, tmp_path):
         ).mode("append").save()
 
 
-def test_pyarrowless_resolve_ok_when_floor_is_a_base(spark, tmp_path, monkeypatch):
-    """Expire floors the log on an overwrite BASE, so a pyarrow-less
-    reader can always replay from it even when only parquet checkpoints
-    survive — the diagnostic fires only for truly-unresolvable logs."""
-    import sys
-
-    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
-        _resolve_state,
-        expire_manifest_versions,
-        optimize_manifest_sink,
-    )
-
-    d = str(tmp_path / "t")
-    spark.dataSource.register(ManifestSinkDataSource)
-    _write(spark, d, 0, 3, checkpointInterval="2")
-    _write(spark, d, 3, 6, checkpointInterval="2")   # parquet ckpt at v2
-    optimize_manifest_sink(spark, d, target_files=1)  # BASE at v3
-    _write(spark, d, 6, 9, checkpointInterval="2")   # v4 + ckpt at v4
-    expire_manifest_versions(d, 3)                   # prefix gone, base-first
-    with_pa = _resolve_state(d)
-    monkeypatch.setitem(sys.modules, "pyarrow", None)
-    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
-    without_pa = _resolve_state(d)
-    assert without_pa["files"] == with_pa["files"]
-    assert without_pa["version"] == with_pa["version"]
-
-
 def _write_keyed(spark, d, **opts):
     """Four parquet files of even ids 0..78 plus a ``code`` string
     column: file i holds ids 20*i .. 20*i+18, so an odd id inside a
@@ -2212,3 +2148,60 @@ def test_copy_on_write_commits_bypass_datasource_save(spark, tmp_path, monkeypat
     want = {i: "j" for i in range(0, 300, 2) if i != 10 and not 200 <= i <= 239}
     got = {r.id: r.code for r in read_manifest_sink(spark, d).collect()}
     assert got == want
+
+
+def test_pruned_read_sees_one_snapshot_under_a_racing_overwrite(
+    spark, tmp_path, monkeypatch
+):
+    """A pruned read at the latest version resolves the log ONCE: an
+    overwrite landing right after that resolve — parquet-staged over a
+    jsonl table, with other rows — must not leak into the read. A second
+    resolve for the pruning would scan the new parquet files under the
+    first snapshot's jsonl schema pin."""
+    d = str(tmp_path / "t")
+    spark.dataSource.register(ManifestSinkDataSource)
+    _write(spark, d, 0, 5, statsColumns="id")
+    orig = pysink._resolve_state
+    raced = []
+
+    def racing(path, version=None, with_stats=True):
+        state = orig(path, version, with_stats)
+        if not raced:
+            raced.append(path)
+            _write(spark, d, 100, 105, mode="overwrite", statsColumns="id",
+                   format="parquet")
+        return state
+
+    monkeypatch.setattr(pysink, "_resolve_state", racing)
+    got = read_manifest_sink(spark, d, prune={"id": (None, 1000)})
+    assert raced
+    assert sorted(tuple(r) for r in got.collect()) == [(i,) for i in range(5)]
+    monkeypatch.undo()
+    assert _ids(read_manifest_sink(spark, d)) == list(range(100, 105))
+
+
+def test_failed_publish_leaves_no_temp_file(tmp_path, monkeypatch):
+    """Every publish writes a dot temp file first; a write that fails
+    part-way (a full disk under the checkpoint's parquet writer, a
+    manifest value JSON cannot carry) must remove it — vacuum never
+    sweeps dot-files, and a failed checkpoint is swallowed by the
+    committing job, so a leak would never be noticed."""
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+
+    def disk_full(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1")
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(pq, "write_table", disk_full)
+    ck = {"version": 4, "files": ["part-a.jsonl"], "metas": [], "file_stats": {}}
+    with pytest.raises(OSError, match="No space"):
+        pysink._publish_checkpoint(d, 4, ck)
+    unserializable = {"files": ["part-a.jsonl"], "ts": object()}
+    with pytest.raises(TypeError):
+        pysink._publish_exclusive(d, "_MANIFEST.v00000001", unserializable)
+    with pytest.raises(TypeError):
+        pysink._publish_last_wins(d, "_MANIFEST-0", unserializable)
+    assert os.listdir(d) == []

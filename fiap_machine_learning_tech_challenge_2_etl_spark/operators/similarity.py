@@ -86,72 +86,96 @@ def cosine_topk(
     return out.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
 
 
-def _blocked_pair_grid(
+def _pair_grid(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     n_blocks: int,
+    cell,
+    schema: str,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Upper-triangular block grid for exact all-pairs kernels, fully
-    distributed (no driver collect, no broadcast of the corpus):
+    distributed (no driver collect, no broadcast of the corpus).
 
-    1. every row hashes to one of ``n_blocks`` blocks; a groupBy packs each
-       block's (id, float64 vector) records into one array row;
-    2. each block row fans out to the grid cells it participates in — cell
-       (i, j), i <= j, receives block i as the "a" side and block j as the
-       "b" side via an ordinary EQUI join on the cell id (shuffle hash
-       join; no nested-loop, nothing driver-side).
+    Every row hashes to one of ``n_blocks`` blocks and goes to the grid
+    cells its block takes part in: block i is the "a" side of cells
+    (i, j >= i) and the "b" side of cells (j <= i, i). Each side is
+    repartitioned by the cell id with an explicit count, one partition
+    per cell: a repartition-by-number is exempt from AQE coalescing,
+    which would otherwise fold the compute-heavy, byte-light grid into
+    one task (r16 job profile: 136 matmuls in one task). That exchange
+    is the only one per side: the cogroup reuses the partitioning, and a
+    cogroup cannot broadcast a side.
 
-    Data volume shuffled is O(n * n_blocks) — each block is replicated once
-    per grid row/column — and each task holds exactly two blocks, so
-    per-executor memory is corpus/n_blocks * 2 regardless of scale; size
-    ``n_blocks`` so one block (~rows/n_blocks * dim * 8 B) fits comfortably
-    in a task. Compute stays the unavoidable O(n^2 d), done as one BLAS
-    matmul per cell."""
-    base = df.select(
-        (F.abs(F.xxhash64(F.col(id_col).cast("string"))) % n_blocks).alias("blk"),
-        F.struct(
-            F.col(id_col).alias("pid"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-            *[F.col(c).alias(c) for c in extra_cols],
-        ).alias("rec"),
-    )
-    blocked = base.groupBy("blk").agg(F.collect_list("rec").alias("recs"))
-    a_side = blocked.select(
-        F.col("blk").alias("blk_a"),
-        F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1).cast("long"))).alias(
-            "blk_b"
-        ),
-        F.col("recs").alias("recs_a"),
-    )
-    b_side = blocked.select(
-        F.explode(F.sequence(F.lit(0).cast("long"), F.col("blk"))).alias("blk_a"),
-        F.col("blk").alias("blk_b"),
-        F.col("recs").alias("recs_b"),
-    )
-    # Pre-partition BOTH sides by the cell id with an explicit partition
-    # count (one per grid cell): an explicit repartition-by-number is
-    # exempt from AQE partition coalescing, which otherwise folds the
-    # whole grid into ONE post-shuffle partition at small corpus sizes
-    # (the per-cell BLAS matmuls are compute-heavy and byte-light, so
-    # byte-based coalescing serializes exactly the work that should fan
-    # out — r16 job profile: the kNN cell stage ran 136 matmuls in one
-    # task). The join reuses this partitioning (same keys, same count),
-    # so no exchange is added — the join's own shuffle becomes this one.
-    n_cells = n_blocks * (n_blocks + 1) // 2
-    return a_side.repartition(n_cells, "blk_a", "blk_b").join(
-        b_side.repartition(n_cells, "blk_a", "blk_b"), ["blk_a", "blk_b"]
-    )
+    Per cell, ``cell(ids_a, ma, rows_a, ids_b, mb, rows_b, diag)`` gets
+    each side's ids, its L2-normalised float64 matrix and its pandas
+    rows (``extra_cols`` ride along); ``diag`` is true when both sides
+    are the same block (then the b side IS the a side). A cell with an
+    empty side (a block no row hashed to) emits nothing.
 
-
-def _unpack_block(recs):
+    Shuffled volume is O(n * n_blocks) and each task holds exactly two
+    blocks, so size ``n_blocks`` so one block (~rows/n_blocks * dim * 8
+    B) fits comfortably in a task. Compute stays the unavoidable
+    O(n^2 d), done as one BLAS matmul per cell."""
     import numpy as np
 
-    ids = np.array([r["pid"] for r in recs])
-    mat = np.stack([np.asarray(r["vec"], dtype=np.float64) for r in recs])
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
+    base = df.select(
+        (F.abs(F.xxhash64(F.col(id_col).cast("string"))) % n_blocks).alias("blk"),
+        F.col(id_col).alias("pid"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+        *extra_cols,
+    )
+    n_cells = n_blocks * (n_blocks + 1) // 2
+
+    def side(blk_a: Column, blk_b: Column):
+        # freshly aliased payload columns: when both cogroup sides project
+        # the same attributes, the right-hand frame arrives with only the
+        # key columns
+        return (
+            base.select(
+                blk_a.alias("blk_a"),
+                blk_b.alias("blk_b"),
+                *[F.col(c).alias(c) for c in ("pid", "vec", *extra_cols)],
+            )
+            .repartition(n_cells, "blk_a", "blk_b")
+            .groupBy("blk_a", "blk_b")
+        )
+
+    def unpack(rows):
+        mat = np.stack(rows["vec"].to_numpy())
+        return rows["pid"].to_numpy(), mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+    def run(rows_a, rows_b):
+        if rows_a.empty or rows_b.empty:
+            return pd.DataFrame()
+        ids_a, ma = unpack(rows_a)
+        diag = rows_a["blk_a"].iat[0] == rows_a["blk_b"].iat[0]
+        ids_b, mb = (ids_a, ma) if diag else unpack(rows_b)
+        return cell(ids_a, ma, rows_a, ids_b, mb, rows_b, diag)
+
+    last = F.lit(n_blocks - 1).cast("long")
+    a_side = side(F.col("blk"), F.explode(F.sequence("blk", last)))
+    b_side = side(F.explode(F.sequence(F.lit(0).cast("long"), "blk")), F.col("blk"))
+    return a_side.cogroup(b_side).applyInPandas(run, schema)
+
+
+def _cell_pairs(ids_a, ids_b, cos, hit, diag: bool) -> pd.DataFrame:
+    """The pairs ``hit`` selects in one cell, as ``(id_a, id_b, cos)``
+    with ``id_a < id_b``: a diagonal cell keeps only its upper triangle,
+    a cross cell holds every pair once and canonicalizes it."""
+    import numpy as np
+
+    if diag:
+        hit = hit & (ids_a[:, None] < ids_b[None, :])
+    ai, bi = np.nonzero(hit)
+    return pd.DataFrame(
+        {
+            "id_a": np.minimum(ids_a[ai], ids_b[bi]),
+            "id_b": np.maximum(ids_a[ai], ids_b[bi]),
+            "cos": cos[ai, bi],
+        }
+    )
 
 
 def all_pairs_cosine_topk(
@@ -161,9 +185,9 @@ def all_pairs_cosine_topk(
     vec_col: str = "embedding",
     n_blocks: int = 16,
 ) -> DataFrame:
-    """Exact all-pairs cosine top-k over a blocked self-join grid
-    (``_blocked_pair_grid``): each grid cell computes its block-pair's
-    cosines with ONE BLAS matmul (Arrow-batched numpy — no per-element
+    """Exact all-pairs cosine top-k over the block pair grid
+    (``_pair_grid``): each grid cell computes its block-pair's cosines
+    with ONE BLAS matmul (Arrow-batched numpy — no per-element
     expression interpretation) and keeps a local top-k (all ties at the
     boundary retained, so the global TakeOrdered merge is exact).
 
@@ -176,33 +200,17 @@ def all_pairs_cosine_topk(
 
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def cell_topk(batches):
-        for pdf in batches:
-            for blk_a, blk_b, recs_a, recs_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["recs_a"], pdf["recs_b"]
-            ):
-                ids_a, ma = _unpack_block(recs_a)
-                if blk_a == blk_b:
-                    ids_b, mb = ids_a, ma
-                else:
-                    ids_b, mb = _unpack_block(recs_b)
-                cos = np.round(ma @ mb.T, 6)
-                if blk_a == blk_b:
-                    ai, bi = np.nonzero(ids_a[:, None] < ids_b[None, :])
-                    lo, hi = ids_a[ai], ids_b[bi]
-                else:  # cross cell: every pair, canonicalized to (min, max)
-                    ai, bi = np.nonzero(np.ones_like(cos, dtype=bool))
-                    lo = np.minimum(ids_a[ai], ids_b[bi])
-                    hi = np.maximum(ids_a[ai], ids_b[bi])
-                vals = cos[ai, bi]
-                if len(vals) > k:
-                    kth = np.partition(vals, len(vals) - k)[len(vals) - k]
-                    keep = vals >= kth  # ">=" keeps boundary ties for the merge
-                    lo, hi, vals = lo[keep], hi[keep], vals[keep]
-                yield pd.DataFrame({"id_a": lo, "id_b": hi, "cos": vals})
+    def cell_topk(ids_a, ma, _rows_a, ids_b, mb, _rows_b, diag):
+        cos = np.round(ma @ mb.T, 6)
+        out = _cell_pairs(ids_a, ids_b, cos, np.ones(cos.shape, dtype=bool), diag)
+        if len(out) > k:
+            kth = np.partition(out["cos"].to_numpy(), len(out) - k)[len(out) - k]
+            out = out[out["cos"] >= kth]  # ">=" keeps boundary ties for the merge
+        return out
 
-    out = _blocked_pair_grid(df, id_col, vec_col, n_blocks).mapInPandas(
-        cell_topk, schema=f"id_a {id_type}, id_b {id_type}, cos double"
+    out = _pair_grid(
+        df, id_col, vec_col, n_blocks, cell_topk,
+        f"id_a {id_type}, id_b {id_type}, cos double",
     )
     return out.orderBy(F.col("cos").desc(), "id_a", "id_b").limit(k)
 
@@ -215,7 +223,7 @@ def exact_near_dup_pairs(
     n_blocks: int = 16,
 ) -> DataFrame:
     """Exact embedding near-dup: ALL pairs with round(cosine, 6) >= threshold
-    (id_a < id_b). Same blocked-grid kernel as ``all_pairs_cosine_topk``
+    (id_a < id_b). Same block pair grid as ``all_pairs_cosine_topk``
     but thresholded instead of top-k, so the result is oracle-checkable
     (deterministic set, no approximation).
 
@@ -228,30 +236,13 @@ def exact_near_dup_pairs(
 
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def cell_pairs(batches):
-        for pdf in batches:
-            for blk_a, blk_b, recs_a, recs_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["recs_a"], pdf["recs_b"]
-            ):
-                ids_a, ma = _unpack_block(recs_a)
-                if blk_a == blk_b:
-                    ids_b, mb = ids_a, ma
-                else:
-                    ids_b, mb = _unpack_block(recs_b)
-                cos = np.round(ma @ mb.T, 6)
-                hit = cos >= threshold
-                if blk_a == blk_b:
-                    hit &= ids_a[:, None] < ids_b[None, :]
-                    ai, bi = np.nonzero(hit)
-                    lo, hi = ids_a[ai], ids_b[bi]
-                else:
-                    ai, bi = np.nonzero(hit)
-                    lo = np.minimum(ids_a[ai], ids_b[bi])
-                    hi = np.maximum(ids_a[ai], ids_b[bi])
-                yield pd.DataFrame({"id_a": lo, "id_b": hi, "cos": cos[ai, bi]})
+    def cell_pairs(ids_a, ma, _rows_a, ids_b, mb, _rows_b, diag):
+        cos = np.round(ma @ mb.T, 6)
+        return _cell_pairs(ids_a, ids_b, cos, cos >= threshold, diag)
 
-    return _blocked_pair_grid(df, id_col, vec_col, n_blocks).mapInPandas(
-        cell_pairs, schema=f"id_a {id_type}, id_b {id_type}, cos double"
+    return _pair_grid(
+        df, id_col, vec_col, n_blocks, cell_pairs,
+        f"id_a {id_type}, id_b {id_type}, cos double",
     )
 
 
@@ -804,6 +795,78 @@ def quantize_int8(
     )
 
 
+def _anchor_topk(
+    df: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    n_blocks: int,
+    cross_label: bool,
+) -> DataFrame:
+    """Exact per-anchor cosine top-k over the block pair grid, labels
+    carried through: each cell does one BLAS matmul, masks self pairs
+    (and same-label pairs when ``cross_label``), keeps every anchor's
+    local top-k WITH boundary ties (so the global merge is exact) in
+    both directions of a cross cell, and the final per-anchor cut is
+    one WindowGroupLimit-able ranking keyed on the anchor, tiebreak
+    (cos desc, neg asc). Output: (anchor, neg, cos) when
+    ``cross_label``, else (anchor, anchor_label, neg, neg_label, cos)."""
+    import numpy as np
+    from pyspark.sql.window import Window
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    lab_type = df.schema[label_col].dataType.simpleString()
+    cols = ["anchor", "neg", "cos"] if cross_label else [
+        "anchor", "anchor_label", "neg", "neg_label", "cos"
+    ]
+
+    def emit(a_ids, a_labs, c_ids, c_labs, cos):
+        ok = a_ids[:, None] != c_ids[None, :]
+        if cross_label:
+            ok &= a_labs[:, None] != c_labs[None, :]
+        n = cos.shape[1]
+        if n > k:  # the k-th best allowed cosine per anchor (-inf: fewer than k)
+            kth = np.partition(np.where(ok, cos, -np.inf), n - k, axis=1)[:, n - k]
+            ok &= cos >= kth[:, None]
+        ai, ci = np.nonzero(ok)
+        return pd.DataFrame(
+            {
+                "anchor": a_ids[ai],
+                "anchor_label": a_labs[ai],
+                "neg": c_ids[ci],
+                "neg_label": c_labs[ci],
+                "cos": cos[ai, ci],
+            }
+        )[cols]
+
+    def cell_topk(ids_a, ma, rows_a, ids_b, mb, rows_b, diag):
+        labs_a = rows_a[label_col].to_numpy()
+        cos = np.round(ma @ mb.T, 6)
+        if diag:
+            return emit(ids_a, labs_a, ids_a, labs_a, cos)
+        labs_b = rows_b[label_col].to_numpy()
+        return pd.concat(
+            [
+                emit(ids_a, labs_a, ids_b, labs_b, cos),
+                emit(ids_b, labs_b, ids_a, labs_a, cos.T),
+            ]
+        )
+
+    types = {"anchor": id_type, "anchor_label": lab_type, "neg": id_type,
+             "neg_label": lab_type, "cos": "double"}
+    cand = _pair_grid(
+        df, id_col, vec_col, n_blocks, cell_topk,
+        ", ".join(f"{c} {types[c]}" for c in cols), extra_cols=(label_col,),
+    )
+    w = Window.partitionBy("anchor").orderBy(F.col("cos").desc(), "neg")
+    return (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select(*cols)
+    )
+
+
 def hard_negative_topk(
     df: DataFrame,
     k: int = 3,
@@ -815,14 +878,13 @@ def hard_negative_topk(
     """Hard-negative mining for contrastive training: for every anchor,
     the top-k most-cosine-similar items with a DIFFERENT label — the
     pairs that teach a metric-learning model the most. Exact (no ANN),
-    on the same blocked self-join grid as ``all_pairs_cosine_topk``:
-    each cell does one BLAS matmul, masks same-label pairs, keeps a
-    per-anchor local top-k WITH boundary ties (so the global merge is
-    exact), and the final per-anchor cut is one WindowGroupLimit-able
-    ranking keyed on the anchor. Per-cell output is O(anchors * k), so
-    the merge shuffle is tiny relative to the O(n^2 d) compute the
-    semantics inherently cost; for corpora past the n^2 regime, generate
-    candidates with the LSH path first and re-rank those instead.
+    on the same block pair grid as ``all_pairs_cosine_topk``
+    (``_anchor_topk``: one BLAS matmul per cell, per-anchor local top-k
+    with boundary ties, one anchor-keyed final ranking). Per-cell output
+    is O(anchors * k), so the merge shuffle is tiny relative to the
+    O(n^2 d) compute the semantics inherently cost; for corpora past the
+    n^2 regime, generate candidates with the LSH path first and re-rank
+    those instead.
 
     Output: (anchor, neg, cos), cos rounded to 6dp, deterministic
     tiebreak (cos desc, neg asc). NULL-label rows are dropped up front:
@@ -830,70 +892,8 @@ def hard_negative_topk(
     NULL-label anchor would get negatives emitted while SQL's
     ``a.label <> b.label`` is NULL (row excluded) — "different label" is
     simply undefined without a label, so neither side should emit them."""
-    import numpy as np
-    from pyspark.sql.window import Window
-
     df = df.filter(F.col(label_col).isNotNull())
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def _labels(recs):
-        return np.array([r[label_col] for r in recs])
-
-    def cell_topk(batches):
-        def emit(anchor_ids, anchor_labs, cand_ids, cand_labs, cos):
-            # mask self and same-label, then per-anchor local top-k w/ ties
-            ok = (anchor_ids[:, None] != cand_ids[None, :]) & (
-                anchor_labs[:, None] != cand_labs[None, :]
-            )
-            a_idx, n_idx, vals = [], [], []
-            for i in range(len(anchor_ids)):
-                js = np.nonzero(ok[i])[0]
-                if len(js) == 0:
-                    continue
-                row = cos[i, js]
-                if len(row) > k:
-                    kth = np.partition(row, len(row) - k)[len(row) - k]
-                    keep = row >= kth
-                    js, row = js[keep], row[keep]
-                a_idx.extend([i] * len(js))
-                n_idx.extend(js.tolist())
-                vals.extend(row.tolist())
-            return pd.DataFrame(
-                {
-                    "anchor": anchor_ids[a_idx],
-                    "neg": cand_ids[n_idx],
-                    "cos": np.array(vals, dtype=np.float64),
-                }
-            )
-
-        for pdf in batches:
-            for blk_a, blk_b, recs_a, recs_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["recs_a"], pdf["recs_b"]
-            ):
-                ids_a, ma = _unpack_block(recs_a)
-                labs_a = _labels(recs_a)
-                if blk_a == blk_b:
-                    cos = np.round(ma @ ma.T, 6)
-                    yield emit(ids_a, labs_a, ids_a, labs_a, cos)
-                else:
-                    ids_b, mb = _unpack_block(recs_b)
-                    labs_b = _labels(recs_b)
-                    cos = np.round(ma @ mb.T, 6)
-                    yield emit(ids_a, labs_a, ids_b, labs_b, cos)
-                    yield emit(ids_b, labs_b, ids_a, labs_a, cos.T)
-
-    grid = _blocked_pair_grid(
-        df, id_col, vec_col, n_blocks, extra_cols=(label_col,)
-    )
-    cand = grid.mapInPandas(
-        cell_topk, schema=f"anchor {id_type}, neg {id_type}, cos double"
-    )
-    w = Window.partitionBy("anchor").orderBy(F.col("cos").desc(), "neg")
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("anchor", "neg", "cos")
-    )
+    return _anchor_topk(df, k, id_col, vec_col, label_col, n_blocks, cross_label=True)
 
 
 def knn_neighbors(
@@ -907,79 +907,12 @@ def knn_neighbors(
     """Exact k-nearest-neighbors (cosine) per anchor with labels carried
     through — the substrate for k-NN label-noise detection (confident-
     learning style: an example whose neighbors mostly disagree with its
-    label is likely mislabeled). Same blocked self-join grid as
-    ``all_pairs_cosine_topk``: per-cell BLAS matmul, per-anchor local
-    top-k WITH boundary ties, one final anchor-keyed ranking. Per-cell
-    output is O(anchors * k); compute is the inherent O(n^2 d) of exact
-    kNN — at scale, swap the candidate stage for the LSH/IVF paths and
-    re-rank.
+    label is likely mislabeled). Same block pair grid and per-anchor
+    top-k as ``hard_negative_topk`` (``_anchor_topk``), without the
+    label mask. Per-cell output is O(anchors * k); compute is the
+    inherent O(n^2 d) of exact kNN — at scale, swap the candidate stage
+    for the LSH/IVF paths and re-rank.
 
     Output: (anchor, anchor_label, neg, neg_label, cos) for the k nearest
     by (cos desc, neg asc) — deterministic, 6dp cosine."""
-    import numpy as np
-    from pyspark.sql.window import Window
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    lab_type = df.schema[label_col].dataType.simpleString()
-
-    def _labels(recs):
-        return np.array([r[label_col] for r in recs])
-
-    def cell_topk(batches):
-        def emit(a_ids, a_labs, c_ids, c_labs, cos):
-            ok = a_ids[:, None] != c_ids[None, :]
-            a_idx, n_idx, vals = [], [], []
-            for i in range(len(a_ids)):
-                js = np.nonzero(ok[i])[0]
-                if len(js) == 0:
-                    continue
-                row = cos[i, js]
-                if len(row) > k:
-                    kth = np.partition(row, len(row) - k)[len(row) - k]
-                    keep = row >= kth
-                    js, row = js[keep], row[keep]
-                a_idx.extend([i] * len(js))
-                n_idx.extend(js.tolist())
-                vals.extend(row.tolist())
-            return pd.DataFrame(
-                {
-                    "anchor": a_ids[a_idx],
-                    "anchor_label": a_labs[a_idx],
-                    "neg": c_ids[n_idx],
-                    "neg_label": c_labs[n_idx],
-                    "cos": np.array(vals, dtype=np.float64),
-                }
-            )
-
-        for pdf in batches:
-            for blk_a, blk_b, recs_a, recs_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["recs_a"], pdf["recs_b"]
-            ):
-                ids_a, ma = _unpack_block(recs_a)
-                labs_a = _labels(recs_a)
-                if blk_a == blk_b:
-                    cos = np.round(ma @ ma.T, 6)
-                    yield emit(ids_a, labs_a, ids_a, labs_a, cos)
-                else:
-                    ids_b, mb = _unpack_block(recs_b)
-                    labs_b = _labels(recs_b)
-                    cos = np.round(ma @ mb.T, 6)
-                    yield emit(ids_a, labs_a, ids_b, labs_b, cos)
-                    yield emit(ids_b, labs_b, ids_a, labs_a, cos.T)
-
-    grid = _blocked_pair_grid(
-        df, id_col, vec_col, n_blocks, extra_cols=(label_col,)
-    )
-    cand = grid.mapInPandas(
-        cell_topk,
-        schema=(
-            f"anchor {id_type}, anchor_label {lab_type}, "
-            f"neg {id_type}, neg_label {lab_type}, cos double"
-        ),
-    )
-    w = Window.partitionBy("anchor").orderBy(F.col("cos").desc(), "neg")
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("anchor", "anchor_label", "neg", "neg_label", "cos")
-    )
+    return _anchor_topk(df, k, id_col, vec_col, label_col, n_blocks, cross_label=False)

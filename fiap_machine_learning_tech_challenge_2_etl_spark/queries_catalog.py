@@ -1455,11 +1455,12 @@ WHERE a.vec_id < b.vec_id
 )
 def q_embedding_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding near-dup (ALL pairs with rounded cosine >= 0.4,
-    broadcast block matmul) — the value-checked ground truth for the LSH
-    scale path above; threshold applied to the 6-decimal-rounded cosine on
-    both engines so the cut boundary is identical. (Testdata embeddings are
-    near-orthogonal random vectors — max pairwise cos ~0.5 — so the
-    threshold sits where a few hundred pairs exist to value-check.)"""
+    one matmul per cell of the cogroup pair grid) — the value-checked
+    ground truth for the LSH scale path above; threshold applied to the
+    6-decimal-rounded cosine on both engines so the cut boundary is
+    identical. (Testdata embeddings are near-orthogonal random vectors —
+    max pairwise cos ~0.5 — so the threshold sits where a few hundred
+    pairs exist to value-check.)"""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
         exact_near_dup_pairs,
     )
@@ -4020,9 +4021,9 @@ def _cc_components(
     propagation). The DEFAULT edge source is the LSH-banded candidate
     generator (``embedding_near_dup_pairs``: banded bucket equi-join +
     Arrow-batched exact verify — sub-quadratic, the 100 TB plan);
-    ``exact_edges=True`` swaps in the O(n^2) blocked-grid scan, kept ONLY
-    as small-scale ground truth for the pytest cross-check
-    (tests/test_graph.py::test_cc_pipeline_lsh_vs_exact_edges)."""
+    ``exact_edges=True`` swaps in the O(n^2) cogroup pair-grid scan, kept
+    ONLY as small-scale ground truth for the pytest cross-check
+    (tests/test_graph.py::test_cc_pipeline_lsh_edges_refine_exact)."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import connected_components
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
         embedding_near_dup_pairs,
@@ -5445,9 +5446,9 @@ SELECT anchor, neg, cos FROM r WHERE rn <= 3
 )
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per anchor, the 3
-    most-similar DIFFERENT-label vectors, exact, over the blocked
-    self-join grid (one BLAS matmul per cell, per-anchor local top-k with
-    boundary ties, tiny merge shuffle). See
+    most-similar DIFFERENT-label vectors, exact, over the cogroup pair
+    grid (one BLAS matmul per cell, per-anchor local top-k with boundary
+    ties, tiny merge shuffle). See
     operators.similarity.hard_negative_topk."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
         hard_negative_topk,
@@ -6183,7 +6184,7 @@ def q_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN label-noise detection (confident-learning style): for each
     embedding, how many of its 5 exact nearest neighbors carry a
     DIFFERENT label — high disagreement flags probable mislabels for
-    relabeling/dropping before training. Exact kNN over the blocked
+    relabeling/dropping before training. Exact kNN over the cogroup pair
     grid (operators.similarity.knn_neighbors); the disagreement count is
     one anchor-keyed aggregate over the k rows per anchor."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import knn_neighbors
@@ -7628,7 +7629,7 @@ FROM j
 )
 def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-evaluating dedup: precision/recall of the LSH near-dup path
-    against the exact blocked-grid ground truth, as one query — the
+    against the exact pair-grid ground truth, as one query — the
     eval a pipeline runs on a BOUNDED SAMPLE before trusting LSH at full
     scale (here the whole sf table IS the sample). Both operands are the
     production operators; the set comparison is one full-outer equi-join

@@ -3544,7 +3544,8 @@ def manifest_history(spark: SparkSession, path: str) -> DataFrame:
 def compact_stream_manifests(path: str, upto_batch: int) -> str:
     """Rewrite a STREAM directory's per-batch manifests for batches
     ``<= upto_batch`` into ONE BASE manifest at ``_MANIFEST-<upto_batch>``
-    — metadata only, no data file is read or moved. A raw stream log is
+    — metadata only, no data file is read or moved; the surviving files
+    keep their skipping stats, so pruning is unchanged. A raw stream log is
     all deltas, so it can never be expired (there is no base to floor
     on); after compaction the log's head is a base, making
     :func:`expire_manifest_versions` + :func:`vacuum_manifest_sink`
@@ -3579,12 +3580,12 @@ def compact_stream_manifests(path: str, upto_batch: int) -> str:
     covered = [(v, name) for v, name in commits if v <= upto_batch]
     if not covered:
         raise ValueError(f"no stream manifests at or below batch {upto_batch}")
-    files, metas, n_rows = [], [], 0
+    files, metas, fstats, n_rows = [], [], {}, 0
     for _v, name in covered:
         man = _load(path, name)
         # an earlier compaction's base resets the count with the files
         n_rows = man["n_rows"] + (0 if man.get("mode") == "overwrite" else n_rows)
-        files, metas, _fs, _m = _apply_commit(man, files, metas, {}, None)
+        files, metas, fstats, _m = _apply_commit(man, files, metas, fstats, None)
     # the compacted base must present ONE coherent schema — reuse the
     # reader's drift rules so compaction can't paper over a drifted log
     fmt, schema = _pin_read_schema(metas)
@@ -3602,6 +3603,8 @@ def compact_stream_manifests(path: str, upto_batch: int) -> str:
     if schema is not None:
         manifest["schema_json"] = schema.json()
         manifest["fields"] = schema.fieldNames()
+    if fstats:  # the covered files keep their skipping stats
+        manifest["file_stats"] = fstats
     published = f"{_B_PREFIX}{upto_batch}"
     _publish_last_wins(path, published, manifest)
     for _v, name in covered:

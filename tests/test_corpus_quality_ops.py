@@ -692,6 +692,60 @@ def test_hard_negative_drops_null_label_rows(spark):
     assert top[1] == 3
 
 
+def test_exact_grid_kernels_match_brute_force_with_empty_blocks(spark):
+    """Three rows over 16 blocks: most grid cells have one empty side,
+    and ids 3 and 5 share one block (14 of 16) with the same label, so
+    that block's diagonal cell holds no cross-label pair. All four exact
+    grid kernels must still equal a numpy brute-force model row for
+    row."""
+    import numpy as np
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
+        all_pairs_cosine_topk,
+        exact_near_dup_pairs,
+        hard_negative_topk,
+        knn_neighbors,
+    )
+
+    rows = [(3, [1.0, 0.2, 0.0], "A"), (4, [0.1, 1.0, 0.3], "B"), (5, [0.8, 0.6, 0.1], "A")]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
+    ids = [r[0] for r in rows]
+    lab = {r[0]: r[2] for r in rows}
+    m = np.array([r[1] for r in rows])
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    cos = {
+        (a, b): float(np.round(m[i] @ m[j], 6))
+        for i, a in enumerate(ids)
+        for j, b in enumerate(ids)
+        if a != b
+    }
+    pairs = sorted(
+        ((a, b, c) for (a, b), c in cos.items() if a < b), key=lambda t: (-t[2], t[0], t[1])
+    )
+
+    def nearest(a, same_label_ok):
+        cands = [
+            (a, lab[a], n, lab[n], cos[a, n])
+            for n in ids
+            if n != a and (same_label_ok or lab[n] != lab[a])
+        ]
+        return min(cands, key=lambda t: (-t[4], t[2]))
+
+    def got(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    assert got(all_pairs_cosine_topk(df, k=2, n_blocks=16)) == sorted(pairs[:2])
+    assert got(exact_near_dup_pairs(df, threshold=0.5, n_blocks=16)) == sorted(
+        p for p in pairs if p[2] >= 0.5
+    )
+    assert got(hard_negative_topk(df, k=1, n_blocks=16)) == sorted(
+        (t[0], t[2], t[4]) for t in (nearest(a, False) for a in ids)
+    )
+    assert got(knn_neighbors(df, k=1, n_blocks=16)) == sorted(
+        nearest(a, True) for a in ids
+    )
+
+
 def test_rebalance_null_group_neither_kept_nor_shrinks_min(spark):
     """A NULL group value is not a mixture component: its rows are
     dropped AND it must not participate in min(n) (otherwise a single

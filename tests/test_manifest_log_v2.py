@@ -406,6 +406,26 @@ def test_stream_compaction_then_expire_reclaims_orphans(tmp_path):
     assert vacuum_manifest_sink(d, grace_seconds=0) == []
 
 
+def test_stream_compaction_keeps_skipping_stats(tmp_path):
+    """The compacted base carries the covered files' skipping stats:
+    pruning keeps exactly the files it kept before the compaction (a
+    stats-less base would keep every compacted file)."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import prune_manifest_files
+
+    d = str(tmp_path / "stream")
+    os.makedirs(d)
+    for b in range(4):
+        name = f"part-00000-b{b}.jsonl"
+        with open(os.path.join(d, name), "w") as f:
+            f.write(f'{{"id": {b}}}\n')
+        msg = _StagedFile(name, 1, stats={"id": [b, b]})
+        ManifestStreamSinkWriter({"path": d}, SCHEMA).commit([msg], b)
+    before = prune_manifest_files(d, {"id": (0, 0)})
+    assert len(before[0]) == 1 and before[1] == 4
+    compact_stream_manifests(d, 2)
+    assert prune_manifest_files(d, {"id": (0, 0)}) == before
+
+
 def test_manifest_stats_skipping_prunes_only_provable_files(spark, tmp_path):
     """Manifest-level min/max data skipping: statsColumns records per-file
     [min,max] during staging; pruning drops a file ONLY when its stats

@@ -152,11 +152,12 @@ def test_sequence_packing_single_source_exchange(spark, sf_dir):
 
 
 def test_exact_embedding_kernels_have_no_driver_collect(spark, sf_dir):
-    """The exact all-pairs kernels are a distributed blocked self-join: an
-    equi-join of block-grid cells feeding MapInPandas. Building the plan
-    must trigger NO Spark job (the old kernel eagerly toPandas'd the whole
-    table to the driver at construction time), and the plan must contain
-    the grid equi-join, not a nested-loop or a corpus broadcast."""
+    """The exact all-pairs kernels are a distributed block pair grid: the
+    grid cells of both sides cogrouped into FlatMapCoGroupsInPandas.
+    Building the plan must trigger NO Spark job (the old kernel eagerly
+    toPandas'd the whole table to the driver at construction time), and
+    the plan must contain the grid cogroup, not a nested-loop or a corpus
+    broadcast."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
         all_pairs_cosine_topk,
         exact_near_dup_pairs,
@@ -172,14 +173,44 @@ def test_exact_embedding_kernels_have_no_driver_collect(spark, sf_dir):
     assert jobs_after == jobs_before, "plan construction ran driver-side jobs"
     for df in (topk, pairs):
         plan = _plan(df)
-        assert "MapInPandas" in plan, plan
+        assert "FlatMapCoGroupsInPandas" in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "CartesianProduct" not in plan, plan
 
 
+def test_exact_grid_kernels_cogroup_one_exchange_per_side(spark, sf_dir):
+    """The four exact embedding kernels share one pair grid: each side is
+    repartitioned ONCE by cell id (an explicit REPARTITION_BY_NUM, exempt
+    from AQE coalescing) straight into one FlatMapCoGroupsInPandas. No
+    collect_list packing of blocks, and no broadcast of a side (r16's
+    join grid had both, on top of the repartitions)."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.operators.similarity import (
+        all_pairs_cosine_topk,
+        exact_near_dup_pairs,
+        hard_negative_topk,
+        knn_neighbors,
+    )
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.parquet import load_testdata
+
+    emb = load_testdata(spark, sf_dir, ["embeddings"])["embeddings"]
+    for df in (
+        all_pairs_cosine_topk(emb, k=5),
+        exact_near_dup_pairs(emb, threshold=0.9),
+        hard_negative_topk(emb, k=3),
+        knn_neighbors(emb, k=5),
+    ):
+        plan = _plan(df)
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+        grid = plan[plan.index("FlatMapCoGroupsInPandas"):]
+        assert grid.count("REPARTITION_BY_NUM") == 2, plan
+        assert plan.count("REPARTITION_BY_NUM") == 2, plan
+        assert "BroadcastExchange" not in plan, plan
+        assert "collect_list" not in plan, plan
+
+
 def test_all_pairs_grid_is_equi_join(spark, sf_dir):
-    """The blocked all-pairs grid joins block rows on CELL IDS — an
-    ordinary shuffled equi-join, never a cartesian / broadcast
+    """The all-pairs grid meets block rows on CELL IDS — a cogroup of
+    two hash-partitioned sides, never a cartesian / broadcast
     nested-loop (the r1 scale-killer this pin keeps dead)."""
     plan = _plan(SPARK_QUERIES["embedding_topk_pairs"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
@@ -189,7 +220,7 @@ def test_all_pairs_grid_is_equi_join(spark, sf_dir):
 def test_near_dup_candidate_join_shape(spark, sf_dir):
     """The LSH candidate generator (default edge source for the cluster
     pipelines) is a (band_id, band_val) equi-join: no cartesian, no
-    nested loop, and no blocked-grid MapInPandas kernel in its plan.
+    nested loop, and no pair-grid or MapInPandas kernel in its plan.
     (That explicit sizing builds the plan with ZERO driver jobs is pinned
     deterministically by poisoning ``_corpus_stats`` in
     test_llm_ops.py::test_embedding_near_dup_explicit_sizing_runs_no_driver_job
@@ -204,7 +235,12 @@ def test_near_dup_candidate_join_shape(spark, sf_dir):
     sized = embedding_near_dup_pairs(emb, threshold=0.4, n_rows=500, dim=64)
     for df in (sized, embedding_near_dup_pairs(emb, threshold=0.4)):
         plan = _plan(df)
-        for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "MapInPandas"):
+        for bad in (
+            "CartesianProduct",
+            "BroadcastNestedLoopJoin",
+            "MapInPandas",
+            "FlatMapCoGroupsInPandas",
+        ):
             assert bad not in plan, plan
 
 
@@ -369,11 +405,11 @@ def test_containment_pairs_no_cartesian(spark, sf_dir):
 
 
 def test_knn_label_noise_rides_blocked_grid(spark, sf_dir):
-    """kNN label-noise runs the blocked-grid MapInPandas kernel (equi-join
-    grid cells) with the per-anchor cut as a WindowGroupLimit — never a
-    cartesian pairing or a driver-side collect kernel."""
+    """kNN label-noise runs the pair-grid FlatMapCoGroupsInPandas kernel
+    (cogrouped grid cells) with the per-anchor cut as a WindowGroupLimit —
+    never a cartesian pairing or a driver-side collect kernel."""
     plan = _plan(SPARK_QUERIES["knn_label_noise"](spark, sf_dir))
-    assert "MapInPandas" in plan, plan
+    assert "FlatMapCoGroupsInPandas" in plan, plan
     assert "WindowGroupLimit" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fiap_machine_learning_tech_challenge_2_etl_spark.operators import cleaning as C
@@ -1153,12 +1153,18 @@ def test_psi_drift_matches_python_model(spark, base, cur, nbins):
     alpha=st.sampled_from([0.0, 0.3, 0.7, 1.0]),
     frac=st.sampled_from([0.25, 0.5, 1.0]),
 )
+# exact tie: 0.5 * (1/4) / (336/945) == 0.3515625 rounds half up to 0.351563
+@example(masses={"g0": 1, "g1": 108, "g2": 336, "g3": 500}, alpha=0.0, frac=0.5)
 def test_temperature_mix_rates_match_python_model(spark, masses, alpha, frac):
     """temperature_mix keep rates on random group-mass layouts == the
-    Python closed form round(min(1, frac * (p^alpha / sum p^alpha) / p), 6)
-    — including alpha=0 (uniform target), alpha=1 (natural proportions ->
-    flat frac), and rate clipping when a rare group's boost exceeds 1.
-    Rows are one-per-unit-mass so group mass == row count."""
+    Python closed form min(1, frac * (p^alpha / sum p^alpha) / p) rounded
+    to 6 dp the way Spark's round does it (HALF_UP on the double's decimal
+    form, so an exact tie like 0.3515625 goes up, where Python's round
+    goes to even) — including alpha=0 (uniform target), alpha=1 (natural
+    proportions -> flat frac), and rate clipping when a rare group's boost
+    exceeds 1. Rows are one-per-unit-mass so group mass == row count."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.sampling import (
         temperature_mix,
     )
@@ -1182,7 +1188,8 @@ def test_temperature_mix_rates_match_python_model(spark, masses, alpha, frac):
     z = sum((m / tot) ** alpha for m in masses.values())
     for g, m in masses.items():
         p = m / tot
-        want = round(min(1.0, frac * ((p**alpha) / z) / p), 6)
+        raw = min(1.0, frac * ((p**alpha) / z) / p)
+        want = float(Decimal(repr(raw)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
         # a group may vanish from `kept` if its sampled-in set is empty;
         # only compare rates for groups that surfaced
         if g in got:

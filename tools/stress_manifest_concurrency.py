@@ -231,9 +231,11 @@ def _cas_worker(args: tuple) -> int:
     """One read-modify-write process: resolve the snapshot, claim EXACTLY
     version+1 with expectedVersion, retry on ConcurrentManifestWriteError.
     The resolved base version is embedded in the staged file name so the
-    audit can verify the CAS property externally. Returns its conflict
-    count."""
-    d, wid, n = args
+    audit can verify the CAS property externally. Waits on ``start`` after
+    its imports so every worker begins committing at once (otherwise spawn
+    jitter often lets the workers run one after another, uncontended).
+    Returns its conflict count."""
+    d, wid, n, start = args
     from pyspark.sql.types import LongType, StructField, StructType
 
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
@@ -246,6 +248,7 @@ def _cas_worker(args: tuple) -> int:
     schema = StructType([StructField("id", LongType())])
     conflicts = 0
     done = 0
+    start.wait(timeout=120)
     while done < n:
         base = _resolve_state(d)["version"]
         name = f"rmw-{wid:05d}-{done:04d}-base{base:08d}.jsonl"
@@ -282,9 +285,15 @@ def run_cas_rmw(d: str, n_procs: int, commits_per_proc: int) -> dict:
 
     os.makedirs(d, exist_ok=True)
     t0 = time.time()
-    with mp.get_context("spawn").Pool(n_procs) as pool:
+    ctx = mp.get_context("spawn")
+    # one task per pool process: a worker blocked on the barrier holds its
+    # task, so each of the n_procs tasks lands on a distinct process
+    with ctx.Manager() as mgr, ctx.Pool(n_procs) as pool:
+        start = mgr.Barrier(n_procs)
         conflicts = pool.map(
-            _cas_worker, [(d, w, commits_per_proc) for w in range(n_procs)]
+            _cas_worker,
+            [(d, w, commits_per_proc, start) for w in range(n_procs)],
+            chunksize=1,
         )
     wall = time.time() - t0
     total = n_procs * commits_per_proc

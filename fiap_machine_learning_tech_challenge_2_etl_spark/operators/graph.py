@@ -21,9 +21,20 @@ all (SURVEY.md §2.13) — this is extension surface, built Spark-first:
 * each round ``localCheckpoint``s the label frame: without lineage
   truncation the plan doubles per iteration and the driver, not the data,
   becomes the bottleneck;
-* convergence is detected with a count of changed labels — a driver-side
+* convergence is detected with the exact label sum — a driver-side
   scalar per round (metadata decision, same class as SURVEY.md §2.8 A1),
   never a ``collect()`` of row data.
+
+The fixed-round operators beside it (PageRank, BFS, label propagation,
+weighted shortest paths) share two pieces: ``_symmetric_edges`` builds,
+sizes and frees the checkpointed undirected edge list every operator
+iterates over, and ``_min_cost_rounds`` is the one delta-frontier
+relaxation behind both shortest paths and BFS (BFS is unit weights).
+Each of their rounds is ONE join against the edge list; a vertex's own
+term, a seed override or a frontier comparison is a union branch inside
+the round's aggregate or window, not a second join (the move
+``_cc_round`` made for components, whose second join is the pointer
+jump).
 """
 
 from __future__ import annotations
@@ -154,6 +165,53 @@ def _round_shuffle_width(spark, n_edges: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+@contextmanager
+def _symmetric_edges(edges: DataFrame, src: str, dst: str, weight=None, combine=None):
+    """The undirected edge list every operator here iterates over, as one
+    checkpoint ``(a, b)`` — or ``(a, b, w)`` when ``combine`` (an
+    aggregate such as ``F.min``/``F.sum``) merges parallel edges' long
+    weights, 1 per edge without a ``weight`` column. Yields ``(sym,
+    n_raw)`` with the shuffle width context entered for the caller's
+    rounds; ``sym`` is freed on exit, also when a round fails.
+
+    TWO-PHASE materialization. Phase 1 checkpoints the RAW pair list:
+    map-side only (no shuffle, so no per-task memory hazard at any
+    width), it runs the expensive upstream pair generation (e.g. a
+    thresholded block matmul) exactly once, and its count sizes the
+    shuffle width. Phase 2 — the symmetrize shuffle AND every round —
+    then runs INSIDE the width context: the 200x stress showed the
+    edge-build aggregate itself OOMs at session width (234M rows / 32
+    partitions) before any round starts, so the width must cover it. The
+    raw checkpoint is LAZY: the count right after is the materializing
+    action, so checkpoint+count costs ONE pass over the pair generation
+    instead of two jobs (sf0.1 dedup_cluster_cc min-of-4: lazy 3.91 s vs
+    eager 4.20 s, kept because one job is structurally right)."""
+    cols = [F.col(src).alias("a"), F.col(dst).alias("b")]
+    if combine is not None:
+        w = F.col(weight) if weight is not None else F.lit(1)
+        cols.append(w.cast("long").alias("w"))
+    raw = edges.select(*cols).localCheckpoint(eager=False)
+    n_raw = raw.count()
+    with _round_shuffle_width(edges.sparkSession, 2 * n_raw):
+        both = raw.union(
+            raw.select(F.col("b").alias("a"), F.col("a").alias("b"), *raw.columns[2:])
+        )
+        if combine is None:
+            both = both.distinct()
+        else:
+            both = both.groupBy("a", "b").agg(combine("w").cast("long").alias("w"))
+        sym = both.localCheckpoint()
+        _free_checkpoint(raw)
+        # the symmetrized edge blocks are the biggest storage consumer at
+        # 100x scale — free them the moment the rounds end instead of
+        # waiting for the async py4j/ContextCleaner chain (back-to-back
+        # graph ops stacking stale edge lists was half the 100x OOM)
+        try:
+            yield sym, n_raw
+        finally:
+            _free_checkpoint(sym)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -178,33 +236,7 @@ def connected_components(
     scale-invariant because disjoint replicas preserve both structure
     and relative id placement.
     """
-    # TWO-PHASE edge materialization. Phase 1 checkpoints the RAW pair
-    # list: map-side only (no shuffle, so no per-task memory hazard at
-    # any width), it runs the expensive upstream pair generation (e.g. a
-    # thresholded block matmul) exactly once, and its count sizes the
-    # shuffle width. Phase 2 — the symmetrize+distinct shuffle AND every
-    # round — then runs INSIDE the width context: the 200x stress showed
-    # the edge-build aggregate itself OOMs at session width (234M rows /
-    # 32 partitions) before any round starts, so the width must cover it.
-    # The checkpoint is LAZY (eager=False): the count right after is the
-    # materializing action, so checkpoint+count costs ONE pass over the
-    # pair generation instead of two jobs. Back-to-back min-of-4 A/B at
-    # bench scale (sf0.1, dedup_cluster_cc): lazy 3.91 s vs eager
-    # 4.20 s — a ~0.3 s edge, within this VM's recorded load variance,
-    # kept because one job is structurally right. Semantics identical at
-    # any scale: materialization still happens at the count, before the
-    # width context and before any shuffle.
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    n_raw = raw.count()
-    with _round_shuffle_width(spark, 2 * n_raw):
-        sym = (
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint()
-        )
-        _free_checkpoint(raw)
-
+    with _symmetric_edges(edges, src, dst) as (sym, n_raw):
         # r16: the label loop runs over EDGE ENDPOINTS only. An isolated
         # vertex has no neighbor, so its label provably never moves —
         # carrying it through every round only inflated the per-round
@@ -213,23 +245,13 @@ def connected_components(
         # Isolated vertices append as their own singleton component
         # AFTER the loop, one anti-join, outside the O(rounds) cost.
         endpoints = sym.select(F.col("a").alias("vertex")).distinct()
-        # labels is its own checkpoint; the symmetrized edge blocks (the
-        # biggest storage consumer at 100x scale) are dead weight the
-        # moment the loop ends — free them now instead of waiting for the
-        # async py4j/ContextCleaner chain (back-to-back graph ops each
-        # build their own edge list, and the stale ones stacking up was
-        # half the 100x OOM). finally: the non-convergence raise must not
-        # leak the biggest checkpoint either.
-        try:
-            labels = _cc_loop(
-                sym,
-                endpoints,
-                max_iter,
-                stats,
-                broadcast_labels=n_raw <= _CC_BROADCAST_EDGES,
-            )
-        finally:
-            _free_checkpoint(sym)
+        labels = _cc_loop(
+            sym,
+            endpoints,
+            max_iter,
+            stats,
+            broadcast_labels=n_raw <= _CC_BROADCAST_EDGES,
+        )
         if vertices is not None:
             singles = (
                 vertices.select(F.col(vertex_col).alias("vertex"))
@@ -405,40 +427,19 @@ def pagerank_fixed(
     makes the op ORACLE-ABLE (and is standard practice for rank features
     at corpus scale anyway).
 
-    Plan: one shuffle to build the weighted symmetric edge list (reused
-    every round via localCheckpoint — same lineage-truncation rationale as
+    Plan: one shuffle to build the weighted symmetric edge list, joined
+    once with the weighted degrees (reused every round via
+    localCheckpoint — same lineage-truncation rationale as
     connected_components), then per round one equi-join of ranks onto
     edges partitioned by source plus one destination-keyed hash aggregate
-    with map-side partial sums. N is a one-off metadata count (driver
-    scalar, same class as the CC convergence counter).
+    with map-side partial sums. Every vertex adds one zero contribution
+    to that aggregate, so a vertex nothing flows into still gets its
+    teleport rank without a per-round join against the vertex set.
 
     Returns ``(vertex, wdeg, rank6)`` — relative-to-uniform rank in
     micro-units (BIGINT; uniform == 1_000_000, mean stays ~1e6).
     """
-    w = (
-        F.col(weight).cast("long")
-        if weight is not None
-        else F.lit(1).cast("long")
-    )
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"), w.alias("w"))
-    # TWO-PHASE edge materialization (same rationale as
-    # connected_components): phase 1 checkpoints the raw directed pair
-    # list map-side only — it runs the upstream pair generation exactly
-    # once and its count sizes the shuffle width; phase 2 (the
-    # symmetrize+sum aggregate, the degree join, and every rank round)
-    # runs INSIDE the width context. The 200x stress OOM'd in the edge
-    # aggregate itself at session width, before the first round.
-    raw = e.localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    n_raw = raw.count()
-    with _round_shuffle_width(spark, 2 * n_raw):
-        sym = (
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
-            .groupBy("a", "b")
-            .agg(F.sum("w").cast("long").alias("w"))
-            .localCheckpoint()
-        )
-        _free_checkpoint(raw)
+    with _symmetric_edges(edges, src, dst, weight, F.sum) as (sym, _):
         # deg is vertex-sized — checkpointing it lets the (edge-sized)
         # sym blocks be freed as soon as edg materializes, instead of
         # holding TWO full edge frames for the whole call
@@ -449,73 +450,44 @@ def pagerank_fixed(
         )
         edg = sym.join(deg, "a").localCheckpoint()
         _free_checkpoint(sym)
-
-        universe = (
-            edg.select(F.col("a").alias("vertex")).distinct().localCheckpoint()
-        )
-        n = universe.count()
-        if n == 0:
-            # empty graph: empty result with the contract schema, not a
-            # ZeroDivisionError out of the teleport term. Built fresh
-            # (not as a projection of universe) so every phase-1
-            # checkpoint — edg, deg, universe — can be freed on this
-            # exit path too, matching the normal path's discipline.
-            shape = universe.withColumn(
-                "wdeg", F.lit(0).cast("long")
-            ).withColumn("rank6", F.lit(0).cast("long"))
-            result = spark.createDataFrame([], shape.schema)
-            _free_checkpoint(edg)
-            _free_checkpoint(deg)
-            _free_checkpoint(universe)
-            return result
-        ranks = universe.withColumn("rank6", F.lit(1_000_000).cast("long"))
-        # the loop below is the long-running part; a mid-round failure
-        # (task OOM, interrupt) must not leak the edge-sized edg block —
-        # same finally discipline as connected_components
-        ok = False
+        # the result is its own checkpoint, so every phase-1 frame is
+        # freed here — after a mid-round failure (task OOM, interrupt) too
         try:
-            ranks = _pagerank_rounds(edg, universe, ranks, iters, broadcast_ranks)
-            ok = True
+            return _pagerank_rounds(edg, deg, iters, broadcast_ranks)
         finally:
             _free_checkpoint(edg)
-            _free_checkpoint(universe)
-            if not ok:
-                _free_checkpoint(deg)
-    return ranks.join(
-        deg.select(F.col("a").alias("vertex"), "wdeg"), "vertex"
-    ).select("vertex", "wdeg", "rank6")
+            _free_checkpoint(deg)
 
 
 def _pagerank_rounds(
-    edg: DataFrame,
-    universe: DataFrame,
-    ranks: DataFrame,
-    iters: int,
-    broadcast_ranks: bool,
+    edg: DataFrame, deg: DataFrame, iters: int, broadcast_ranks: bool
 ) -> DataFrame:
+    # with broadcast_ranks the per-round edge-side shuffle disappears
+    # entirely: the vertex-sized rank frame ships to the (checkpointed,
+    # in-place) edge partitions and each round costs ONE
+    # destination-keyed aggregate. Right whenever |V| fits a broadcast
+    # (bipartite dim graphs, near-dup clusters); leave False for
+    # web-scale vertex sets, where the shuffle join is the honest plan.
+    hint = F.broadcast if broadcast_ranks else (lambda df: df)
+    # the vertex set: a null id never matches an equi-join, so its row
+    # (if any) carries through the rounds and drops at the final join
+    universe = deg.select(F.col("a").alias("vertex"))
+    zero = universe.withColumn("c6", F.lit(0).cast("long"))
+    ranks = universe.withColumn("rank6", F.lit(1_000_000).cast("long"))
     for _ in range(iters):
-        # with broadcast_ranks the per-round edge-side shuffle
-        # disappears entirely: the vertex-sized rank frame ships to
-        # the (checkpointed, in-place) edge partitions and each round
-        # costs ONE destination-keyed aggregate. Right whenever |V|
-        # fits a broadcast (bipartite dim graphs, near-dup clusters);
-        # leave False for web-scale vertex sets, where the shuffle
-        # join is the honest plan.
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = edg.join(rank_side, edg["a"] == rank_side["vertex"]).select(
+        r = hint(ranks)
+        contrib = edg.join(r, edg["a"] == r["vertex"]).select(
             F.col("b").alias("vertex"),
             F.expr("rank6 * w div wdeg").cast("long").alias("c6"),
         )
-        inflow = contrib.groupBy("vertex").agg(
-            F.sum("c6").cast("long").alias("s6")
-        )
         ranks = (
-            universe.join(inflow, "vertex", "left")
+            contrib.unionByName(zero)
+            .groupBy("vertex")
+            .agg(F.sum("c6").cast("long").alias("s6"))
             .select(
                 "vertex",
                 F.expr(
-                    "CAST((150000 * CAST(1000000 AS BIGINT)"
-                    " + 850000 * coalesce(s6, 0)) "
+                    "CAST((150000 * CAST(1000000 AS BIGINT) + 850000 * s6) "
                     "div 1000000 AS BIGINT)"
                 ).alias("rank6"),
             )
@@ -524,11 +496,67 @@ def _pagerank_rounds(
     # rounds are lazy plans, so without this they would execute at the
     # caller's session width whenever the result is first consumed —
     # exactly the unbounded-task-memory hazard the context exists to
-    # prevent. One eager checkpoint of a VERTEX-sized frame (cheap;
-    # the per-round edge frames stay lazy, per the negative result on
-    # per-round checkpoints in BENCH_NOTES). Once it materializes, the
-    # caller's finally block frees edg/universe — on success AND failure.
-    return ranks.localCheckpoint()
+    # prevent. One eager checkpoint of a VERTEX-sized frame (cheap; the
+    # per-round edge frames stay lazy, per the negative result on
+    # per-round checkpoints in BENCH_NOTES).
+    return (
+        ranks.join(deg.select(F.col("a").alias("vertex"), "wdeg"), "vertex")
+        .select("vertex", "wdeg", "rank6")
+        .localCheckpoint()
+    )
+
+
+def _min_cost_rounds(
+    sym: DataFrame, seeds: DataFrame, seed_col: str, iters: int, out: str
+) -> DataFrame:
+    """DELTA-FRONTIER relaxation over ``sym = (a, b, w)``: ``iters``
+    rounds of ``cost(b) <- min(cost(b), cost(a) + w)`` from cost 0 at
+    every seed, where only vertices whose cost moved last round relax
+    their edges. Result-identical to full relaxation round for round
+    (an unmoved vertex's candidates were all subsumed last round), while
+    round k costs O(|vertices moved in round k-1|) instead of
+    O(|k-hop ball|) — on the chain-like graphs connected_components
+    describes, O(d^2) total re-expansion otherwise.
+
+    Each round is ONE frontier-to-edges equi-join plus ONE aggregate over
+    the old costs UNION the candidates, which yields both the new cost
+    and the ``moved`` flag (``old IS NULL OR cand < old``). The next
+    frontier is a filter of the round's own eager checkpoint, so no
+    comparison join against the previous round is needed and that
+    round's checkpoint is freed as soon as the new one materializes.
+
+    Returns ``(vertex, <out>)``, one row per vertex reached."""
+    # duplicate seed rows collapse here (all carry cost 0), so the
+    # iters=0 path honors the one-row-per-vertex contract too
+    cost = (
+        seeds.select(F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias(out))
+        .distinct()
+        .localCheckpoint()
+    )
+    frontier = cost
+    none = F.lit(None).cast("long")
+    for _ in range(iters):
+        cand = frontier.join(sym, frontier["vertex"] == sym["a"]).select(
+            F.col("b").alias("vertex"),
+            none.alias("old"),
+            (F.col(out) + F.col("w")).cast("long").alias("cand"),
+        )
+        nxt = (
+            cost.select("vertex", F.col(out).alias("old"), none.alias("cand"))
+            .unionByName(cand)
+            .groupBy("vertex")
+            .agg(F.min("old").alias("old"), F.min("cand").alias("cand"))
+            .select(
+                "vertex",
+                F.least("old", "cand").alias(out),
+                (F.col("old").isNull() | (F.col("cand") < F.col("old"))).alias("moved"),
+            )
+            .localCheckpoint()
+        )
+        _free_checkpoint(cost)
+        cost = nxt
+        frontier = nxt.filter("moved")
+    return cost.select("vertex", out)
 
 
 def bfs_hops(
@@ -542,74 +570,21 @@ def bfs_hops(
     """Multi-source BFS with a FIXED round count: the minimum hop count
     from any seed vertex, for every vertex within ``iters`` hops — the
     reachability/expansion primitive (e.g. "everything within 3 links of
-    a known-bad node"). Third Pregel-style iterative op here after
-    connected components and PageRank, same engineering: edges
-    symmetrized + deduped + localCheckpoint'ed once, then each round is
-    ONE frontier-to-edges equi-join plus one min-aggregate, with the
-    label frame checkpointed per round to truncate lineage. Fixed rounds
-    + integer min make the result a pure function of the graph
-    (oracle-able by unrolling); vertices not reached in ``iters`` hops
-    are absent by contract.
+    a known-bad node").
+
+    BFS is shortest_paths_weighted over unit weights: the same
+    ``_min_cost_rounds`` relaxation, one frontier-to-edges equi-join plus
+    one min-aggregate per round over checkpointed symmetric edges. A
+    vertex first reached in round k has hop k and never improves, so
+    "cost moved" is exactly "newly reached" and the frontier is the last
+    round's new layer. Fixed rounds + integer min make the result a pure
+    function of the graph (oracle-able by unrolling); vertices not
+    reached in ``iters`` hops are absent by contract.
 
     Returns ``(vertex, hop)`` with hop in [0, iters].
     """
-    # two-phase edge materialization: raw pair checkpoint map-side, then
-    # the symmetrize shuffle and every round inside the width context
-    # (see connected_components)
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(eager=False)
-    n_raw = raw.count()
-    with _round_shuffle_width(edges.sparkSession, 2 * n_raw):
-        sym = (
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint()
-        )
-        _free_checkpoint(raw)
-        # duplicate seed rows collapse here (all carry hop 0), so the
-        # iters=0 path honors the one-row-per-vertex contract too
-        reached = (
-            seeds.select(
-                F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias("hop")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        # DELTA-FRONTIER rounds: only vertices reached LAST round expand.
-        # BFS hops never improve once set (a vertex first reached in
-        # round k has hop k — every shorter path would have reached it
-        # earlier), so already-settled vertices can only regenerate
-        # candidates the min-aggregate discards; joining the full
-        # accumulated set against edges every round would make round k
-        # cost O(|k-hop ball|) instead of O(|layer k|) — on the chain-like
-        # graphs CC's docstring describes, O(d^2) total re-expansion.
-        try:
-            frontier = reached
-            to_free = None
-            for _ in range(iters):
-                nxt = frontier.join(sym, frontier["vertex"] == sym["a"]).select(
-                    F.col("b").alias("vertex"),
-                    (F.col("hop") + F.lit(1)).cast("long").alias("hop"),
-                )
-                prev = reached
-                reached = (
-                    reached.unionByName(nxt)
-                    .groupBy("vertex")
-                    .agg(F.min("hop").cast("long").alias("hop"))
-                    .localCheckpoint()
-                )
-                # the new frontier = newly reached vertices; it references
-                # prev's checkpoint, so prev's free is deferred ONE round
-                # (storage holds <= 3 vertex frames instead of 2)
-                frontier = reached.join(prev, "vertex", "left_anti")
-                if to_free is not None:
-                    _free_checkpoint(to_free)
-                to_free = prev
-            if to_free is not None:
-                _free_checkpoint(to_free)
-        finally:
-            # a mid-round failure must not leak the edge-sized sym block
-            _free_checkpoint(sym)
-    return reached
+    with _symmetric_edges(edges, src, dst, combine=F.min) as (sym, _):
+        return _min_cost_rounds(sym, seeds, seed_col, iters, "hop")
 
 
 def label_propagation(
@@ -635,7 +610,9 @@ def label_propagation(
 
     Per round: labeled frame ⋈ checkpointed symmetric edges, a
     (vertex, label) weighted vote aggregate (map-side partials), and a
-    per-vertex arg-max via one ranked window — all equi-joins and hash
+    per-vertex arg-max via one ranked window that the seed rows enter
+    too, flagged ``is_seed`` and ordered first — so a seed keeps its
+    label with no per-round anti-join — all equi-joins and hash
     aggregates; label frame localCheckpoint'ed per round. Integer
     weights + total-order tie-break make every round bit-replicable in
     SQL. Unlabeled vertices with no labeled neighbor stay absent.
@@ -644,20 +621,9 @@ def label_propagation(
     """
     from pyspark.sql.window import Window
 
-    w = (
-        F.col(weight).cast("long")
-        if weight is not None
-        else F.lit(1).cast("long")
-    )
-    # two-phase edge materialization (see connected_components)
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b"), w.alias("w")
-    ).localCheckpoint(eager=False)
-    n_raw = raw.count()
     # one label per seed vertex, DETERMINISTICALLY: duplicate seed rows
-    # would otherwise survive every round's `.unionByName(seeds)`,
-    # double-count their vertex's vote, and multiply the final is_seed
-    # join's output — conflicting labels resolve to the smallest (the
+    # would otherwise double-count their vertex's vote and take several
+    # window ranks — conflicting labels resolve to the smallest (the
     # same total-order tie-break the per-round arg-max uses)
     seeds = (
         seed_labels.select(
@@ -665,50 +631,34 @@ def label_propagation(
         )
         .groupBy("vertex")
         .agg(F.min("label").alias("label"))
+        .withColumn("votes", F.lit(None).cast("long"))
+        .withColumn("is_seed", F.lit(True))
         .localCheckpoint()
     )
-    labels = seeds
-    win = Window.partitionBy("vertex").orderBy(F.col("votes").desc(), "label")
-    with _round_shuffle_width(edges.sparkSession, 2 * n_raw):
-        sym = (
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
-            .groupBy("a", "b")
-            .agg(F.sum("w").cast("long").alias("w"))
-            .localCheckpoint()
-        )
-        _free_checkpoint(raw)
-        try:
-            for _ in range(iters):
-                votes = (
-                    labels.join(sym, labels["vertex"] == sym["a"])
-                    .groupBy(F.col("b").alias("dst"), "label")
-                    .agg(F.sum("w").cast("long").alias("votes"))
-                )
-                winner = (
-                    votes.select(F.col("dst").alias("vertex"), "label", "votes")
-                    .withColumn("rnk", F.row_number().over(win))
-                    .filter(F.col("rnk") == 1)
-                    .select("vertex", "label")
-                )
-                # seeds override propagated labels; everyone else takes the vote
-                prev = labels
-                labels = (
-                    winner.join(seeds.select("vertex"), "vertex", "left_anti")
-                    .unionByName(seeds)
-                    .localCheckpoint()
-                )
-                if prev is not seeds:  # round 1's "previous" IS the seed frame
-                    _free_checkpoint(prev)
-        finally:
-            # a mid-round failure must not leak the edge-sized sym block
-            _free_checkpoint(sym)
-    return labels.join(
-        seeds.select("vertex").withColumn("is_seed", F.lit(True)),
-        "vertex",
-        "left",
-    ).select(
-        "vertex", "label", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
+    win = Window.partitionBy("vertex").orderBy(
+        F.col("is_seed").desc(), F.col("votes").desc(), "label"
     )
+    labels = seeds
+    with _symmetric_edges(edges, src, dst, weight, F.sum) as (sym, _):
+        for _ in range(iters):
+            votes = (
+                labels.join(sym, labels["vertex"] == sym["a"])
+                .groupBy(F.col("b").alias("vertex"), "label")
+                .agg(F.sum("w").cast("long").alias("votes"))
+                .withColumn("is_seed", F.lit(False))
+            )
+            prev = labels
+            labels = (
+                votes.unionByName(seeds)
+                .withColumn("rnk", F.row_number().over(win))
+                .filter(F.col("rnk") == 1)
+                .localCheckpoint()
+            )
+            if prev is not seeds:  # seeds feed every round's window
+                _free_checkpoint(prev)
+    if labels is not seeds:
+        _free_checkpoint(seeds)
+    return labels.select("vertex", "label", "is_seed")
 
 
 def shortest_paths_weighted(
@@ -725,88 +675,20 @@ def shortest_paths_weighted(
     edge weight from any seed vertex, for every vertex reachable within
     ``iters`` edges — BFS's weighted sibling (cheapest supply route,
     lowest-latency dependency chain, min-cost entity link). Edges are
-    treated as undirected: symmetrized with the per-pair MIN weight,
-    deduped, and localCheckpoint'ed once; each round is then ONE
+    treated as undirected: symmetrized with the per-pair MIN weight and
+    localCheckpoint'ed once; the rounds are ``_min_cost_rounds`` — one
     frontier-to-edges equi-join producing ``cost + w`` candidates plus
-    one min-aggregate, with the cost frame checkpointed per round to
-    truncate lineage (the same engineering as bfs_hops /
-    connected_components above). Integer weights + fixed rounds + the
-    order-free integer MIN make the result a pure function of the graph,
-    so an oracle can replay it by unrolling the rounds in SQL. Vertices
-    not reachable within ``iters`` edges are absent by contract; with
-    non-negative weights ``iters`` >= graph diameter gives the true
-    single-source-shortest-path costs.
+    one min-aggregate that also flags which costs moved, with the cost
+    frame checkpointed per round to truncate lineage. Unlike BFS hops a
+    settled cost can later improve via a cheaper longer-hop path, which
+    the ``moved`` flag puts back on the frontier. Integer weights +
+    fixed rounds + the order-free integer MIN make the result a pure
+    function of the graph, so an oracle can replay it by unrolling the
+    rounds in SQL. Vertices not reachable within ``iters`` edges are
+    absent by contract; with non-negative weights ``iters`` >= graph
+    diameter gives the true single-source-shortest-path costs.
 
     Returns ``(vertex, cost)`` with cost the minimal path weight.
     """
-    # two-phase edge materialization (see connected_components)
-    raw = edges.select(
-        F.col(src).alias("a"),
-        F.col(dst).alias("b"),
-        F.col(weight).cast("long").alias("w"),
-    ).localCheckpoint(eager=False)
-    n_raw = raw.count()
-    # duplicate seed rows collapse here (all carry cost 0) so iters=0
-    # honors the one-row-per-vertex contract
-    costs = (
-        seeds.select(
-            F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias("cost")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    with _round_shuffle_width(edges.sparkSession, 2 * n_raw):
-        sym = (
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
-            .groupBy("a", "b")
-            .agg(F.min("w").cast("long").alias("w"))
-            .localCheckpoint()
-        )
-        _free_checkpoint(raw)
-        # DELTA-FRONTIER relaxation (bfs_hops rationale, weighted twist):
-        # only vertices whose cost CHANGED last round relax their edges —
-        # unlike BFS hops a settled cost can later improve via a cheaper
-        # longer-hop path, so the frontier is computed by comparing the
-        # new cost frame against the previous one, not by left_anti.
-        # Result-identical to full relaxation round-for-round: an
-        # unchanged vertex's candidates were all subsumed last round.
-        try:
-            frontier = costs
-            to_free = None
-            for _ in range(iters):
-                relaxed = frontier.join(sym, frontier["vertex"] == sym["a"]).select(
-                    F.col("b").alias("vertex"),
-                    (F.col("cost") + F.col("w")).cast("long").alias("cost"),
-                )
-                prev = costs
-                costs = (
-                    costs.unionByName(relaxed)
-                    .groupBy("vertex")
-                    .agg(F.min("cost").cast("long").alias("cost"))
-                    .localCheckpoint()
-                )
-                # references prev's checkpoint -> prev's free deferred one
-                # round, same as bfs_hops
-                frontier = (
-                    costs.join(
-                        prev.select(
-                            "vertex", F.col("cost").alias("__old_cost")
-                        ),
-                        "vertex",
-                        "left",
-                    )
-                    .filter(
-                        F.col("__old_cost").isNull()
-                        | (F.col("cost") < F.col("__old_cost"))
-                    )
-                    .select("vertex", "cost")
-                )
-                if to_free is not None:
-                    _free_checkpoint(to_free)
-                to_free = prev
-            if to_free is not None:
-                _free_checkpoint(to_free)
-        finally:
-            # a mid-round failure must not leak the edge-sized sym block
-            _free_checkpoint(sym)
-    return costs
+    with _symmetric_edges(edges, src, dst, weight, F.min) as (sym, _):
+        return _min_cost_rounds(sym, seeds, seed_col, iters, "cost")

@@ -5076,7 +5076,9 @@ def q_pagerank_supply_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     as pure-integer Pregel-on-DataFrames. Three rounds, micro-unit BIGINT
     arithmetic — bit-identical across engines and shuffle layouts (the
     DuckDB oracle unrolls the same three rounds as chained CTEs). See
-    operators.graph.pagerank_fixed for the per-round plan."""
+    operators.graph.pagerank_fixed for the per-round plan (one rank-to-
+    edges equi-join + one inflow aggregate that every vertex enters with
+    a zero contribution, checkpointed edges)."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import pagerank_fixed
 
     l, o = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
@@ -7096,8 +7098,10 @@ def q_bfs_reachable_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops — the expansion/reachability primitive (fraud rings, blast
     radius, related-entity pulls). Fixed rounds + integer min make it a
     pure function of the graph; the oracle unrolls the identical rounds.
-    See operators.graph.bfs_hops for the per-round plan (one frontier
-    equi-join + one min-aggregate, checkpointed edges and labels)."""
+    See operators.graph.bfs_hops for the per-round plan: the unit-weight
+    case of the shared min-cost relaxation (one frontier equi-join + one
+    min-aggregate that also flags the next frontier, checkpointed edges
+    and hops)."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import bfs_hops
 
     l, o = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
@@ -8161,7 +8165,8 @@ def q_shortest_path_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer MIN make the result a pure function of the graph, replayed
     exactly by the unrolled oracle. See
     operators.graph.shortest_paths_weighted for the per-round plan (one
-    frontier equi-join + one min-aggregate, checkpointed edges/costs)."""
+    frontier equi-join + one min-aggregate that also flags which costs
+    moved, checkpointed edges/costs)."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import (
         shortest_paths_weighted,
     )

@@ -40,6 +40,36 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from fiap_machine_learning_tech_challenge_2_etl_spark.util import validate_interval_body
 
 
+def _parquet_stream(
+    spark: SparkSession,
+    schema: T.StructType,
+    input_dir: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """File-source stream over a landing directory of parquet files,
+    optionally capped at ``max_files_per_trigger`` files per micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        if max_files_per_trigger <= 0:
+            raise ValueError(
+                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
+            )
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def _drain_available_now(stream: DataFrame, fn, checkpoint_dir: str) -> None:
+    """Run ``fn(batch_df, epoch_id)`` on every micro-batch not yet in
+    ``checkpoint_dir`` and return once the backlog is drained."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_incremental_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -79,14 +109,7 @@ def run_incremental_pipeline(
     Checkpoint and output directory are a unit: wiping the checkpoint but
     keeping the output restarts epochs at 0 and breaks the replay filter.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        if max_files_per_trigger <= 0:
-            raise ValueError(
-                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
-            )
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = _parquet_stream(spark, schema, input_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         from fiap_machine_learning_tech_challenge_2_etl_spark.sources.sinks import (
@@ -142,13 +165,7 @@ def run_incremental_pipeline(
         finally:
             out.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_available_now(stream, sink, checkpoint_dir)
 
 
 def windowed_event_counts(
@@ -202,27 +219,31 @@ RUNNING_OUTPUT_SCHEMA = (
 )
 
 
+def _accumulate_running(key, pdfs, n: int, total: float):
+    """Fold one user's micro-batch frames into the running ``(n, total)``;
+    return the new state and the one-row output frame."""
+    import pandas as pd
+
+    batch_n = 0
+    for pdf in pdfs:
+        batch_n += len(pdf)
+        total += float(pdf["value"].sum())
+    n += batch_n
+    out = pd.DataFrame(
+        {"user_id": [key[0]], "batch_n": [batch_n], "running_n": [n], "running_total": [total]}
+    )
+    return (n, total), out
+
+
 def _running_stats_fn(key, pdfs, state: GroupState):
     """Accumulate (count, sum) per user across micro-batches — the
     applyInPandasWithState shape for operators the built-ins can't express
     (e.g. custom decay, model state)."""
-    import pandas as pd
-
-    n, total = state.get if state.exists else (0, 0.0)
-    batch_n = 0
-    for pdf in pdfs:
-        batch_n += len(pdf)
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "batch_n": [batch_n],
-            "running_n": [n],
-            "running_total": [total],
-        }
+    new_state, out = _accumulate_running(
+        key, pdfs, *(state.get if state.exists else (0, 0.0))
     )
+    state.update(new_state)
+    yield out
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
@@ -272,7 +293,6 @@ def running_user_stats_tws(events: DataFrame) -> DataFrame:
             "workers (state-server protocol); install protobuf or use "
             "running_user_stats (applyInPandasWithState) instead"
         )
-    import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
 
     class _RunningStats(StatefulProcessor):
@@ -288,21 +308,11 @@ def running_user_stats_tws(events: DataFrame) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            batch_n = 0
-            for pdf in rows:
-                batch_n += len(pdf)
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "batch_n": [batch_n],
-                    "running_n": [n],
-                    "running_total": [total],
-                }
+            new_state, out = _accumulate_running(
+                key, rows, *(self._state.get() if self._state.exists() else (0, 0.0))
             )
+            self._state.update(new_state)
+            yield out
 
         def close(self) -> None:
             pass
@@ -530,21 +540,11 @@ def drain_interval_join_with_sentinel_flush(
     finally:
         _shutil.rmtree(stage_dir, ignore_errors=True)
     joined = build_join(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(n_left))
-        .parquet(left_in),
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(n_right))
-        .parquet(right_in),
+        _parquet_stream(spark, schema, left_in, n_left),
+        _parquet_stream(spark, schema, right_in, n_right),
     )
-    (
-        joined.writeStream.foreachBatch(
-            lambda b, _e: b.write.mode("append").parquet(out_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_available_now(
+        joined, lambda b, _e: b.write.mode("append").parquet(out_path), checkpoint
     )
 
 
@@ -583,14 +583,7 @@ def materialized_rollup(
     one batch, and a cap breach would wedge the pipeline (the checkpoint
     never commits, each re-run rebuilds the same oversized batch); with
     it the same backfill drains in bounded bites."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        if max_files_per_trigger <= 0:
-            raise ValueError(
-                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
-            )
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = _parquet_stream(spark, schema, input_dir, max_files_per_trigger)
 
     def refresh(batch_df: DataFrame, epoch_id: int) -> None:
         # null-ts rows can never land in a day partition (to_date -> null,
@@ -620,13 +613,7 @@ def materialized_rollup(
         agg = touched_days_rollup(base, days, ts_col, key_col, value_col)
         write_partitioned_parquet(agg, rollup_dir, ["day"])
 
-    (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_available_now(stream, refresh, checkpoint_dir)
 
 
 def touched_days_rollup(
@@ -750,7 +737,7 @@ def stream_upsert_by_key(
     """
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.sinks import upsert_by_key
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = _parquet_stream(spark, schema, input_dir, None)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = transform(batch_df) if transform is not None else batch_df
@@ -763,13 +750,7 @@ def stream_upsert_by_key(
             order_col=dedup_order,
         )
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_available_now(stream, sink, checkpoint_dir)
 
 
 def stream_enrich_with_dim(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import (
@@ -382,24 +383,33 @@ def _cached_rdd_ids(spark) -> set[int]:
     return {infos[i].id() for i in range(len(infos))}
 
 
-def test_iterative_loops_free_superseded_checkpoints(spark):
-    """The 100x stress OOM'd because superseded per-round localCheckpoint
-    blocks waited on the async ContextCleaner (BENCH_NOTES round 5). Pin
-    the fix: after connected_components returns, storage may hold the
-    RESULT checkpoint but none of the per-round label frames or the
-    symmetrized edge list — at most 2 new cached RDDs (result + at most
-    one in-flight cleanup), never O(rounds)."""
-    from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import (
-        connected_components as cc,
-    )
+def _run_op(spark, op, edges, iters=3):
+    """Run one iterative graph op on a weighted ``(src, dst, w)`` edge
+    list seeded at vertex 1; return ``(result, rounds)``."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.operators import graph as G
 
-    # chain graph => several pointer-jumping rounds => several round frames
-    edges = _edges(spark, [(i, i + 1) for i in range(1, 40)])
+    seeds = spark.createDataFrame([(1,)], "vertex long")
+    if op == "connected_components":
+        stats: dict = {}
+        out = G.connected_components(edges.select("src", "dst"), stats=stats)
+        return out, stats.get("rounds", 0)
+    if op == "label_propagation":
+        labels = seeds.withColumn("label", F.lit(7).cast("long"))
+        return G.label_propagation(edges, labels, weight="w", iters=iters), iters
+    if op == "pagerank_fixed":
+        return G.pagerank_fixed(edges, weight="w", iters=iters), iters
+    fn = getattr(G, op)
+    return fn(edges, seeds, iters=iters), iters
+
+
+def _assert_no_round_checkpoints_leak(spark, op):
+    # chain graph => several pointer-jumping rounds for components, and
+    # a frontier that keeps moving for every fixed-round op
+    edges = _wedges(spark, [(i, i + 1, 1 + i % 3) for i in range(1, 40)])
     before = _cached_rdd_ids(spark)
-    stats: dict = {}
-    out = cc(edges, stats=stats)
+    out, rounds = _run_op(spark, op, edges, iters=6)
     out.count()
-    assert stats["rounds"] >= 3  # the loop really iterated
+    assert rounds >= 3  # the loop really iterated
     # unpersist(blocking=False) is async: the tail-end frees (last round
     # frame + edge list) may still be in flight — poll briefly instead of
     # flaking on scheduler timing; a real leak is O(rounds) and never drains
@@ -412,9 +422,71 @@ def test_iterative_loops_free_superseded_checkpoints(spark):
             break
         _time.sleep(0.2)
     assert len(new) <= 2, (
-        f"{len(new)} new cached RDDs after {stats['rounds']} rounds — "
+        f"{len(new)} new cached RDDs after {rounds} rounds of {op} — "
         "superseded round checkpoints are leaking again"
     )
+
+
+def test_iterative_loops_free_superseded_checkpoints(spark):
+    """The 100x stress OOM'd because superseded per-round localCheckpoint
+    blocks waited on the async ContextCleaner (BENCH_NOTES round 5). Pin
+    the fix: after connected_components returns, storage may hold the
+    RESULT checkpoint but none of the per-round label frames or the
+    symmetrized edge list — at most 2 new cached RDDs (result + at most
+    one in-flight cleanup), never O(rounds)."""
+    _assert_no_round_checkpoints_leak(spark, "connected_components")
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["bfs_hops", "shortest_paths_weighted", "label_propagation", "pagerank_fixed"],
+)
+def test_fixed_round_loops_free_superseded_checkpoints(spark, op):
+    """The same storage bound for every fixed-round loop: the relaxation
+    frees each round's checkpoint once the next materializes, label
+    propagation its seed frame after the last round, and PageRank its
+    edge and degree frames on the way out."""
+    _assert_no_round_checkpoints_leak(spark, op)
+
+
+@pytest.mark.parametrize(
+    "op, extra",
+    [
+        ("shortest_paths_weighted", 0),
+        ("bfs_hops", 0),
+        ("label_propagation", 0),
+        ("pagerank_fixed", 2),
+    ],
+)
+def test_fixed_round_ops_join_edges_once_per_round(spark, monkeypatch, op, extra):
+    """Each round of the fixed-round ops is ONE join against the edge
+    list: the frontier comparison (SSSP/BFS), the seed override (label
+    propagation) and the vertex-set join (PageRank) are union branches
+    of the round's aggregate or window. PageRank adds the degree join
+    before the rounds and the degree lookup after them."""
+    import random
+
+    rng = random.Random(5)
+    edges = _wedges(
+        spark,
+        [(rng.randrange(30), rng.randrange(30), rng.randrange(1, 9)) for _ in range(70)],
+    )
+    # PySpark 4's classic DataFrame is a subclass of pyspark.sql.DataFrame;
+    # patch the class the frames really are, or the count stays 0
+    cls = type(edges)
+    calls = []
+    orig = cls.join
+
+    def counting_join(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "join", counting_join)
+    iters = 3
+    out, _ = _run_op(spark, op, edges, iters=iters)
+    monkeypatch.undo()
+    assert out.count() > 0
+    assert len(calls) == iters + extra, f"{op}: {len(calls)} joins at iters={iters}"
 
 
 def test_free_checkpoint_leaves_multi_leaf_frames_alone(spark):

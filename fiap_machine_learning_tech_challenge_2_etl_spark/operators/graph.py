@@ -427,6 +427,11 @@ def pagerank_fixed(
     makes the op ORACLE-ABLE (and is standard practice for rank features
     at corpus scale anyway).
 
+    A vertex whose incident weights sum to 0 (zero-weight edges, or
+    weights that cancel) has no outflow share to divide by: it sends no
+    rank (its contributions are NULL, which the inflow sum skips) and
+    keeps its teleport share plus whatever its neighbours send it.
+
     Plan: one shuffle to build the weighted symmetric edge list, joined
     once with the weighted degrees (reused every round via
     localCheckpoint — same lineage-truncation rationale as
@@ -478,7 +483,7 @@ def _pagerank_rounds(
         r = hint(ranks)
         contrib = edg.join(r, edg["a"] == r["vertex"]).select(
             F.col("b").alias("vertex"),
-            F.expr("rank6 * w div wdeg").cast("long").alias("c6"),
+            F.expr("rank6 * w div nullif(wdeg, 0)").cast("long").alias("c6"),
         )
         ranks = (
             contrib.unionByName(zero)

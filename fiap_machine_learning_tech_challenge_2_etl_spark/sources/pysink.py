@@ -119,9 +119,11 @@ per-batch manifests are two independent version spaces with no global
 order, so each commit path checks the directory's existing family FIRST
 and refuses to publish into the other's log (the check is name-level —
 nothing is opened — and runs before anything becomes visible).
-Directories written by the pre-log sink generation (a single bare
-``_MANIFEST`` file) stay readable: the bare manifest is treated as
-version 0 of the batch family.
+The schema-less pre-v2 generation (a single bare ``_MANIFEST`` file, or
+versioned commits that hold files but record no ``schema_json``) is
+not read: the bare file fails the name scan, so reads and writes into
+such a directory raise before anything is published, and a no-schema
+commit fails the schema pin of every reader.
 
 Speculative/retried tasks fall out of the same protocol: each attempt
 stages under a fresh uuid, but only the attempts whose commit messages
@@ -456,9 +458,9 @@ def _scan_names(path: str) -> tuple[str | None, list, list]:
     this is safe (and cheap) on every commit. Returns ``(kind, commits,
     checkpoints)`` where kind is 'batch' / 'stream' / None (empty),
     commits is ``[(version, filename)]`` sorted, checkpoints likewise.
-    A single bare ``_MANIFEST`` (the pre-log sink generation) is folded
-    in as version 0 of the batch family. A directory holding BOTH
-    families is rejected — their version spaces have no global order."""
+    A single bare ``_MANIFEST`` (the schema-less pre-v2 generation) is
+    refused, and so is a directory holding BOTH families — their
+    version spaces have no global order."""
     batch: list[tuple[int, str]] = []
     stream: list[tuple[int, str]] = []
     ckpts: list[tuple[int, str]] = []
@@ -471,10 +473,12 @@ def _scan_names(path: str) -> tuple[str | None, list, list]:
             elif f.startswith(_B_PREFIX):
                 stream.append((int(f[len(_B_PREFIX):]), f))
             elif f == MANIFEST:
-                # legacy single-manifest directory: readable as the
-                # batch log's version 0 (it predates versioning, so it
-                # is by definition the oldest commit)
-                batch.append((0, f))
+                raise ValueError(
+                    f"{path} holds a bare {MANIFEST} written by the "
+                    "schema-less pre-v2 manifest-log generation, which is "
+                    "no longer read; re-write the table with the current "
+                    "sink (read its files with spark.read.json, overwrite)"
+                )
             elif f.startswith(_CKPT_PREFIX):
                 # two on-disk checkpoint formats: bare JSON
                 # (_CHECKPOINT.v00000016, pre-r14) and parquet
@@ -598,12 +602,13 @@ def _publish_checkpoint(path: str, v: int, ck: dict) -> None:
 
 def _meta_of(man: dict) -> dict:
     """The schema/format identity a commit contributes to a resolved
-    snapshot (legacy manifests lack schema_json/format — reads fall back
-    to inference for those, still name-checked)."""
+    snapshot, as the commit recorded it. A pre-v2 commit records neither
+    ``schema_json`` nor ``format``; its identity carries ``None`` there
+    and :func:`_pin_read_schema` refuses it."""
     return {
         "fields": man.get("fields"),
         "schema_json": man.get("schema_json"),
-        "format": man.get("format", "jsonl"),
+        "format": man.get("format"),
     }
 
 
@@ -711,8 +716,8 @@ def _resolve_state(
             man, files, metas, fstats, mapping
         )
     # an empty log reports version 0 ("nothing committed yet" — real
-    # versions start at 1, a legacy bare manifest folds in AT 0), so a
-    # CAS writer's base+1 claim on a fresh directory is v1
+    # versions start at 1), so a CAS writer's base+1 claim on a fresh
+    # directory is v1
     return {"kind": kind, "files": files, "metas": metas,
             "file_stats": fstats, "version": max(last, 0),
             "mapping": mapping}
@@ -1049,8 +1054,7 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         if self.expected_version is not None and self.expected_version < 1:
             raise ValueError(
                 f"expectedVersion must be >= 1 (got {self.expected_version}): "
-                "commit versions start at 1; version 0 is reserved for a "
-                "legacy bare _MANIFEST"
+                "commit versions start at 1"
             )
 
     def _tier_columns(self, opts: dict, option: str, type_ok, supports: str) -> list:
@@ -1536,13 +1540,8 @@ class ManifestLogStreamReader(DataSourceStreamReader):
                 "before a stream can tail it (the schema is read from it)"
             )
         # batch versions start at 1, stream batchIds at 0 — the initial
-        # offset is one below the first consumable version. A legacy bare
-        # _MANIFEST folds in as batch version 0, so a log that has one
-        # starts at -1 (an explicit .schema(...) reader would otherwise
-        # silently skip v0's rows — ADVICE r13).
-        if kind == "batch":
-            return {"v": -1 if (commits and commits[0][0] == 0) else 0}
-        return {"v": -1}
+        # offset is one below the first consumable version
+        return {"v": 0 if kind == "batch" else -1}
 
     def latestOffset(self) -> dict:
         _kind, commits, _ck = _scan_names(self.path)
@@ -1555,65 +1554,26 @@ class ManifestLogStreamReader(DataSourceStreamReader):
         # CDF delete partitions read files STAGED BY EARLIER commits,
         # whose format may differ from the replacing commit's. Staged
         # names carry their format in the extension (part-*.jsonl /
-        # part-*.parquet), so the common case costs ZERO extra manifest
-        # opens — planning stays O(range) at any log depth (the r14
-        # "fmt-map walk" was O(commits) per batch). Only an
-        # extension-less legacy filename triggers the below-range
-        # backfill, and the map is maintained INCREMENTALLY across the
-        # in-range walk so a second replace in the same micro-batch sees
-        # files staged at/after the first one (ADVICE r14: the
-        # build-once map missed those and read parquet bytes as jsonl).
-        fmt_of: dict[str, str] | None = None
-
-        def _fmt_from_name(f: str) -> str | None:
-            if f.endswith(".parquet"):
-                return "parquet"
-            if f.endswith(".jsonl"):
-                return "jsonl"
-            return None
-
+        # part-*.parquet; CLONE and OPTIMIZE keep those names), so
+        # planning opens only the in-range commits — O(range) at any
+        # log depth
         for v, name in commits:
             if not s < v <= e:
                 continue
             man = _load(self.path, name)
             mode = man.get("mode", "append")
-            if fmt_of is not None:
-                mfmt = man.get("format", "jsonl")
-                for f in man["files"]:
-                    fmt_of[f] = mfmt
             if mode == "replace" and self.cdf:
-                removed = man.get("removed_files", [])
-                if (
-                    fmt_of is None
-                    and any(_fmt_from_name(f) is None for f in removed)
-                ):
-                    # legacy extension-less file in the change set: fall
-                    # back to a one-time walk of the commits below this
-                    # one; from here on the walk itself keeps it current
-                    fmt_of = {}
-                    for pv, pname in commits:
-                        if pv >= v:
-                            break
-                        pman = _load(self.path, pname)
-                        pfmt = pman.get("format", "jsonl")
-                        for f in pman["files"]:
-                            fmt_of[f] = pfmt
-                    mfmt = man.get("format", "jsonl")
-                    for f in man["files"]:
-                        fmt_of[f] = mfmt
                 ts = man.get("ts")
                 parts.extend(
                     _CommittedFilesPartition(
-                        self.path, f,
-                        _fmt_from_name(f)
-                        or (fmt_of or {}).get(f, "jsonl"),
+                        self.path, f, _format_of_name(f),
                         change="delete", version=v, ts=ts,
                     )
-                    for f in removed
+                    for f in man.get("removed_files", [])
                 )
                 parts.extend(
                     _CommittedFilesPartition(
-                        self.path, f, man.get("format", "jsonl"),
+                        self.path, f, _recorded_format(man),
                         change="insert", version=v, ts=ts,
                     )
                     for f in man["files"]
@@ -1643,10 +1603,9 @@ class ManifestLogStreamReader(DataSourceStreamReader):
                     "(startingVersion), opt into skipBases=true, or consume "
                     "replaces as a feed with readChangeFeed=true"
                 )
-            fmt = man.get("format", "jsonl")
             parts.extend(
                 _CommittedFilesPartition(
-                    self.path, f, fmt,
+                    self.path, f, _recorded_format(man),
                     change="insert" if self.cdf else None,
                     version=v, ts=man.get("ts"),
                 )
@@ -1756,8 +1715,6 @@ class ManifestLogDataSource(DataSource):
         if not path:
             raise ValueError("manifestlog requires .option('path', ...)")
         state = _resolve_state(path, with_stats=False)
-        if not state["metas"]:
-            raise ValueError(f"no committed manifest files under {path}")
         # column-mapped tables stream under their LOGICAL schema: the
         # mapping is PINNED at stream construction and physical names
         # are immutable, so a mid-stream RENAME cannot shift what any
@@ -1768,12 +1725,6 @@ class ManifestLogDataSource(DataSource):
         _fmt, schema = _snapshot_logical_schema(
             state["metas"], state.get("mapping")
         )
-        if schema is None:
-            raise ValueError(
-                f"the log under {path} predates recorded schemas (legacy "
-                "commits only) — batch-read it via read_manifest_sink and "
-                "rewrite, or pass an explicit .schema(...)"
-            )
         if str(opts.get("readchangefeed", "false")).lower() == "true":
             from pyspark.sql.types import (
                 DoubleType,
@@ -1806,52 +1757,69 @@ def resolve_manifest_files(path: str, version: int | None = None) -> list[str]:
     return [os.path.join(path, name) for name in state["files"]]
 
 
-def _pin_read_schema(metas: list[dict]) -> tuple[str, StructType | None]:
+def _recorded_format(meta: dict) -> str:
+    """The staged format a commit (or a commit's schema/format identity)
+    recorded. Refuses the schema-less pre-v2 generation: a commit that
+    holds files but records no ``schema_json`` has nothing to pin its
+    files' types to."""
+    if not meta.get("schema_json"):
+        raise ValueError(
+            "a resolved commit records no schema_json: it was written by the "
+            "schema-less pre-v2 manifest-log generation, which is no longer "
+            "read; re-write the table with the current sink (read its files "
+            "with spark.read.json, overwrite)"
+        )
+    return meta["format"]
+
+
+def _format_of_name(name: str) -> str:
+    """The staged format a data file's name carries in its extension
+    (``part-*.jsonl`` / ``part-*.parquet``; CLONE and OPTIMIZE keep
+    those names)."""
+    for fmt in ("jsonl", "parquet"):
+        if name.endswith("." + fmt):
+            return fmt
+    raise ValueError(
+        f"data file {name!r} has neither a .jsonl nor a .parquet extension; "
+        "its staged format is unknown"
+    )
+
+
+def _pin_read_schema(metas: list[dict]) -> tuple[str, StructType]:
     """Derive ``(format, schema)`` for a resolved snapshot from the
-    schemas its commits RECORDED at write time. ADDITIVE evolution is
-    legal — the table-format contract: a commit may add new columns, and
-    older files project them as NULL, so the snapshot schema is the
-    commits' field UNION in first-appearance order (every field read
-    nullable — pre-evolution files genuinely lack the new columns). What
+    schemas its commits RECORDED at write time — never by inference:
+    every commit identity in ``metas`` must record ``schema_json`` (see
+    :func:`_recorded_format`), and a snapshot with no commit identity
+    at all (nothing committed at or below the pinned version) has
+    nothing to pin, so both raise. ADDITIVE evolution is legal — the
+    table-format contract: a commit may add new columns, and older files
+    project them as NULL, so the snapshot schema is the commits' field
+    UNION in first-appearance order (every field read nullable —
+    pre-evolution files genuinely lack the new columns). What
     stays a LOUD failure is real drift: the same field name recorded
     with two different types can't be projected, only mis-coerced — so
-    it raises instead of silently type-drifting. Legacy commits without
-    a recorded schema fall back to inference (schema None), with
-    field-set equality still required (inference can't distinguish
-    evolution from drift)."""
+    it raises instead of silently type-drifting."""
     from pyspark.sql.types import StructField
 
-    formats = sorted({m.get("format", "jsonl") for m in metas})
+    if not metas:
+        raise ValueError(
+            "nothing is committed in the resolved snapshot: no manifest log "
+            "at that path, or no commit at or below the pinned version"
+        )
+    formats = sorted({_recorded_format(m) for m in metas})
     if len(formats) > 1:
         raise ValueError(
             f"resolved snapshot mixes staged formats {formats}; commits with "
             "different formats cannot be read as one DataFrame — expire or "
             "overwrite past the older format first"
         )
-    schemas = [m["schema_json"] for m in metas if m.get("schema_json")]
-    if not schemas:
-        field_sets = sorted(
-            {tuple(sorted(m["fields"])) for m in metas if m.get("fields")}
-        )
-        if len(field_sets) > 1:
-            raise ValueError(
-                "schema drift across resolved commits without recorded "
-                f"schemas: the snapshot mixes field sets {field_sets}; "
-                "refusing to infer-merge legacy commits"
-            )
-        return formats[0] if formats else "jsonl", None
-    if len(schemas) < len(metas):
-        raise ValueError(
-            "resolved snapshot mixes schema-recording commits with legacy "
-            "no-schema commits; overwrite past the legacy generation first"
-        )
     merged: dict[str, StructField] = {}
     seen_json = set()
-    for s in schemas:  # commit order: evolution appends, never reorders
-        if s in seen_json:
+    for m in metas:  # commit order: evolution appends, never reorders
+        if m["schema_json"] in seen_json:
             continue
-        seen_json.add(s)
-        for f in StructType.fromJson(json.loads(s)).fields:
+        seen_json.add(m["schema_json"])
+        for f in StructType.fromJson(json.loads(m["schema_json"])).fields:
             have = merged.get(f.name)
             if have is None:
                 merged[f.name] = StructField(f.name, f.dataType, nullable=True)
@@ -2025,11 +1993,11 @@ def version_at_timestamp(path: str, timestamp) -> int:
     clock-skewed later commit with an earlier raw timestamp inherits its
     predecessor's time, so the version→time mapping is monotone and a
     binary search over it is well-defined. Commits that predate recorded
-    timestamps (pre-r14 logs, legacy bare manifests) get effective time
-    0.0 — always reachable, honestly "older than anything". Raises when
-    the timestamp predates the first surviving commit. Opens each
-    surviving commit manifest once (metadata-class, maintenance-path
-    bound — same as DESCRIBE HISTORY)."""
+    timestamps (pre-r14 logs) get effective time 0.0 — always reachable,
+    honestly "older than anything". Raises when the timestamp predates
+    the first surviving commit. Opens each surviving commit manifest
+    once (metadata-class, maintenance-path bound — same as DESCRIBE
+    HISTORY)."""
     import datetime
 
     if isinstance(timestamp, datetime.datetime):
@@ -2066,12 +2034,12 @@ def read_manifest_sink(
     batch log, everything up to the k-th job — and a concurrent IN-FLIGHT
     job is invisible at any pinned version (its commit, if it lands,
     gets a version number > k). The read schema is PINNED to what the
-    resolved commits recorded at write time (never inferred when a
-    recorded schema exists), and the read is distributed — Spark's JSON
-    or parquet reader over the explicit file list. ``prune={col: (lo,
-    hi)}`` additionally drops files whose commit-recorded min/max PROVE
-    they hold no matching row (see :func:`prune_manifest_files`) — a
-    superset guarantee, so pair it with the real ``.filter``.
+    resolved commits recorded at write time (never inferred), and the
+    read is distributed — Spark's JSON or parquet reader over the
+    explicit file list. ``prune={col: (lo, hi)}`` additionally drops
+    files whose commit-recorded min/max PROVE they hold no matching row
+    (see :func:`prune_manifest_files`) — a superset guarantee, so pair
+    it with the real ``.filter``.
     ``timestamp=`` (unix seconds or datetime) is TIMESTAMP AS OF — it
     resolves to a version via :func:`version_at_timestamp` (monotone
     clamp rule documented there); passing both pins is an error."""
@@ -2090,17 +2058,12 @@ def read_manifest_sink(
     else:
         files = [os.path.join(path, name) for name in state["files"]]
     if not files:
-        # an EMPTY snapshot is legal state, not an error, whenever the log
-        # recorded a schema to pin it to (a delete that removed every row,
-        # an overwrite truncate), and so is a provably-empty pruned read:
-        # return the schema-true empty frame (logical view when a column
-        # mapping exists)
-        lschema = _snapshot_logical_schema(state["metas"], mapping)[1]
-        if lschema is not None:
-            return local_relation_df(spark, [], lschema)
-        raise ValueError(
-            f"no committed manifest files under {path}"
-            + (f" at version <= {version}" if version is not None else "")
+        # an EMPTY snapshot is legal state, not an error (a delete that
+        # removed every row, an overwrite truncate), and so is a
+        # provably-empty pruned read: return the schema-true empty frame
+        # (logical view when a column mapping exists)
+        return local_relation_df(
+            spark, [], _snapshot_logical_schema(state["metas"], mapping)[1]
         )
     # the immutable physical names project to the CURRENT (or
     # as-of-version) logical view: renames surface, drops vanish — a pure
@@ -2175,8 +2138,7 @@ def optimize_manifest_sink(
         holds="a stream log — use compact_stream_manifests there",
     )
     base_version = state["version"]
-    fmts = {m.get("format", "jsonl") for m in state["metas"]}
-    fmt = fmts.pop() if len(fmts) == 1 else "parquet"
+    fmt = _pin_read_schema(state["metas"])[0]
     # OPTIMIZE materializes the mapping: it reads the LOGICAL view and
     # overwrites (which resets the mapping), so the rewrite's tiers are
     # the logical names of the surviving physical keys
@@ -2210,8 +2172,7 @@ def _basename_of_uri(uri: str) -> str:
 
 
 def _read_file_list(spark: SparkSession, files: list[str], fmt: str, schema):
-    # schema None: a legacy no-schema log, read by inference
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read.schema(schema)
     return reader.parquet(*files) if fmt == "parquet" else reader.json(files)
 
 
@@ -2234,19 +2195,13 @@ def _snapshot_for_rmw(
     path: str,
 ) -> tuple[dict, str, StructType, StructType, tuple[list[str], list[str]]]:
     """Pin step of the copy-on-write skeleton (:func:`_copy_on_write`):
-    pin the snapshot, pin the recorded schema (legacy no-schema logs are
-    refused — a rewrite must re-stage EXACTLY the recorded types, and
-    inference can't promise that), derive the skipping tiers to
+    pin the snapshot, pin the recorded schema (a rewrite re-stages
+    EXACTLY the recorded types), derive the skipping tiers to
     re-record. Returns ``(state, fmt, physical_schema, logical_schema,
     tiers)``; the logical schema is the column-mapped view the ops work
     in, ``tiers`` is :func:`_rewrite_tiers` of the snapshot."""
     state = _batch_state(path, "copy-on-write commits need")
     fmt, schema = _pin_read_schema(state["metas"])
-    if schema is None:
-        raise ValueError(
-            f"the log under {path} predates recorded schemas; rewrite it "
-            "(optimize after one schema-recording commit) before MERGE/DELETE"
-        )
     lschema = _snapshot_logical_schema(state["metas"], state.get("mapping"))[1]
     return state, fmt, schema, lschema, _rewrite_tiers(state)
 
@@ -2971,14 +2926,12 @@ def _to_physical_schema(schema: StructType, mapping: dict | None) -> StructType:
 
 def _snapshot_logical_schema(metas: list[dict], mapping: dict | None):
     """``(format, logical_schema)`` for a resolved snapshot — the
-    physical pin from :func:`_pin_read_schema` projected through the
-    mapping. Legacy no-schema logs cannot carry a mapping (the
-    rename/drop ops refuse them), so ``schema None`` implies ``mapping
-    None``."""
+    physical pin from :func:`_pin_read_schema` (same refusals) projected
+    through the mapping."""
     from pyspark.sql.types import StructField
 
     fmt, phys = _pin_read_schema(metas)
-    if phys is None or not mapping:
+    if not mapping:
         return fmt, phys
     proj = _logical_projection(phys, mapping)
     return fmt, StructType(
@@ -3022,20 +2975,14 @@ def _mapping_target(
     path: str, op: str, name: str
 ) -> tuple[StructType, list[str], dict, list, str]:
     """The preamble RENAME and DROP COLUMN share: resolve the batch log,
-    pin its recorded physical schema (legacy no-schema logs are refused —
-    nothing pins what ``name`` means in their files) and check ``name``
-    is a current logical column. Returns ``(physical_schema,
-    logical_names, cols, dropped, physical_name)``, ``cols``/``dropped``
-    as :func:`_mapping_parts` gives them."""
+    pin its recorded physical schema and check ``name`` is a current
+    logical column. Returns ``(physical_schema, logical_names, cols,
+    dropped, physical_name)``, ``cols``/``dropped`` as
+    :func:`_mapping_parts` gives them."""
     state = _batch_state(
         path, f"{op.lower().replace(' ', '_')} expects", with_stats=False
     )
     _fmt, phys = _pin_read_schema(state["metas"])
-    if phys is None:
-        raise ValueError(
-            f"the log under {path} predates recorded schemas; rewrite it "
-            f"(optimize) before {op}"
-        )
     proj = _logical_projection(phys, state.get("mapping"))
     names = [l for l, _p, _t in proj]
     if name not in names:
@@ -3059,8 +3006,7 @@ def rename_column_manifest_sink(path: str, old: str, new: str) -> int:
     current logical name, and not any physical name ever used
     (including dropped ones); physical names are never reused, exactly
     so that old files can never be mis-projected. Returns the committed
-    version. Legacy no-schema logs are refused (nothing pins what ``old``
-    means in their files)."""
+    version."""
     phys, names, cols, dropped, physical_old = _mapping_target(
         path, "RENAME COLUMN", old
     )
@@ -3114,16 +3060,13 @@ def _base_manifest(
     manifest = {
         "files": files,
         "n_rows": None,  # not tracked per file outside stats; readers never use it
-        "fields": schema.fieldNames() if schema is not None else sorted(
-            {f for m in state["metas"] for f in (m.get("fields") or [])}
-        ),
+        "fields": schema.fieldNames(),
+        "schema_json": schema.json(),
         "format": fmt,
         "mode": "overwrite",
         "ts": time.time(),
         **provenance,
     }
-    if schema is not None:
-        manifest["schema_json"] = schema.json()
     if file_stats:
         manifest["file_stats"] = file_stats
     if state.get("mapping"):
@@ -3386,12 +3329,11 @@ def manifest_changes(
     if dels is not None:
         return dels
     # no change between the snapshots: empty frame, schema-true
-    fmt, schema = _pin_read_schema(new["metas"] or old["metas"])
+    _fmt, schema = _pin_read_schema(new["metas"] or old["metas"])
     from pyspark.sql.types import StringType, StructField
 
-    base = schema if schema is not None else StructType([])
     return local_relation_df(
-        spark, [], StructType(base.fields + [StructField("_change_type", StringType())])
+        spark, [], schema.add(StructField("_change_type", StringType()))
     )
 
 
@@ -3413,7 +3355,7 @@ def describe_manifest_detail(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(f"no manifest log under {path}")
     mapping = state.get("mapping")
     fmt, lschema = _snapshot_logical_schema(state["metas"], mapping)
-    cols_csv = ",".join(lschema.fieldNames()) if lschema is not None else None
+    cols_csv = ",".join(lschema.fieldNames())
     fstats = state.get("file_stats", {})
     # physical->logical for reporting which LOGICAL columns are covered
     inv = {}
@@ -3525,7 +3467,7 @@ def manifest_history(spark: SparkSession, path: str) -> DataFrame:
                 len(man.get("files", [])),
                 len(man.get("removed_files", [])),
                 ",".join(man.get("fields") or []),
-                man.get("format", "jsonl"),
+                man.get("format"),
                 "compacted_through" in man,
                 float(ts) if ts is not None else None,
             )
@@ -3589,20 +3531,17 @@ def compact_stream_manifests(path: str, upto_batch: int) -> str:
     # the compacted base must present ONE coherent schema — reuse the
     # reader's drift rules so compaction can't paper over a drifted log
     fmt, schema = _pin_read_schema(metas)
-    fields = sorted({f for m in metas for f in (m.get("fields") or [])})
     manifest = {
         "files": files,
         "n_rows": n_rows,
-        "fields": fields,
+        "fields": schema.fieldNames(),
+        "schema_json": schema.json(),
         "format": fmt,
         "mode": "overwrite",
         "batch_id": upto_batch,
         "compacted_through": upto_batch,
         "ts": time.time(),
     }
-    if schema is not None:
-        manifest["schema_json"] = schema.json()
-        manifest["fields"] = schema.fieldNames()
     if fstats:  # the covered files keep their skipping stats
         manifest["file_stats"] = fstats
     published = f"{_B_PREFIX}{upto_batch}"

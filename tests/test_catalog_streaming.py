@@ -199,6 +199,46 @@ def test_incremental_pipeline_exactly_once(spark, tmp_path):
     assert back.filter(F.col("event_date") == "2024-01-01").count() == 5
 
 
+def test_incremental_pipeline_crash_replay_is_idempotent(spark, tmp_path):
+    """Crash replay: a micro-batch whose output was written but whose
+    checkpoint commit was lost (``commits/0`` deleted) re-runs as the
+    SAME epoch on the next drain. The ``__ingest_epoch`` filter drops
+    the first run's rows of that epoch before the rewrite, so the output
+    row multiset is unchanged instead of doubled."""
+    from collections import Counter
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.schemas import EVENTS
+    from fiap_machine_learning_tech_challenge_2_etl_spark.streaming.incremental import (
+        run_incremental_pipeline,
+    )
+
+    src, out, ck = (str(tmp_path / x) for x in ("in", "out", "ck"))
+    os.makedirs(src)
+    _write_events_batch(spark, src, 0, 5, day=1)
+
+    def transform(df):
+        return df.withColumn(
+            "event_date", F.to_date(F.timestamp_micros(F.expr("ts div 1000")))
+        )
+
+    def drain_and_read():
+        run_incremental_pipeline(
+            spark, src, EVENTS, transform, out, ck, partition_by=["event_date"]
+        )
+        return Counter(tuple(r) for r in spark.read.parquet(out).collect())
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    first = drain_and_read()
+    assert sum(first.values()) == 5
+    # the commit entry and its checksum, as if the driver died before
+    # committing batch 0 (a leftover .crc would block the re-commit)
+    for name in ("0", ".0.crc"):
+        path = os.path.join(ck, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    assert drain_and_read() == first
+
+
 def test_windowed_and_session_aggregations_batch_parity(spark, sf_dir):
     """Windowed/sessionized aggs run identically over a batch DataFrame —
     verify shapes + totals against plain groupBy."""

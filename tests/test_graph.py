@@ -378,6 +378,59 @@ def test_sssp_matches_dijkstra_on_random_graphs(spark):
         assert got == dist, f"trial {trial}: {got} != {dist}"
 
 
+def _tdiv(a: int, b: int) -> int:
+    """BIGINT ``div``: truncates toward zero (Python's ``//`` floors)."""
+    q = abs(a) // abs(b)
+    return q if (a < 0) == (b < 0) else -q
+
+
+def _pagerank_model(triples, iters: int) -> dict:
+    """``pagerank_fixed``'s integer recurrence in plain Python: symmetrize
+    and sum parallel weights, ``wdeg`` = incident weight sum, then
+    ``rank' = (150000 * 1e6 + 850000 * sum_in(rank * w div wdeg)) div
+    1e6``, where a vertex with ``wdeg == 0`` sends nothing."""
+    sym: dict = {}
+    for a, b, w in triples:
+        for x, y in ((a, b), (b, a)):
+            sym[(x, y)] = sym.get((x, y), 0) + w
+    wdeg: dict = {}
+    for (a, _b), w in sym.items():
+        wdeg[a] = wdeg.get(a, 0) + w
+    rank = dict.fromkeys(wdeg, 1_000_000)
+    for _ in range(iters):
+        s6 = dict.fromkeys(wdeg, 0)
+        for (a, b), w in sym.items():
+            if wdeg[a] != 0:
+                s6[b] += _tdiv(rank[a] * w, wdeg[a])
+        rank = {
+            v: _tdiv(150_000 * 1_000_000 + 850_000 * s6[v], 1_000_000)
+            for v in wdeg
+        }
+    return {v: (wdeg[v], rank[v]) for v in wdeg}
+
+
+@pytest.mark.parametrize(
+    "triples",
+    [[(1, 2, 0), (2, 3, 4)], [(1, 2, 3), (1, 3, -3), (2, 3, 1)]],
+    ids=["zero_weight_edge", "cancelling_weights"],
+)
+def test_pagerank_zero_weighted_degree_matches_model(spark, triples):
+    """A vertex whose incident weights sum to 0 sends no rank and keeps
+    its teleport share instead of failing the round with a division by
+    zero; every vertex matches the integer model, including the
+    negative quotients of the cancelling-weights graph."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.operators.graph import (
+        pagerank_fixed,
+    )
+
+    got = {
+        r["vertex"]: (r["wdeg"], r["rank6"])
+        for r in pagerank_fixed(_wedges(spark, triples), weight="w").collect()
+    }
+    assert got == _pagerank_model(triples, 3)
+    assert got[1][0] == 0
+
+
 def _cached_rdd_ids(spark) -> set[int]:
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     return {infos[i].id() for i in range(len(infos))}

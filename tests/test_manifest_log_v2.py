@@ -1,8 +1,8 @@
 """Round-13 manifest-log behaviors (sources/pysink.py): checkpoint
 rollups + the _LAST_CHECKPOINT hint, cross-family commit guards,
 pinned (never inferred) read schemas, parquet staging, stream-log
-compaction -> retention, the vacuum grace period, and legacy
-bare-_MANIFEST readability."""
+compaction -> retention, the vacuum grace period, and the refusal of
+the schema-less pre-v2 generation."""
 
 from __future__ import annotations
 
@@ -197,13 +197,14 @@ def test_concurrent_multiprocess_writers_lose_nothing(tmp_path):
     assert r["total"] == 48 and r["n_ckpts"] >= 2
 
 
-# ------------------------------------------------------ legacy manifest
+# ------------------------------------- schema-less pre-v2 generation
 
 
-def test_legacy_bare_manifest_still_readable_and_appendable(tmp_path):
-    """A directory written by the pre-log sink generation (one bare
-    _MANIFEST) reads as version 0 of the batch family and accepts new
-    versioned commits on top."""
+def test_legacy_bare_manifest_refused(spark, tmp_path):
+    """A directory written by the schema-less pre-v2 generation (one bare
+    _MANIFEST) is not read: a read raises naming the generation, and an
+    append raises before publishing anything — no versioned commit, and
+    the job's staged files are swept by abort()."""
     d = str(tmp_path / "legacy")
     os.makedirs(d)
     _stage(d, "part-00000-old.jsonl", [1, 2, 3])
@@ -211,14 +212,55 @@ def test_legacy_bare_manifest_still_readable_and_appendable(tmp_path):
         json.dump(
             {"files": ["part-00000-old.jsonl"], "n_rows": 3, "fields": ["id"]}, f
         )
-    assert len(resolve_manifest_files(d)) == 1
-    _batch_commit(d, [4], "v1")  # claims version 1 above the legacy 0
-    files = resolve_manifest_files(d)
-    assert [os.path.basename(p) for p in files] == [
-        "part-00000-old.jsonl",
-        "part-00000-v1.jsonl",
-    ]
-    assert resolve_manifest_files(d, version=0) == files[:1]
+    with pytest.raises(ValueError, match="pre-v2"):
+        read_manifest_sink(spark, d)
+    spark.dataSource.register(ManifestSinkDataSource)
+    with pytest.raises(Exception, match="pre-v2"):
+        spark.range(4, 6).write.format("manifestsink").option("path", d).mode(
+            "append"
+        ).save()
+    assert sorted(os.listdir(d)) == [MANIFEST, "part-00000-old.jsonl"]
+
+
+def test_commit_without_recorded_schema_refused(spark, tmp_path):
+    """A versioned commit that holds files but records no schema_json
+    (pre-v2) is refused by the batch read, by MERGE, and by the
+    manifestlog stream — with the log's schema and with an explicit
+    one — instead of being read by inference."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
+        ManifestLogDataSource,
+        merge_into_manifest_sink,
+    )
+
+    d = str(tmp_path / "noschema")
+    os.makedirs(d)
+    _stage(d, "part-00000-old.jsonl", [1, 2, 3])
+    with open(os.path.join(d, "_MANIFEST.v00000001"), "w") as f:
+        json.dump(
+            {"files": ["part-00000-old.jsonl"], "n_rows": 3, "fields": ["id"],
+             "mode": "append"},
+            f,
+        )
+    with pytest.raises(ValueError, match="no schema_json.*pre-v2"):
+        read_manifest_sink(spark, d)
+    with pytest.raises(ValueError, match="no schema_json.*pre-v2"):
+        merge_into_manifest_sink(spark, d, spark.range(2, 4), ["id"])
+    spark.dataSource.register(ManifestLogDataSource)
+    with pytest.raises(Exception, match="no schema_json.*pre-v2"):
+        spark.readStream.format("manifestlog").option("path", d).load()
+    q = (
+        spark.readStream.format("manifestlog")
+        .schema("id long")
+        .option("path", d)
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="no schema_json.*pre-v2"):
+        q.awaitTermination()
+    assert sorted(os.listdir(d)) == ["_MANIFEST.v00000001", "part-00000-old.jsonl"]
 
 
 # ------------------------------------------------------- schema pinning

@@ -2,8 +2,7 @@
 REPLACE commits and the copy-on-write MERGE/DELETE built on them,
 commit timestamps + TIMESTAMP AS OF (monotone clamp rule), optimistic
 concurrency for read-modify-write commits (expectedVersion), JSON-safe
-+ null-count skipping stats, Arrow-batched manifestlog reads, and the
-legacy-v0 streaming offset fix."""
++ null-count skipping stats, and Arrow-batched manifestlog reads."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from fiap_machine_learning_tech_challenge_2_etl_spark.sources import pysink
 from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
-    MANIFEST,
     ConcurrentManifestWriteError,
     ManifestSinkDataSource,
     ManifestSinkWriter,
@@ -743,38 +741,6 @@ def test_manifestlog_starting_timestamp(spark, tmp_path):
         )
 
 
-def test_legacy_v0_streamed_with_explicit_schema(spark, tmp_path):
-    """ADVICE fix: a legacy bare _MANIFEST folds in as version 0; the
-    initial offset must start below it or an explicit-schema reader
-    silently skips v0's rows."""
-    d = str(tmp_path / "t")
-    os.makedirs(d)
-    with open(os.path.join(d, "part-legacy.jsonl"), "w") as f:
-        f.writelines(f'{{"id": {i}}}\n' for i in range(3))
-    with open(os.path.join(d, MANIFEST), "w") as f:
-        json.dump({"files": ["part-legacy.jsonl"], "n_rows": 3}, f)
-    spark.dataSource.register(ManifestSinkDataSource)
-    _write(spark, d, 10, 13)  # version 1 on top of legacy v0
-    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import ManifestLogDataSource
-
-    spark.dataSource.register(ManifestLogDataSource)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    (
-        spark.readStream.format("manifestlog")
-        .schema("id long")
-        .option("path", d)
-        .load()
-        .writeStream.foreachBatch(lambda b, _e: b.write.mode("append").parquet(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    assert sorted(r.id for r in spark.read.parquet(out).collect()) == [
-        0, 1, 2, 10, 11, 12,
-    ]
-
-
 # ------------------------------------------- merge DELETE / keyed CDF
 
 
@@ -1375,8 +1341,7 @@ def test_manifestlog_cdf_two_replaces_one_batch_parquet(spark, tmp_path):
     removes a file staged BY the first, which the old build-once fmt
     map never covered (it froze at the first replace), sending parquet
     bytes through the jsonl reader. Formats now resolve from the staged
-    name's extension, with an incrementally-maintained map as the
-    extension-less legacy fallback."""
+    name's extension."""
     from tests.test_manifest_log_v2 import _tail_once
 
     d, out, ckpt = (str(tmp_path / x) for x in ("t", "out", "ckpt"))
@@ -1660,8 +1625,7 @@ def test_disjoint_merge_race_multiprocess(tmp_path):
 def test_cdf_planning_flat_at_depth(tmp_path, monkeypatch):
     """r15 gate: CDF replace-batch planning opens exactly ONE manifest
     per in-range commit at any log depth (extension-carried formats);
-    the assertions live inside run_cdf_planning — including the legacy
-    extension-less backfill still opening depth+1."""
+    the assertions live inside run_cdf_planning."""
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
@@ -1669,7 +1633,6 @@ def test_cdf_planning_flat_at_depth(tmp_path, monkeypatch):
 
     r = run_cdf_planning(300)
     assert r["modern_replace_opens"] == 1
-    assert r["legacy_replace_opens"] == 301
 
 
 # ------------------------------------------------- r15: relative CLONE

@@ -11,10 +11,9 @@
    is bytes in the log, not CPU.
 
 2. CDF planning leg — the ``manifestlog`` change-feed reader's
-   ``partitions()`` builds a filename->format map by walking commits
-   below a REPLACE (documented O(commits) manifest opens, feed-only).
-   Measure that planning cost at depth so the doc's claim carries a
-   number.
+   ``partitions()`` takes a removed file's format from its name's
+   extension, so a REPLACE batch opens only its in-range commits.
+   Count those opens at depth and measure the planning time.
 
 Driver-side only (no Spark jobs): both legs exercise the log protocol
 itself, same contract as stress_manifest_log.py. The executor halves
@@ -115,9 +114,8 @@ def run_cdf_planning(depth: int) -> dict:
     partitions need NO backfill walk. Proven DETERMINISTICALLY by
     counting manifest opens (monkeypatched ``_load``): a one-commit
     replace batch opens exactly ONE manifest at ANY depth (the r14 code
-    opened depth+1 — the "fmt-map walk"). The legacy leg (extension-
-    less filenames, pre-sink logs) still pays the one-time backfill,
-    measured separately; wall-times ride along for BENCH_NOTES."""
+    opened depth+1 — the "fmt-map walk"); wall-times ride along for
+    BENCH_NOTES."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources import pysink
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
         ManifestLogStreamReader,
@@ -139,56 +137,50 @@ def run_cdf_planning(depth: int) -> dict:
         opens["n"] += 1
         return real_load(path, name)
 
-    out = {"depth": depth}
-    for tag, ext in (("modern", ".jsonl"), ("legacy", "")):
-        d = os.path.join(_REPO, "_scratch", f"stress_cdf_plan_{tag}")
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d)
-        for v in range(1, depth + 1):
-            open(os.path.join(d, f"f{v:05d}{ext}"), "w").close()
-            _commit(d, v, f"f{v:05d}{ext}", {})
-        open(os.path.join(d, f"f{depth + 1:05d}{ext}"), "w").close()
-        _commit(d, depth + 1, f"f{depth + 1:05d}{ext}", {}, mode="replace",
-                removed=[f"f00001{ext}"])
-        reader = ManifestLogStreamReader(
-            {"path": d, "readchangefeed": "true"}, schema
-        )
-        pysink._load = counting_load
-        try:
-            opens["n"] = 0
-            t0 = time.perf_counter()
-            parts = list(reader.partitions({"v": depth}, {"v": depth + 1}))
-            plan_ms = (time.perf_counter() - t0) * 1e3
-            replace_opens = opens["n"]
-            assert {(p.filename, p.change) for p in parts} == {
-                (f"f00001{ext}", "delete"),
-                (f"f{depth + 1:05d}{ext}", "insert"),
-            }
-            opens["n"] = 0
-            t0 = time.perf_counter()
-            list(reader.partitions({"v": depth - 1}, {"v": depth}))
-            plan_append_ms = (time.perf_counter() - t0) * 1e3
-            append_opens = opens["n"]
-        finally:
-            pysink._load = real_load
-        if tag == "modern":
-            # THE flatness proof: one in-range commit -> ONE manifest
-            # open, regardless of the log's depth (r14: depth+1 opens)
-            assert replace_opens == 1, (
-                f"modern CDF replace planning opened {replace_opens} "
-                f"manifests at depth {depth}; must be 1 (O(range))"
-            )
-            assert append_opens == 1
-        else:
-            assert replace_opens == depth + 1, (
-                "legacy backfill should open every commit below the "
-                f"replace once: {replace_opens} != {depth + 1}"
-            )
-        out[f"{tag}_replace_plan_ms"] = round(plan_ms, 2)
-        out[f"{tag}_replace_opens"] = replace_opens
-        out[f"{tag}_append_plan_ms"] = round(plan_append_ms, 2)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    d = os.path.join(_REPO, "_scratch", "stress_cdf_plan")
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    for v in range(1, depth + 1):
+        open(os.path.join(d, f"f{v:05d}.jsonl"), "w").close()
+        _commit(d, v, f"f{v:05d}.jsonl", {})
+    open(os.path.join(d, f"f{depth + 1:05d}.jsonl"), "w").close()
+    _commit(d, depth + 1, f"f{depth + 1:05d}.jsonl", {}, mode="replace",
+            removed=["f00001.jsonl"])
+    reader = ManifestLogStreamReader(
+        {"path": d, "readchangefeed": "true"}, schema
+    )
+    pysink._load = counting_load
+    try:
+        opens["n"] = 0
+        t0 = time.perf_counter()
+        parts = list(reader.partitions({"v": depth}, {"v": depth + 1}))
+        plan_ms = (time.perf_counter() - t0) * 1e3
+        replace_opens = opens["n"]
+        assert {(p.filename, p.change) for p in parts} == {
+            ("f00001.jsonl", "delete"),
+            (f"f{depth + 1:05d}.jsonl", "insert"),
+        }
+        opens["n"] = 0
+        t0 = time.perf_counter()
+        list(reader.partitions({"v": depth - 1}, {"v": depth}))
+        plan_append_ms = (time.perf_counter() - t0) * 1e3
+        append_opens = opens["n"]
+    finally:
+        pysink._load = real_load
+    # THE flatness proof: one in-range commit -> ONE manifest open,
+    # regardless of the log's depth (r14: depth+1 opens)
+    assert replace_opens == 1, (
+        f"modern CDF replace planning opened {replace_opens} "
+        f"manifests at depth {depth}; must be 1 (O(range))"
+    )
+    assert append_opens == 1
+    shutil.rmtree(d, ignore_errors=True)
+    return {
+        "depth": depth,
+        "modern_replace_plan_ms": round(plan_ms, 2),
+        "modern_replace_opens": replace_opens,
+        "modern_append_plan_ms": round(plan_append_ms, 2),
+    }
 
 
 def main() -> None:
@@ -206,9 +198,7 @@ def main() -> None:
         f"| CDF stream planning at depth {c['depth']} | replace batch "
         f"{c['modern_replace_plan_ms']} ms, {c['modern_replace_opens']} "
         f"manifest open (O(range) — r14 opened depth+1) | append "
-        f"{c['modern_append_plan_ms']} ms | legacy extension-less backfill "
-        f"{c['legacy_replace_plan_ms']} ms, {c['legacy_replace_opens']} "
-        f"opens |"
+        f"{c['modern_append_plan_ms']} ms |"
     )
 
 

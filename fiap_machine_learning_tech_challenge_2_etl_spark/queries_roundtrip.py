@@ -1766,8 +1766,9 @@ def q_manifest_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.repartition(4).write.format("manifestsink").option("path", d).mode(
         "append"
     ).save()
-    with open(os.path.join(d, "part-99999-orphan.jsonl"), "w") as f:
-        f.write('{"doc_id": -1, "lang": "xx", "n_chars": -1}\n')
+    # an orphaned attempt: a staged copy of a committed file, never committed
+    src = next(f for f in os.listdir(d) if f.startswith("part-"))
+    shutil.copy(os.path.join(d, src), os.path.join(d, "part-99999-orphan.parquet"))
     back = read_manifest_sink(spark, d)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1814,8 +1815,8 @@ def q_manifest_sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "manifestsink"
         ).option("path", d).mode("append").save()
     # an in-flight concurrent job: staged, no manifest — invisible at any pin
-    with open(os.path.join(d, "part-77777-inflight.jsonl"), "w") as f:
-        f.write('{"doc_id": -1, "lang": "xx", "n_chars": -1}\n')
+    src = next(f for f in os.listdir(d) if f.startswith("part-"))
+    shutil.copy(os.path.join(d, src), os.path.join(d, "part-77777-inflight.parquet"))
     back = read_manifest_sink(spark, d, version=2)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1836,16 +1837,17 @@ GROUP BY lang
 """,
 )
 def q_manifest_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLUMNAR staging through the manifest commit log
-    (sources/pysink.py ``option("format", "parquet")``): tasks stage
-    Arrow-written parquet files — chunked RecordBatch writes, schema
-    derived from the writer's Spark schema — and the SAME two-phase
-    protocol publishes the pointer. The readback resolves through the
-    log and reads parquet with the schema PINNED from the manifests
-    (never inferred); an injected orphan ``.parquet`` (speculative
-    residue) is invisible. This is the at-scale shape: at 100 TB the
-    protocol carries columnar files, and the value hash proves format is
-    orthogonal to the commit semantics."""
+    """COLUMNAR staging through the manifest commit log, with the
+    staging format named explicitly (sources/pysink.py
+    ``option("format", "parquet")``, the sink's only format and its
+    default): tasks stage Arrow-written parquet files — chunked
+    RecordBatch writes, schema derived from the writer's Spark schema —
+    and the two-phase protocol publishes the pointer. The readback
+    resolves through the log and reads parquet with the schema PINNED
+    from the manifests (never inferred); an injected orphan ``.parquet``
+    (speculative residue) is invisible. This is the at-scale shape: at
+    100 TB the protocol carries columnar files, and the value hash
+    proves the explicit option stages exactly what the default does."""
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
         ManifestSinkDataSource,
         read_manifest_sink,

@@ -22,8 +22,7 @@ Round 14 adds the row-level-change tier real table formats ship:
   probe-upward claim (isolation level documented at the claim loop).
 - NULL-count skipping stats (``is_null`` / ``is_not_null`` predicates)
   and JSON-safe tagged encoding for date/timestamp/decimal bounds.
-- Arrow RecordBatch reads in the ``manifestlog`` streaming source for
-  parquet-staged logs (``option("arrow", "false")`` for row tuples),
+- Arrow RecordBatch reads in the ``manifestlog`` streaming source,
   plus ``startingTimestamp`` alongside ``startingVersion``.
 - RESTORE (:func:`restore_manifest_sink` — one metadata-only overwrite
   re-listing an old snapshot) and CHANGE DATA FEED
@@ -50,10 +49,9 @@ exactly-once commit protocol every serious sink implements (the same
 two-phase shape as Hadoop's FileOutputCommitter and table formats'
 snapshot commit):
 
-1. Each TASK stages its partition to a uniquely-named data file
-   (``part-<partition>-<write token><attempt uuid>.jsonl`` or
-   ``.parquet`` with ``option("format", "parquet")``) and returns the
-   file name in its ``WriterCommitMessage`` — executor-side, no
+1. Each TASK stages its partition to a uniquely-named parquet file
+   (``part-<partition>-<write token><attempt uuid>.parquet``) and returns
+   the file name in its ``WriterCommitMessage`` — executor-side, no
    coordination. A task that fails MID-write removes its own
    in-progress file before re-raising, so task-level failure leaves no
    staging garbage even though no commit message is ever produced for
@@ -99,8 +97,8 @@ Spark schema (``schema_json``); readers build the read schema from the
 RESOLVED commits' manifests. ADDITIVE evolution is legal (a commit may
 add columns; older files project them as NULL — the union schema in
 first-appearance order), while real drift — the same field recorded
-with two types, or mixed staged formats — fails the read loudly
-instead of silently schema-merging.
+with two types — fails the read loudly instead of silently
+schema-merging.
 
 Streaming (``ManifestStreamSinkWriter``) publishes one manifest PER
 MICRO-BATCH (``_MANIFEST-<batchId>``, last-publication-wins so a
@@ -119,11 +117,13 @@ per-batch manifests are two independent version spaces with no global
 order, so each commit path checks the directory's existing family FIRST
 and refuses to publish into the other's log (the check is name-level —
 nothing is opened — and runs before anything becomes visible).
-The schema-less pre-v2 generation (a single bare ``_MANIFEST`` file, or
-versioned commits that hold files but record no ``schema_json``) is
-not read: the bare file fails the name scan, so reads and writes into
-such a directory raise before anything is published, and a no-schema
-commit fails the schema pin of every reader.
+Two retired on-disk generations are not read: the schema-less pre-v2
+one (a single bare ``_MANIFEST`` file, or versioned commits that hold
+files but record no ``schema_json``) and the JSONL-staged one (commits
+recording ``"format": "jsonl"``). The bare file fails the name scan; a
+no-schema or JSONL commit fails the schema pin, which every reader,
+copy-on-write operation and append runs before anything is staged or
+published.
 
 Speculative/retried tasks fall out of the same protocol: each attempt
 stages under a fresh uuid, but only the attempts whose commit messages
@@ -140,10 +140,9 @@ Why this is first-class at 100 TB: object stores have no atomic
 multi-file rename, so "the job either happened or it didn't" must be
 manufactured exactly this way — stage under unique names, publish one
 small immutable pointer per commit, roll pointers up so resolve never
-reads O(history). JSONL keeps the demo dependency-free;
-``format=parquet`` stages columnar files through the SAME log (pyarrow
-executor-side), which is what the protocol would carry at scale — the
-protocol is format-agnostic by construction.
+reads O(history). Staged files are parquet written executor-side by
+pyarrow, so their footers carry the recorded types; the commit protocol
+itself never opens a data file.
 
 Deployment assumption, stated plainly: tasks ``open()`` paths under the
 sink directory, so driver and executors must SHARE that filesystem —
@@ -528,7 +527,10 @@ def _load_checkpoint(path: str, name: str, with_stats: bool = True) -> dict:
     ``with_stats=False`` returns ``file_stats={}`` for the checkpointed
     prefix — callers must not prune from such a state. Bare-JSON
     checkpoints are only ever READ: pre-r14 logs hold them. An absent
-    name raises FileNotFoundError in either format."""
+    name raises FileNotFoundError in either format. ``metas`` are the
+    rolled-up commits' recorded identities, staged format included, so
+    the schema pin refuses a checkpoint of a JSONL-staged table exactly
+    as it refuses the commits themselves."""
     if not name.endswith(".parquet"):
         return _load(path, name)
     import pyarrow.parquet as pq
@@ -603,8 +605,8 @@ def _publish_checkpoint(path: str, v: int, ck: dict) -> None:
 def _meta_of(man: dict) -> dict:
     """The schema/format identity a commit contributes to a resolved
     snapshot, as the commit recorded it. A pre-v2 commit records neither
-    ``schema_json`` nor ``format``; its identity carries ``None`` there
-    and :func:`_pin_read_schema` refuses it."""
+    ``schema_json`` nor ``format``, a JSONL-staged one ``"jsonl"``;
+    :func:`_pin_read_schema` refuses both."""
     return {
         "fields": man.get("fields"),
         "schema_json": man.get("schema_json"),
@@ -860,98 +862,12 @@ class _BatchStatsObserver:
         return stats
 
 
-#: string cells containing any of these need JSON escaping — quote,
-#: backslash, or a control character; everything else (including
-#: non-ASCII, which JSON permits raw in UTF-8) passes through verbatim
-_JSON_ESCAPE_RE = r'["\\\x00-\x1f]'
-
-
-def _jsonl_batch_bytes(batch) -> bytes:
-    """One Arrow RecordBatch -> NDJSON bytes, vectorized (guide §4.2).
-
-    Fast path — integer/boolean/string columns: each column renders via
-    one ``pyarrow.compute`` cast (nulls -> bare ``null``; strings are
-    first PROVEN escape-free by one vectorized regex and wrapped in
-    quotes), the per-row object text assembles via one
-    ``binary_join_element_wise`` across all columns, and the batch
-    collapses to a single buffer via ``binary_join`` — Python executes
-    O(columns) calls per batch regardless of row count.
-
-    Fallback — any other column type, or a string column needing
-    escapes: per-row encoding via ``orjson`` when available (stdlib
-    ``json`` otherwise; float-typed batches always use stdlib because
-    orjson renders NaN/Infinity as null while ``json`` keeps them).
-    Both paths produce lines that parse to records identical to the old
-    ``to_pylist()`` + ``json.dump`` walk; only whitespace/escaping
-    bytes differ, which every consumer (this module's readers, Spark's
-    JSON reader, the oracle) parses identically."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    rendered = []
-    fast = True
-    has_float = False
-    for i, field in enumerate(batch.schema):
-        t = field.type
-        arr = batch.column(i)
-        if pa.types.is_floating(t):
-            has_float = True
-            fast = False
-            break
-        if pa.types.is_integer(t) or pa.types.is_boolean(t):
-            r = arr.cast(pa.string())
-        elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            if pc.any(
-                pc.match_substring_regex(arr, _JSON_ESCAPE_RE)
-            ).as_py():
-                fast = False
-                break
-            r = pc.binary_join_element_wise('"', arr, '"', "")
-        else:
-            fast = False
-            break
-        if arr.null_count:
-            r = pc.if_else(
-                pc.is_valid(arr), r, pa.scalar("null", type=pa.string())
-            )
-        rendered.append(r)
-    if fast and rendered:
-        args: list = []
-        for j, (name, r) in enumerate(zip(batch.schema.names, rendered)):
-            args.append(("{" if j == 0 else ", ") + json.dumps(name) + ": ")
-            args.append(r)
-        args.append("}")
-        lines = pc.binary_join_element_wise(*args, "")
-        offsets = pa.array([0, len(lines)], type=pa.int32())
-        blob = pc.binary_join(pa.ListArray.from_arrays(offsets, lines), "\n")
-        return blob[0].as_py().encode("utf-8") + b"\n"
-    recs = batch.to_pylist()
-    if not has_float:
-        try:
-            import orjson
-
-            # PASSTHROUGH_DATETIME keeps crash-parity with json.dump:
-            # a date/timestamp cell raises TypeError on both encoders
-            return (
-                b"\n".join(
-                    orjson.dumps(r, option=orjson.OPT_PASSTHROUGH_DATETIME)
-                    for r in recs
-                )
-                + b"\n"
-            )
-        except ImportError:
-            pass
-    return (
-        "\n".join(json.dumps(r) for r in recs) + "\n"
-    ).encode("utf-8")
-
-
 class ManifestSinkWriter(DataSourceArrowWriter):
     """Batch writer. Subclassing :class:`DataSourceArrowWriter` switches
     the executor wire format from pickled row tuples to Arrow
     RecordBatches (Spark 4.0+): stats/bloom/partition-value observation
-    runs vectorized through ``pyarrow.compute`` and parquet staging
-    writes whole batches, removing the per-row Python loop that
+    runs vectorized through ``pyarrow.compute`` and staging writes whole
+    batches to parquet, removing the per-row Python loop that
     dominated every manifest write task (optimization guide §4.1-4.2 —
     same staged bytes, same commit protocol, ~5-10x less Python time
     per staged row).
@@ -965,7 +881,11 @@ class ManifestSinkWriter(DataSourceArrowWriter):
     — the same staging, stats, blooms, claim and checkpoints, without a
     fresh Python process per save. Only that route publishes a REPLACE
     commit: it sets ``replaced_files`` on the writer it built (no
-    option does)."""
+    option does).
+
+    Every writer stages parquet. ``option("format")`` is still read:
+    ``"parquet"`` is accepted, any other value raises here, before any
+    task runs (JSONL staging is a retired generation)."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         opts = {str(k).lower(): v for k, v in dict(options).items()}
@@ -992,11 +912,11 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             if self.mapping:
                 self.schema = _to_physical_schema(schema, self.mapping)
                 self.fields = self.schema.fieldNames()
-        self.format = str(opts.get("format", "jsonl")).lower()
-        if self.format not in ("jsonl", "parquet"):
+        fmt = str(opts.get("format", "parquet")).lower()
+        if fmt != "parquet":
             raise ValueError(
-                f"manifestsink format must be 'jsonl' or 'parquet', got "
-                f"{self.format!r}"
+                f"manifestsink stages parquet only, got format {fmt!r} "
+                "(JSONL staging is retired)"
             )
         self.checkpoint_interval = int(
             opts.get("checkpointinterval", DEFAULT_CHECKPOINT_INTERVAL)
@@ -1082,12 +1002,12 @@ class ManifestSinkWriter(DataSourceArrowWriter):
     def write(self, iterator) -> _StagedFile:
         """Consume the task's Arrow RecordBatches (the
         :class:`DataSourceArrowWriter` wire format), observing stats /
-        blooms / partition values vectorized per batch and staging the
-        same bytes the row path staged. Memory stays O(batch)."""
+        blooms / partition values vectorized per batch and staging
+        them into one parquet file. Memory stays O(batch)."""
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}-{self._token}{uuid.uuid4().hex[:16]}.{self.format}"
+        name = f"part-{pid:05d}-{self._token}{uuid.uuid4().hex[:16]}.parquet"
         os.makedirs(self.path, exist_ok=True)
         staged = os.path.join(self.path, name)
         obs = (
@@ -1139,32 +1059,22 @@ class ManifestSinkWriter(DataSourceArrowWriter):
         return batch
 
     def _stage(self, staged: str, iterator, obs) -> int:
-        """Stream the task's batches into one staged file, memory
-        O(batch) regardless of partition size. Parquet: the Arrow schema
-        is derived from the WRITER's Spark schema, so the staged footer
-        carries real types — what lets readers pin the schema instead of
-        inferring it. NDJSON: Python cost O(batches), not O(rows) — the
-        common all-int/string/bool batch is rendered inside
-        ``pyarrow.compute`` (r16); batches the columnar encoder cannot
-        prove safe fall back to a per-row encoder producing lines that
-        parse to identical records (:func:`_jsonl_batch_bytes`)."""
-        aschema = self._arrow_schema()
-        if self.format == "parquet":
-            import pyarrow.parquet as pq
+        """Stream the task's batches into one staged parquet file,
+        memory O(batch) regardless of partition size and Python cost
+        O(batches), not O(rows). The Arrow schema is derived from the
+        WRITER's Spark schema, so the staged footer carries real types —
+        what lets readers pin the schema instead of inferring it."""
+        import pyarrow.parquet as pq
 
-            out = pq.ParquetWriter(staged, aschema)
-            put = out.write_batch
-        else:
-            out = open(staged, "wb")
-            put = lambda batch: out.write(_jsonl_batch_bytes(batch))  # noqa: E731
+        aschema = self._arrow_schema()
         n = 0
-        with out:
+        with pq.ParquetWriter(staged, aschema) as out:
             for batch in iterator:
                 batch = self._shape_batch(batch, aschema)
                 if obs is not None:
                     obs.observe(batch)
                 if batch.num_rows:
-                    put(batch)
+                    out.write_batch(batch)
                 n += batch.num_rows
         return n
 
@@ -1193,7 +1103,7 @@ class ManifestSinkWriter(DataSourceArrowWriter):
             "n_rows": sum(n for _, n in files),
             "fields": self.fields,
             "schema_json": self.schema.json(),
-            "format": self.format,
+            "format": "parquet",
             **extra,
             "ts": time.time(),
         }
@@ -1392,7 +1302,12 @@ class ManifestSinkDataSource(DataSource):
         return "manifestsink"
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return ManifestSinkWriter(self.options, schema, overwrite)
+        writer = ManifestSinkWriter(self.options, schema, overwrite)
+        if not overwrite:
+            # an overwrite is how a retired generation is rewritten, so
+            # only an append checks the snapshot it extends
+            _check_append_target(writer.path)
+        return writer
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
         if overwrite:
@@ -1405,7 +1320,9 @@ class ManifestSinkDataSource(DataSource):
                 "only: complete mode republishes cumulative results each "
                 "batch, which per-batch delta manifests would double-count"
             )
-        return ManifestStreamSinkWriter(self.options, schema)
+        writer = ManifestStreamSinkWriter(self.options, schema)
+        _check_append_target(writer.path)
+        return writer
 
 
 class _CommittedFilesPartition(InputPartition):
@@ -1413,12 +1330,11 @@ class _CommittedFilesPartition(InputPartition):
         self,
         path: str,
         filename: str,
-        fmt: str,
         change: str | None = None,
         version: int | None = None,
         ts: float | None = None,
     ):
-        self.path, self.filename, self.fmt = path, filename, fmt
+        self.path, self.filename = path, filename
         # readChangeFeed extras: what this file's rows ARE in the feed
         # (insert/delete), which commit produced the change, and when
         self.change, self.version, self.ts = change, version, ts
@@ -1458,7 +1374,6 @@ class ManifestLogStreamReader(DataSourceStreamReader):
         self.path = path
         self.schema = schema
         self.fields = schema.fieldNames()
-        self.types = [f.dataType.simpleString() for f in schema.fields]
         # column mapping, PINNED for the stream's lifetime: files carry
         # immutable physical names; every read projects physical ->
         # logical through this map (identity for unmapped columns, so
@@ -1481,12 +1396,6 @@ class ManifestLogStreamReader(DataSourceStreamReader):
         )
         if self.starting_version is not None and self.starting_timestamp is not None:
             raise ValueError("pass startingVersion or startingTimestamp, not both")
-        # r14: parquet-staged partitions ship Arrow RecordBatches by
-        # default (columnar into Spark's vectorized reader — the per-row
-        # Python->JVM tuple conversion is the dominant cost of a Python
-        # source); option("arrow", "false") keeps the row-tuple wire
-        # format (the bit-equality test pins both paths identical)
-        self.arrow = str(opts.get("arrow", "true")).lower() == "true"
         # readChangeFeed=true (Delta's streaming CDF): emit the FEED of
         # changes instead of the appended rows — REPLACE commits become
         # legal mid-stream (their removed files' rows flow as 'delete',
@@ -1551,30 +1460,28 @@ class ManifestLogStreamReader(DataSourceStreamReader):
         s, e = start["v"], end["v"]
         _kind, commits, _ck = _scan_names(self.path)
         parts: list[_CommittedFilesPartition] = []
-        # CDF delete partitions read files STAGED BY EARLIER commits,
-        # whose format may differ from the replacing commit's. Staged
-        # names carry their format in the extension (part-*.jsonl /
-        # part-*.parquet; CLONE and OPTIMIZE keep those names), so
-        # planning opens only the in-range commits — O(range) at any
-        # log depth
+        # planning opens only the in-range commits — O(range) at any log
+        # depth; each one that adds or removes files is checked against
+        # the retired generations, so explicit-.schema(...) readers (which
+        # skip the schema pin) are refused too
         for v, name in commits:
             if not s < v <= e:
                 continue
             man = _load(self.path, name)
+            if man["files"] or man.get("removed_files"):
+                _check_generation(man)
             mode = man.get("mode", "append")
             if mode == "replace" and self.cdf:
                 ts = man.get("ts")
                 parts.extend(
                     _CommittedFilesPartition(
-                        self.path, f, _format_of_name(f),
-                        change="delete", version=v, ts=ts,
+                        self.path, f, change="delete", version=v, ts=ts
                     )
                     for f in man.get("removed_files", [])
                 )
                 parts.extend(
                     _CommittedFilesPartition(
-                        self.path, f, _recorded_format(man),
-                        change="insert", version=v, ts=ts,
+                        self.path, f, change="insert", version=v, ts=ts
                     )
                     for f in man["files"]
                 )
@@ -1605,7 +1512,7 @@ class ManifestLogStreamReader(DataSourceStreamReader):
                 )
             parts.extend(
                 _CommittedFilesPartition(
-                    self.path, f, _recorded_format(man),
+                    self.path, f,
                     change="insert" if self.cdf else None,
                     version=v, ts=man.get("ts"),
                 )
@@ -1614,84 +1521,60 @@ class ManifestLogStreamReader(DataSourceStreamReader):
         if not parts:
             # explicit zero-row batch; an empty partition list is
             # Spark-version dependent (same contract as SynthDocsStreamReader)
-            parts = [_CommittedFilesPartition(self.path, "", "empty")]
+            parts = [_CommittedFilesPartition(self.path, "")]
         return parts
 
     def read(self, partition: _CommittedFilesPartition):
-        if partition.fmt == "empty":
+        """Ship one staged file as Arrow RecordBatches (columnar into
+        Spark's vectorized reader — the per-row Python->JVM tuple
+        conversion is the dominant cost of a Python source). The file is
+        opened once: its footer names the columns it holds, and the same
+        handle reads them."""
+        if not partition.filename:
             return
-        full = os.path.join(partition.path, partition.filename)
-        cdf_vals = {
-            "_change_type": partition.change,
-            "_commit_version": partition.version,
-            "_commit_timestamp": partition.ts,
-        }
-        if partition.fmt == "parquet":
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-            aschema = to_arrow_schema(self.schema)
-            phys_of = self.phys_of
-            want = [(f, phys_of.get(f, f)) for f in self.data_fields]
-            avail = set(pq.ParquetFile(full).schema_arrow.names)
-            table = pq.read_table(
-                full, columns=[p for _f, p in want if p in avail]
-            )
-            # project to the LOGICAL field list: rename mapped physicals,
-            # null-fill columns this file predates (additive evolution —
-            # an old file simply lacks a later column)
-            table = pa.table(
-                {
-                    f: (
-                        table.column(p)
-                        if p in avail
-                        else pa.nulls(table.num_rows, type=aschema.field(f).type)
-                    )
-                    for f, p in want
-                }
-            )
-            if self.cdf:
-                # the feed columns are per-PARTITION constants — append
-                # them columnar-side, then restore the schema's order
-                for c in self.fields:
-                    if c in _CDF_COLS:
-                        table = table.append_column(
-                            c, pa.nulls(table.num_rows)
-                            if cdf_vals[c] is None
-                            else pa.array([cdf_vals[c]] * table.num_rows)
-                        )
-                table = table.select(self.fields)
-            if self.arrow:
-                # columnar wire format: cast to the Arrow schema Spark
-                # derives from the read schema (zero-copy when already
-                # equal — the staged footer was written from the same
-                # Spark schema) and hand over whole RecordBatches
-                yield from table.cast(aschema).to_batches()
-                return
-            for row in table.to_pylist():
-                yield tuple(row[f] for f in self.fields)
-            return
-        casts = []
-        for t in self.types:
-            if t in ("bigint", "int", "smallint", "tinyint"):
-                casts.append(lambda x: None if x is None else int(x))
-            elif t in ("double", "float"):
-                casts.append(lambda x: None if x is None else float(x))
-            else:
-                casts.append(lambda x: x)
+        aschema = to_arrow_schema(self.schema)
         phys_of = self.phys_of
-        with open(full) as f:
-            for line in f:
-                rec = json.loads(line)
-                yield tuple(
-                    c(
-                        cdf_vals[k]
-                        if k in _CDF_COLS
-                        else rec.get(phys_of.get(k, k))
-                    )
-                    for k, c in zip(self.fields, casts)
+        want = [(f, phys_of.get(f, f)) for f in self.data_fields]
+        pf = pq.ParquetFile(os.path.join(partition.path, partition.filename))
+        avail = set(pf.schema_arrow.names)
+        table = pf.read(columns=[p for _f, p in want if p in avail])
+        # project to the LOGICAL field list: rename mapped physicals,
+        # null-fill columns this file predates (additive evolution — an
+        # old file simply lacks a later column)
+        table = pa.table(
+            {
+                f: (
+                    table.column(p)
+                    if p in avail
+                    else pa.nulls(table.num_rows, type=aschema.field(f).type)
                 )
+                for f, p in want
+            }
+        )
+        if self.cdf:
+            # the feed columns are per-PARTITION constants — append them
+            # columnar-side, then restore the schema's order
+            cdf_vals = {
+                "_change_type": partition.change,
+                "_commit_version": partition.version,
+                "_commit_timestamp": partition.ts,
+            }
+            for c in self.fields:
+                if c in _CDF_COLS:
+                    table = table.append_column(
+                        c, pa.nulls(table.num_rows)
+                        if cdf_vals[c] is None
+                        else pa.array([cdf_vals[c]] * table.num_rows)
+                    )
+            table = table.select(self.fields)
+        # cast to the Arrow schema Spark derives from the read schema
+        # (zero-copy when already equal — the staged footer was written
+        # from the same Spark schema)
+        yield from table.cast(aschema).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # retention is expire/vacuum's job; the offset log is truth
@@ -1722,9 +1605,7 @@ class ManifestLogDataSource(DataSource):
         # the then-current view — the offset log stores positions, not
         # schemas (Delta likewise applies mapping changes at restart
         # boundaries via schemaTrackingLocation)
-        _fmt, schema = _snapshot_logical_schema(
-            state["metas"], state.get("mapping")
-        )
+        schema = _snapshot_logical_schema(state["metas"], state.get("mapping"))
         if str(opts.get("readchangefeed", "false")).lower() == "true":
             from pyspark.sql.types import (
                 DoubleType,
@@ -1757,11 +1638,13 @@ def resolve_manifest_files(path: str, version: int | None = None) -> list[str]:
     return [os.path.join(path, name) for name in state["files"]]
 
 
-def _recorded_format(meta: dict) -> str:
-    """The staged format a commit (or a commit's schema/format identity)
-    recorded. Refuses the schema-less pre-v2 generation: a commit that
-    holds files but records no ``schema_json`` has nothing to pin its
-    files' types to."""
+def _check_generation(meta: dict) -> None:
+    """Refuse a commit (or a commit's schema/format identity) of a
+    retired on-disk generation: the schema-less pre-v2 one (holds files
+    but records no ``schema_json``, so nothing pins its files' types) and
+    the JSONL-staged one (records ``"format": "jsonl"``). Both refusals
+    name the rewrite: read the files with ``spark.read.json``, then
+    overwrite through the sink."""
     if not meta.get("schema_json"):
         raise ValueError(
             "a resolved commit records no schema_json: it was written by the "
@@ -1769,27 +1652,29 @@ def _recorded_format(meta: dict) -> str:
             "read; re-write the table with the current sink (read its files "
             "with spark.read.json, overwrite)"
         )
-    return meta["format"]
+    if meta.get("format") != "parquet":
+        raise ValueError(
+            f"a resolved commit records format {meta.get('format')!r}: JSONL "
+            "staging is a retired manifest-log generation, which is no longer "
+            "read; re-write the table with the current sink (read its files "
+            "with spark.read.json(files, schema) under the commit's "
+            "schema_json, overwrite)"
+        )
 
 
-def _format_of_name(name: str) -> str:
-    """The staged format a data file's name carries in its extension
-    (``part-*.jsonl`` / ``part-*.parquet``; CLONE and OPTIMIZE keep
-    those names)."""
-    for fmt in ("jsonl", "parquet"):
-        if name.endswith("." + fmt):
-            return fmt
-    raise ValueError(
-        f"data file {name!r} has neither a .jsonl nor a .parquet extension; "
-        "its staged format is unknown"
-    )
+def _check_append_target(path: str) -> None:
+    """Refuse an append into a table of a retired generation on the
+    driver, before any task stages: the appended commit would otherwise
+    land in a log no reader accepts."""
+    for m in _resolve_state(path, with_stats=False)["metas"]:
+        _check_generation(m)
 
 
-def _pin_read_schema(metas: list[dict]) -> tuple[str, StructType]:
-    """Derive ``(format, schema)`` for a resolved snapshot from the
-    schemas its commits RECORDED at write time — never by inference:
-    every commit identity in ``metas`` must record ``schema_json`` (see
-    :func:`_recorded_format`), and a snapshot with no commit identity
+def _pin_read_schema(metas: list[dict]) -> StructType:
+    """Derive the read schema of a resolved snapshot from the schemas
+    its commits RECORDED at write time — never by inference: every
+    commit identity in ``metas`` must be of the current generation (see
+    :func:`_check_generation`), and a snapshot with no commit identity
     at all (nothing committed at or below the pinned version) has
     nothing to pin, so both raise. ADDITIVE evolution is legal — the
     table-format contract: a commit may add new columns, and older files
@@ -1806,13 +1691,8 @@ def _pin_read_schema(metas: list[dict]) -> tuple[str, StructType]:
             "nothing is committed in the resolved snapshot: no manifest log "
             "at that path, or no commit at or below the pinned version"
         )
-    formats = sorted({_recorded_format(m) for m in metas})
-    if len(formats) > 1:
-        raise ValueError(
-            f"resolved snapshot mixes staged formats {formats}; commits with "
-            "different formats cannot be read as one DataFrame — expire or "
-            "overwrite past the older format first"
-        )
+    for m in metas:
+        _check_generation(m)
     merged: dict[str, StructField] = {}
     seen_json = set()
     for m in metas:  # commit order: evolution appends, never reorders
@@ -1831,7 +1711,7 @@ def _pin_read_schema(metas: list[dict]) -> tuple[str, StructType]:
                     "legal, a type change is not; overwrite with a single "
                     "schema or pin a version before the drift"
                 )
-    return formats[0], StructType(list(merged.values()))
+    return StructType(list(merged.values()))
 
 
 def _entry_proves_miss(entry, ranges) -> bool:
@@ -2035,8 +1915,8 @@ def read_manifest_sink(
     job is invisible at any pinned version (its commit, if it lands,
     gets a version number > k). The read schema is PINNED to what the
     resolved commits recorded at write time (never inferred), and the
-    read is distributed — Spark's JSON or parquet reader over the
-    explicit file list. ``prune={col: (lo, hi)}`` additionally drops
+    read is distributed — Spark's parquet reader over the explicit file
+    list. ``prune={col: (lo, hi)}`` additionally drops
     files whose commit-recorded min/max PROVE they hold no matching row
     (see :func:`prune_manifest_files`) — a superset guarantee, so pair
     it with the real ``.filter``.
@@ -2052,7 +1932,7 @@ def read_manifest_sink(
     # when pruning consumes them (checkpoint loads skip the column)
     state = _resolve_state(path, version, with_stats=bool(prune))
     mapping = state.get("mapping")
-    fmt, schema = _pin_read_schema(state["metas"])
+    schema = _pin_read_schema(state["metas"])
     if prune:
         files = _prune_state(path, state, prune)
     else:
@@ -2063,13 +1943,13 @@ def read_manifest_sink(
         # provably-empty pruned read: return the schema-true empty frame
         # (logical view when a column mapping exists)
         return local_relation_df(
-            spark, [], _snapshot_logical_schema(state["metas"], mapping)[1]
+            spark, [], _snapshot_logical_schema(state["metas"], mapping)
         )
     # the immutable physical names project to the CURRENT (or
     # as-of-version) logical view: renames surface, drops vanish — a pure
     # projection, column-pruned at the scan by Catalyst
     return _project_logical_df(
-        _read_file_list(spark, files, fmt, schema), schema, mapping
+        _read_file_list(spark, files, schema), schema, mapping
     )
 
 
@@ -2138,7 +2018,7 @@ def optimize_manifest_sink(
         holds="a stream log — use compact_stream_manifests there",
     )
     base_version = state["version"]
-    fmt = _pin_read_schema(state["metas"])[0]
+    _pin_read_schema(state["metas"])
     # OPTIMIZE materializes the mapping: it reads the LOGICAL view and
     # overwrites (which resets the mapping), so the rewrite's tiers are
     # the logical names of the surviving physical keys
@@ -2159,7 +2039,7 @@ def optimize_manifest_sink(
         shaped = snapshot.repartition(target_files)
     _stage_and_commit(
         shaped,
-        _rewrite_options(path, fmt, base_version + 1, (stats_cols, bloom_cols)),
+        _rewrite_options(path, base_version + 1, (stats_cols, bloom_cols)),
         overwrite=True,
     )
 
@@ -2171,9 +2051,8 @@ def _basename_of_uri(uri: str) -> str:
     return os.path.basename(unquote(urlparse(uri).path))
 
 
-def _read_file_list(spark: SparkSession, files: list[str], fmt: str, schema):
-    reader = spark.read.schema(schema)
-    return reader.parquet(*files) if fmt == "parquet" else reader.json(files)
+def _read_file_list(spark: SparkSession, files: list[str], schema):
+    return spark.read.schema(schema).parquet(*files)
 
 
 def _project_logical_df(df, physical_schema, mapping):
@@ -2193,17 +2072,17 @@ def _project_logical_df(df, physical_schema, mapping):
 
 def _snapshot_for_rmw(
     path: str,
-) -> tuple[dict, str, StructType, StructType, tuple[list[str], list[str]]]:
+) -> tuple[dict, StructType, StructType, tuple[list[str], list[str]]]:
     """Pin step of the copy-on-write skeleton (:func:`_copy_on_write`):
     pin the snapshot, pin the recorded schema (a rewrite re-stages
     EXACTLY the recorded types), derive the skipping tiers to
-    re-record. Returns ``(state, fmt, physical_schema, logical_schema,
+    re-record. Returns ``(state, physical_schema, logical_schema,
     tiers)``; the logical schema is the column-mapped view the ops work
     in, ``tiers`` is :func:`_rewrite_tiers` of the snapshot."""
     state = _batch_state(path, "copy-on-write commits need")
-    fmt, schema = _pin_read_schema(state["metas"])
-    lschema = _snapshot_logical_schema(state["metas"], state.get("mapping"))[1]
-    return state, fmt, schema, lschema, _rewrite_tiers(state)
+    schema = _pin_read_schema(state["metas"])
+    lschema = _snapshot_logical_schema(state["metas"], state.get("mapping"))
+    return state, schema, lschema, _rewrite_tiers(state)
 
 
 def _rewrite_tiers(state: dict) -> tuple[list[str], list[str]]:
@@ -2233,13 +2112,12 @@ def _rewrite_tiers(state: dict) -> tuple[list[str], list[str]]:
 
 
 def _rewrite_options(
-    path: str, fmt: str, expected_version: int, tiers: tuple[list[str], list[str]]
+    path: str, expected_version: int, tiers: tuple[list[str], list[str]]
 ) -> dict:
     """The writer options a read-modify-write commit stages under: it
     claims EXACTLY ``expected_version`` and re-records ``tiers``."""
     return {
         "path": path,
-        "format": fmt,
         "expectedVersion": str(expected_version),
         "statsColumns": ",".join(tiers[0]),
         "bloomFilterColumns": ",".join(tiers[1]),
@@ -2295,13 +2173,12 @@ def _stage_and_commit(
 def _publish_replace(
     df: DataFrame,
     path: str,
-    fmt: str,
     removed: list[str],
     expected_version: int,
     tiers: tuple[list[str], list[str]],
 ) -> None:
     _stage_and_commit(
-        df, _rewrite_options(path, fmt, expected_version, tiers), False, removed
+        df, _rewrite_options(path, expected_version, tiers), False, removed
     )
 
 
@@ -2412,12 +2289,12 @@ def _copy_on_write(
     "rewritten_files", "candidate_files", "total_files"}``."""
     from pyspark.sql import functions as F
 
-    state, fmt, schema, lschema, tiers = snap
+    state, schema, lschema, tiers = snap
     base_version, mapping = state["version"], state.get("mapping")
 
     def scan(files: list[str]) -> DataFrame:
         return _project_logical_df(
-            _read_file_list(spark, files, fmt, schema), schema, mapping
+            _read_file_list(spark, files, schema), schema, mapping
         )
 
     keys = match.columns if isinstance(match, DataFrame) else None
@@ -2479,7 +2356,7 @@ def _copy_on_write(
     expected, attempt = base_version + 1, 0
     while True:
         try:
-            _publish_replace(new_data, path, fmt, removed, expected, tiers)
+            _publish_replace(new_data, path, removed, expected, tiers)
             return {**result, "version": expected}
         except ConcurrentManifestWriteError:
             head = _resolve_state(path, with_stats=False)["version"]
@@ -2560,7 +2437,7 @@ def merge_into_manifest_sink(
     from pyspark.sql import functions as F
 
     snap = _snapshot_for_rmw(path)
-    state, lschema = snap[0], snap[3]
+    state, lschema = snap[0], snap[2]
     # column mapping (r15): the table's files carry immutable PHYSICAL
     # names; the merge operates entirely in the LOGICAL view (updates
     # arrive logical, scans are projected, the staged rewrite maps back
@@ -2807,7 +2684,7 @@ def delete_range_from_manifest_sink(
         raise ValueError("pass at least one bound (lo/hi); an unbounded "
                          "range delete is a truncate — use mode('overwrite')")
     snap = _snapshot_for_rmw(path)
-    state, cols = snap[0], snap[3].fieldNames()
+    state, cols = snap[0], snap[2].fieldNames()
     if col not in cols:
         raise ValueError(f"range column {col!r} not in table columns {cols}")
     # skipping stats are keyed by PHYSICAL name
@@ -2925,16 +2802,16 @@ def _to_physical_schema(schema: StructType, mapping: dict | None) -> StructType:
 
 
 def _snapshot_logical_schema(metas: list[dict], mapping: dict | None):
-    """``(format, logical_schema)`` for a resolved snapshot — the
-    physical pin from :func:`_pin_read_schema` (same refusals) projected
-    through the mapping."""
+    """The logical schema of a resolved snapshot — the physical pin from
+    :func:`_pin_read_schema` (same refusals) projected through the
+    mapping."""
     from pyspark.sql.types import StructField
 
-    fmt, phys = _pin_read_schema(metas)
+    phys = _pin_read_schema(metas)
     if not mapping:
-        return fmt, phys
+        return phys
     proj = _logical_projection(phys, mapping)
-    return fmt, StructType(
+    return StructType(
         [StructField(l, t, nullable=True) for l, _p, t in proj]
     )
 
@@ -2982,7 +2859,7 @@ def _mapping_target(
     state = _batch_state(
         path, f"{op.lower().replace(' ', '_')} expects", with_stats=False
     )
-    _fmt, phys = _pin_read_schema(state["metas"])
+    phys = _pin_read_schema(state["metas"])
     proj = _logical_projection(phys, state.get("mapping"))
     names = [l for l, _p, _t in proj]
     if name not in names:
@@ -3056,13 +2933,13 @@ def _base_manifest(
     recorded schema and column mapping (an overwrite otherwise RESETS
     the mapping), with ``file_stats`` keyed by those entries. No data
     file is read or written."""
-    fmt, schema = _pin_read_schema(state["metas"])
+    schema = _pin_read_schema(state["metas"])
     manifest = {
         "files": files,
         "n_rows": None,  # not tracked per file outside stats; readers never use it
         "fields": schema.fieldNames(),
         "schema_json": schema.json(),
-        "format": fmt,
+        "format": "parquet",
         "mode": "overwrite",
         "ts": time.time(),
         **provenance,
@@ -3146,8 +3023,8 @@ def clone_manifest_sink(
     the refs either way.
 
     Refuses to clone into a directory that already holds a log (a clone
-    CREATES a table), and refuses mixed-format source snapshots (same
-    single-frame rule as every reader). Returns ``{"version",
+    CREATES a table), and refuses source snapshots the schema pin
+    refuses (same rule as every reader). Returns ``{"version",
     "source_version", "files", "deep"}``."""
     if timestamp is not None and version is not None:
         raise ValueError("pass version or timestamp, not both")
@@ -3264,10 +3141,8 @@ def manifest_changes(
     def _side(files: list[str], metas: list[dict]) -> DataFrame | None:
         if not files:
             return None
-        fmt, schema = _pin_read_schema(metas)
-        df = _read_file_list(
-            spark, [os.path.join(path, f) for f in files], fmt, schema
-        )
+        schema = _pin_read_schema(metas)
+        df = _read_file_list(spark, [os.path.join(path, f) for f in files], schema)
         # both sides share immutable PHYSICAL names; the feed reads at
         # the END version's logical view (Delta CDF's rule under column
         # mapping): renames surface uniformly, dropped columns vanish
@@ -3329,7 +3204,7 @@ def manifest_changes(
     if dels is not None:
         return dels
     # no change between the snapshots: empty frame, schema-true
-    _fmt, schema = _pin_read_schema(new["metas"] or old["metas"])
+    schema = _pin_read_schema(new["metas"] or old["metas"])
     from pyspark.sql.types import StringType, StructField
 
     return local_relation_df(
@@ -3354,7 +3229,7 @@ def describe_manifest_detail(spark: SparkSession, path: str) -> DataFrame:
     if state["kind"] is None:
         raise ValueError(f"no manifest log under {path}")
     mapping = state.get("mapping")
-    fmt, lschema = _snapshot_logical_schema(state["metas"], mapping)
+    lschema = _snapshot_logical_schema(state["metas"], mapping)
     cols_csv = ",".join(lschema.fieldNames())
     fstats = state.get("file_stats", {})
     # physical->logical for reporting which LOGICAL columns are covered
@@ -3397,7 +3272,7 @@ def describe_manifest_detail(spark: SparkSession, path: str) -> DataFrame:
     row = (
         os.path.abspath(path),
         int(state["version"]),
-        fmt,
+        "parquet",
         len(state["files"]),
         n_rows_total,
         int(size),
@@ -3530,13 +3405,13 @@ def compact_stream_manifests(path: str, upto_batch: int) -> str:
         files, metas, fstats, _m = _apply_commit(man, files, metas, fstats, None)
     # the compacted base must present ONE coherent schema — reuse the
     # reader's drift rules so compaction can't paper over a drifted log
-    fmt, schema = _pin_read_schema(metas)
+    schema = _pin_read_schema(metas)
     manifest = {
         "files": files,
         "n_rows": n_rows,
         "fields": schema.fieldNames(),
         "schema_json": schema.json(),
-        "format": fmt,
+        "format": "parquet",
         "mode": "overwrite",
         "batch_id": upto_batch,
         "compacted_through": upto_batch,
@@ -3646,7 +3521,9 @@ def vacuum_manifest_sink(
     for name in sorted(os.listdir(path)):
         # log files all start with "_" (manifests, checkpoints — including
         # the r14 parquet checkpoints, which a bare *.parquet sweep would
-        # otherwise eat — and the hint); only staged DATA files are swept
+        # otherwise eat — and the hint); only staged DATA files are swept,
+        # ``.jsonl`` ones too: a JSONL-generation table leaves them behind
+        # once it is rewritten through the sink and its old versions expire
         if name.startswith(("_", ".")):
             continue
         if not name.endswith((".jsonl", ".parquet")) or name in referenced:

@@ -2,13 +2,15 @@
 rollups + the _LAST_CHECKPOINT hint, cross-family commit guards,
 pinned (never inferred) read schemas, parquet staging, stream-log
 compaction -> retention, the vacuum grace period, and the refusal of
-the schema-less pre-v2 generation."""
+the retired generations (schema-less pre-v2, JSONL-staged)."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -30,21 +32,26 @@ from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
 SCHEMA = StructType([StructField("id", LongType())])
 
 
+def _stage_rows(d: str, name: str, cols: dict) -> None:
+    """Hand-stage one parquet data file (``cols``: name -> pyarrow array)."""
+    pq.write_table(pa.table(cols), os.path.join(d, name))
+
+
 def _stage(d: str, name: str, ids) -> _StagedFile:
-    with open(os.path.join(d, name), "w") as f:
-        f.writelines(f'{{"id": {i}}}\n' for i in ids)
-    return _StagedFile(name, len(list(ids)))
+    ids = list(ids)
+    _stage_rows(d, name, {"id": pa.array(ids, pa.int64())})
+    return _StagedFile(name, len(ids))
 
 
 def _batch_commit(d: str, ids, tag: str, overwrite: bool = False) -> None:
     os.makedirs(d, exist_ok=True)
-    msg = _stage(d, f"part-00000-{tag}.jsonl", ids)
+    msg = _stage(d, f"part-00000-{tag}.parquet", ids)
     ManifestSinkWriter({"path": d}, SCHEMA, overwrite=overwrite).commit([msg])
 
 
 def _stream_commit(d: str, ids, tag: str, batch_id: int) -> None:
     os.makedirs(d, exist_ok=True)
-    msg = _stage(d, f"part-00000-{tag}.jsonl", ids)
+    msg = _stage(d, f"part-00000-{tag}.parquet", ids)
     ManifestStreamSinkWriter({"path": d}, SCHEMA).commit([msg], batch_id)
 
 
@@ -65,11 +72,10 @@ def test_batch_commit_into_stream_dir_refused_before_publish(tmp_path):
 
 
 def read_manifest_sink_rows(d):
-    # tiny local JSONL reader through the log: keeps guard tests Spark-free
+    # tiny local parquet reader through the log: keeps guard tests Spark-free
     rows = []
     for f in resolve_manifest_files(d):
-        with open(f) as fh:
-            rows.extend(json.loads(line) for line in fh)
+        rows.extend(pq.read_table(f).to_pylist())
     return [type("R", (), r)() for r in rows]
 
 
@@ -203,14 +209,14 @@ def test_concurrent_multiprocess_writers_lose_nothing(tmp_path):
 def test_legacy_bare_manifest_refused(spark, tmp_path):
     """A directory written by the schema-less pre-v2 generation (one bare
     _MANIFEST) is not read: a read raises naming the generation, and an
-    append raises before publishing anything — no versioned commit, and
-    the job's staged files are swept by abort()."""
+    append raises on the driver before any task stages — no versioned
+    commit, no staged file."""
     d = str(tmp_path / "legacy")
     os.makedirs(d)
-    _stage(d, "part-00000-old.jsonl", [1, 2, 3])
+    _stage(d, "part-00000-old.parquet", [1, 2, 3])
     with open(os.path.join(d, MANIFEST), "w") as f:
         json.dump(
-            {"files": ["part-00000-old.jsonl"], "n_rows": 3, "fields": ["id"]}, f
+            {"files": ["part-00000-old.parquet"], "n_rows": 3, "fields": ["id"]}, f
         )
     with pytest.raises(ValueError, match="pre-v2"):
         read_manifest_sink(spark, d)
@@ -219,7 +225,7 @@ def test_legacy_bare_manifest_refused(spark, tmp_path):
         spark.range(4, 6).write.format("manifestsink").option("path", d).mode(
             "append"
         ).save()
-    assert sorted(os.listdir(d)) == [MANIFEST, "part-00000-old.jsonl"]
+    assert sorted(os.listdir(d)) == [MANIFEST, "part-00000-old.parquet"]
 
 
 def test_commit_without_recorded_schema_refused(spark, tmp_path):
@@ -234,10 +240,10 @@ def test_commit_without_recorded_schema_refused(spark, tmp_path):
 
     d = str(tmp_path / "noschema")
     os.makedirs(d)
-    _stage(d, "part-00000-old.jsonl", [1, 2, 3])
+    _stage(d, "part-00000-old.parquet", [1, 2, 3])
     with open(os.path.join(d, "_MANIFEST.v00000001"), "w") as f:
         json.dump(
-            {"files": ["part-00000-old.jsonl"], "n_rows": 3, "fields": ["id"],
+            {"files": ["part-00000-old.parquet"], "n_rows": 3, "fields": ["id"],
              "mode": "append"},
             f,
         )
@@ -260,7 +266,7 @@ def test_commit_without_recorded_schema_refused(spark, tmp_path):
     )
     with pytest.raises(Exception, match="no schema_json.*pre-v2"):
         q.awaitTermination()
-    assert sorted(os.listdir(d)) == ["_MANIFEST.v00000001", "part-00000-old.jsonl"]
+    assert sorted(os.listdir(d)) == ["_MANIFEST.v00000001", "part-00000-old.parquet"]
 
 
 # ------------------------------------------------------- schema pinning
@@ -291,12 +297,12 @@ def test_additive_schema_evolution_projects_nulls(spark, tmp_path):
     s2 = StructType([StructField("id", LongType()), StructField("x", StringType())])
     os.makedirs(d)
     ManifestSinkWriter({"path": d}, s1, overwrite=False).commit(
-        [_stage(d, "part-00000-a.jsonl", [1])]
+        [_stage(d, "part-00000-a.parquet", [1])]
     )
-    with open(os.path.join(d, "part-00000-b.jsonl"), "w") as f:
-        f.write('{"id": 2, "x": "hey"}\n')
+    _stage_rows(d, "part-00000-b.parquet",
+                {"id": pa.array([2], pa.int64()), "x": pa.array(["hey"])})
     ManifestSinkWriter({"path": d}, s2, overwrite=False).commit(
-        [_StagedFile("part-00000-b.jsonl", 1)]
+        [_StagedFile("part-00000-b.parquet", 1)]
     )
     back = read_manifest_sink(spark, d)
     assert dict(back.dtypes) == {"id": "bigint", "x": "string"}
@@ -315,15 +321,15 @@ def test_type_conflict_across_resolved_commits_raises(spark, tmp_path):
     s1 = StructType([StructField("id", LongType()), StructField("x", LongType())])
     s2 = StructType([StructField("id", LongType()), StructField("x", StringType())])
     os.makedirs(d)
-    with open(os.path.join(d, "part-00000-a.jsonl"), "w") as f:
-        f.write('{"id": 1, "x": 7}\n')
+    _stage_rows(d, "part-00000-a.parquet",
+                {"id": pa.array([1], pa.int64()), "x": pa.array([7], pa.int64())})
     ManifestSinkWriter({"path": d}, s1, overwrite=False).commit(
-        [_StagedFile("part-00000-a.jsonl", 1)]
+        [_StagedFile("part-00000-a.parquet", 1)]
     )
-    with open(os.path.join(d, "part-00000-b.jsonl"), "w") as f:
-        f.write('{"id": 2, "x": "hey"}\n')
+    _stage_rows(d, "part-00000-b.parquet",
+                {"id": pa.array([2], pa.int64()), "x": pa.array(["hey"])})
     ManifestSinkWriter({"path": d}, s2, overwrite=False).commit(
-        [_StagedFile("part-00000-b.jsonl", 1)]
+        [_StagedFile("part-00000-b.parquet", 1)]
     )
     with pytest.raises(ValueError, match="schema drift.*type change is not"):
         read_manifest_sink(spark, d)
@@ -372,20 +378,140 @@ def test_parquet_staging_roundtrip_through_same_log(spark, tmp_path):
     assert back.agg(F.sum("v")).collect()[0][0] == pytest.approx(
         sum(i * 1.5 for i in range(200))
     )
-    # orphaned parquet staging is swept like jsonl
+    # orphaned staging is swept
     import shutil
 
     shutil.copy(
         os.path.join(d, staged[0]), os.path.join(d, "part-99999-orphan.parquet")
     )
     assert vacuum_manifest_sink(d, grace_seconds=0) == ["part-99999-orphan.parquet"]
-    # a jsonl commit into a parquet snapshot is refused at read time
+    # the default format is the same parquet staging
     spark.range(5).write.format("manifestsink").option("path", d).mode(
         "append"
     ).save()
-    with pytest.raises(ValueError, match="mixes staged formats"):
+    assert read_manifest_sink(spark, d).count() == 205
+    assert all(
+        f.endswith(".parquet") for f in os.listdir(d) if f.startswith("part-")
+    )
+
+
+def _dir_bytes(d: str) -> dict:
+    out = {}
+    for name in sorted(os.listdir(d)):
+        with open(os.path.join(d, name), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
+def test_jsonl_generation_refused(spark, tmp_path):
+    """JSONL staging is a retired generation. A hand-built JSONL table (a
+    commit recording ``"format": "jsonl"`` over a ``.jsonl`` part file)
+    is refused by the batch read, MERGE, DELETE, OPTIMIZE, the
+    manifestlog stream (with the log's schema and with an explicit one)
+    and a batch append, each naming the rewrite; the directory is left
+    byte-for-byte unchanged. Asking the writer for JSONL staging raises
+    before any task stages."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
+        ManifestLogDataSource,
+        delete_from_manifest_sink,
+        merge_into_manifest_sink,
+        optimize_manifest_sink,
+    )
+
+    d = str(tmp_path / "jsonl")
+    os.makedirs(d)
+    with open(os.path.join(d, "part-00000-old.jsonl"), "w") as f:
+        f.writelines(f'{{"id": {i}}}\n' for i in (1, 2, 3))
+    with open(os.path.join(d, "_MANIFEST.v00000001"), "w") as f:
+        json.dump(
+            {"files": ["part-00000-old.jsonl"], "n_rows": 3, "fields": ["id"],
+             "schema_json": SCHEMA.json(), "format": "jsonl",
+             "mode": "append", "ts": 1.0},
+            f,
+        )
+    before = _dir_bytes(d)
+    refused = "format 'jsonl'.*spark.read.json"
+    with pytest.raises(ValueError, match=refused):
         read_manifest_sink(spark, d)
-    assert read_manifest_sink(spark, d, version=1).count() == 200
+    with pytest.raises(ValueError, match=refused):
+        merge_into_manifest_sink(spark, d, spark.range(2, 4), ["id"])
+    with pytest.raises(ValueError, match=refused):
+        delete_from_manifest_sink(spark, d, "id = 1")
+    with pytest.raises(ValueError, match=refused):
+        optimize_manifest_sink(spark, d)
+    spark.dataSource.register(ManifestLogDataSource)
+    with pytest.raises(Exception, match=refused):
+        spark.readStream.format("manifestlog").option("path", d).load()
+    q = (
+        spark.readStream.format("manifestlog")
+        .schema("id long")
+        .option("path", d)
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=refused):
+        q.awaitTermination()
+    spark.dataSource.register(ManifestSinkDataSource)
+    with pytest.raises(Exception, match=refused):
+        spark.range(4, 6).write.format("manifestsink").option("path", d).mode(
+            "append"
+        ).save()
+    assert _dir_bytes(d) == before
+    # the writer refuses JSONL staging at init, into a fresh directory too
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(Exception, match="parquet only"):
+        spark.range(3).write.format("manifestsink").option("path", fresh).option(
+            "format", "jsonl"
+        ).mode("append").save()
+    assert not os.path.exists(fresh)
+    # the rewrite the refusal names: read the files as JSON under the
+    # recorded schema, overwrite through the sink
+    files = [os.path.join(d, "part-00000-old.jsonl")]
+    spark.read.schema(SCHEMA).json(files).write.format("manifestsink").option(
+        "path", d
+    ).mode("overwrite").save()
+    assert sorted(r.id for r in read_manifest_sink(spark, d).collect()) == [1, 2, 3]
+
+
+def test_default_sink_round_trips_date_timestamp_decimal(spark, tmp_path):
+    """Date, timestamp and decimal columns (which JSONL staging could not
+    encode) round-trip through the default batch sink, the manifestlog
+    source and the streaming manifest sink, each read back bit-equal."""
+    import datetime
+    import decimal
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
+        ManifestLogDataSource,
+    )
+
+    rows = [
+        (1, datetime.date(2024, 2, 29), datetime.datetime(2024, 2, 29, 23, 59, 59, 999999),
+         decimal.Decimal("-12345678901234.5678")),
+        (2, None, None, None),
+        (3, datetime.date(1970, 1, 1), datetime.datetime(1970, 1, 1), decimal.Decimal("0.0001")),
+    ]
+    ddl = "id long, dt date, ts timestamp, dec decimal(18,4)"
+    spark.dataSource.register(ManifestSinkDataSource)
+    spark.dataSource.register(ManifestLogDataSource)
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    df = spark.createDataFrame(rows, ddl)
+    df.write.format("manifestsink").option("path", src).mode("append").save()
+    (
+        spark.readStream.format("manifestlog").option("path", src).load()
+        .writeStream.format("manifestsink")
+        .option("path", dst)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    for d in (src, dst):
+        back = read_manifest_sink(spark, d)
+        assert back.schema == df.schema
+        assert sorted(map(tuple, back.collect())) == rows
 
 
 # ------------------------------------------------- stream compaction
@@ -457,9 +583,8 @@ def test_stream_compaction_keeps_skipping_stats(tmp_path):
     d = str(tmp_path / "stream")
     os.makedirs(d)
     for b in range(4):
-        name = f"part-00000-b{b}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {b}}}\n')
+        name = f"part-00000-b{b}.parquet"
+        _stage(d, name, [b])
         msg = _StagedFile(name, 1, stats={"id": [b, b]})
         ManifestStreamSinkWriter({"path": d}, SCHEMA).commit([msg], b)
     before = prune_manifest_files(d, {"id": (0, 0)})
@@ -515,9 +640,8 @@ def test_manifest_stats_survive_checkpoint_fast_path(tmp_path):
     d = str(tmp_path / "log")
     os.makedirs(d)
     for i in range(1, 20):  # past the interval-16 checkpoint
-        name = f"part-00000-v{i}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {i}}}\n')
+        name = f"part-00000-v{i}.parquet"
+        _stage(d, name, [i])
         msg = _StagedFile(name, 1, stats={"id": [i, i]})
         ManifestSinkWriter({"path": d}, SCHEMA, overwrite=False).commit([msg])
     hint = os.path.join(d, "_LAST_CHECKPOINT")
@@ -527,7 +651,7 @@ def test_manifest_stats_survive_checkpoint_fast_path(tmp_path):
     os.rename(hint + ".bak", hint)
     assert kept_fast == kept_slow and total_fast == total_slow == 19
     assert [os.path.basename(p) for p in kept_fast] == [
-        "part-00000-v5.jsonl", "part-00000-v6.jsonl", "part-00000-v7.jsonl"
+        "part-00000-v5.parquet", "part-00000-v6.parquet", "part-00000-v7.parquet"
     ]
 
 
@@ -684,44 +808,3 @@ def test_stream_dedup_windowed_chain_has_batch_fallback(spark, sf_dir):
     )
     key = lambda r: (r.window_start, r.event_type)  # noqa: E731
     assert sorted(out.collect(), key=key) == sorted(base.collect(), key=key)
-
-
-def test_jsonl_batch_bytes_all_paths_parse_identically():
-    """The r16 columnar NDJSON encoder (jsonl staging): the pyarrow fast
-    path (int/string/bool), the orjson escape fallback, and the stdlib
-    float fallback must all produce lines that json.loads back to
-    exactly the records to_pylist() yields — the old per-row json.dump
-    contract, minus the per-row Python."""
-    import math
-
-    import pyarrow as pa
-
-    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
-        _jsonl_batch_bytes,
-    )
-
-    def roundtrip(batch):
-        lines = _jsonl_batch_bytes(batch).decode("utf-8").splitlines()
-        assert len(lines) == batch.num_rows
-        return [json.loads(ln) for ln in lines]
-
-    # fast path: ints (with nulls), strings (with nulls, non-ASCII but
-    # escape-free), booleans
-    fast = pa.record_batch(
-        {
-            "i": pa.array([1, None, -7], type=pa.int64()),
-            "s": pa.array(["en", None, "café"]),
-            "b": pa.array([True, False, None]),
-        }
-    )
-    assert roundtrip(fast) == fast.to_pylist()
-    # escape fallback: quotes / backslashes / control chars in strings
-    esc = pa.record_batch(
-        {"s": pa.array(['say "hi"', "a\\b", "tab\there", None])}
-    )
-    assert roundtrip(esc) == esc.to_pylist()
-    # float fallback (stdlib json): NaN must stay NaN, not become null
-    flt = pa.record_batch({"x": pa.array([1.5, float("nan"), None])})
-    got = roundtrip(flt)
-    assert got[0] == {"x": 1.5} and got[2] == {"x": None}
-    assert math.isnan(got[1]["x"])

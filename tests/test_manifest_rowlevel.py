@@ -618,17 +618,22 @@ def test_null_count_stats_enable_null_predicates(spark, tmp_path):
 def test_legacy_list_stats_still_prune_ranges_not_nulls(tmp_path):
     """Back-compat: pre-r14 manifests carry [min, max] list stats — the
     range tier still works, the null tier never prunes them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     d = str(tmp_path / "t")
     os.makedirs(d)
-    with open(os.path.join(d, "f1.jsonl"), "w") as f:
-        f.write('{"id": 1}\n')
+    pq.write_table(
+        pa.table({"id": pa.array([1], pa.int64())}), os.path.join(d, "f1.parquet")
+    )
     man = {
-        "files": ["f1.jsonl"],
+        "files": ["f1.parquet"],
         "n_rows": 1,
         "fields": ["id"],
-        "format": "jsonl",
+        "schema_json": SCHEMA.json(),
+        "format": "parquet",
         "mode": "append",
-        "file_stats": {"f1.jsonl": {"id": [1, 1]}},
+        "file_stats": {"f1.parquet": {"id": [1, 1]}},
     }
     with open(os.path.join(d, "_MANIFEST.v00000001"), "w") as f:
         json.dump(man, f)
@@ -643,6 +648,8 @@ def test_parquet_checkpoint_equals_json_checkpoint(tmp_path):
     depth); the two on-disk formats must be logically identical — same
     resolution, same stats — and a pre-r14 bare-JSON checkpoint stays
     readable alongside."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql.types import LongType, StructField, StructType
 
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
@@ -656,9 +663,10 @@ def test_parquet_checkpoint_equals_json_checkpoint(tmp_path):
     os.makedirs(d)
     schema = StructType([StructField("id", LongType())])
     for i in range(1, 20):  # past the interval-16 checkpoint
-        name = f"part-00000-v{i}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {i}}}\n')
+        name = f"part-00000-v{i}.parquet"
+        pq.write_table(
+            pa.table({"id": pa.array([i], pa.int64())}), os.path.join(d, name)
+        )
         msg = _StagedFile(
             name, 1, stats={"id": {"min": i, "max": i, "nulls": 0, "rows": 1}}
         )
@@ -694,20 +702,20 @@ def test_parquet_checkpoint_equals_json_checkpoint(tmp_path):
 # ----------------------------------------------------------------- arrow
 
 
-def test_manifestlog_arrow_read_bit_equal_to_tuple_path(spark, tmp_path):
+def test_manifestlog_arrow_read_bit_equal_to_batch_read(spark, tmp_path):
+    """The manifestlog stream ships each staged file as Arrow batches:
+    the streamed rows equal the batch read of the same snapshot and the
+    rows written."""
     d = str(tmp_path / "t")
     spark.dataSource.register(ManifestSinkDataSource)
     _write(spark, d, 0, 1000, format="parquet")
     _write(spark, d, 1000, 2000, format="parquet")
     from tests.test_manifest_log_v2 import _tail_once
 
-    out_a, ck_a = str(tmp_path / "oa"), str(tmp_path / "ca")
-    out_t, ck_t = str(tmp_path / "ot"), str(tmp_path / "ct")
-    _tail_once(spark, d, out_a, ck_a)  # arrow default on
-    _tail_once(spark, d, out_t, ck_t, arrow="false")
-    a = sorted(r.id for r in spark.read.parquet(out_a).collect())
-    t = sorted(r.id for r in spark.read.parquet(out_t).collect())
-    assert a == t == list(range(2000))
+    out, ck = str(tmp_path / "o"), str(tmp_path / "c")
+    _tail_once(spark, d, out, ck)
+    a = sorted(r.id for r in spark.read.parquet(out).collect())
+    assert a == _ids(read_manifest_sink(spark, d)) == list(range(2000))
 
 
 def test_manifestlog_starting_timestamp(spark, tmp_path):
@@ -901,30 +909,30 @@ def test_manifestlog_stream_change_feed(spark, tmp_path):
     ]
 
 
-def test_manifestlog_change_feed_arrow_and_tuple_agree(spark, tmp_path):
-    """The CDF columns ride both wire formats identically, parquet
-    staging included."""
+def test_manifestlog_change_feed_rows_of_a_replace(spark, tmp_path):
+    """The CDF columns ride the Arrow batches as per-file constants: a
+    DELETE's replace flows as its removed file's rows (delete) and its
+    rewrite's rows (insert), each stamped with the commit's version and
+    recorded time."""
     from tests.test_manifest_log_v2 import _tail_once
 
     d = str(tmp_path / "t")
     spark.dataSource.register(ManifestSinkDataSource)
     _write(spark, d, 0, 4, statsColumns="id", format="parquet")
     delete_from_manifest_sink(spark, d, "id = 2")  # v2: replace
-    outs = []
-    for tag, arrow in (("a", "true"), ("b", "false")):
-        out, ckpt = str(tmp_path / f"out{tag}"), str(tmp_path / f"ckpt{tag}")
-        _tail_once(
-            spark, d, out, ckpt, readChangeFeed="true", arrow=arrow
-        )
-        outs.append(
-            sorted(
-                (r.id, r._change_type, r._commit_version, r._commit_timestamp)
-                for r in spark.read.parquet(out).collect()
-            )
-        )
-    assert outs[0] == outs[1]
-    assert (2, "delete", 2) in [(i, c, v) for i, c, v, _ in outs[0]]
-    assert (2, "insert", 2) not in [(i, c, v) for i, c, v, _ in outs[0]]
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _tail_once(spark, d, out, ckpt, readChangeFeed="true")
+    got = sorted(
+        (r.id, r._change_type, r._commit_version, r._commit_timestamp)
+        for r in spark.read.parquet(out).collect()
+    )
+    ts = {v: json.load(open(os.path.join(d, f"_MANIFEST.v{v:08d}")))["ts"]
+          for v in (1, 2)}
+    assert got == sorted(
+        [(i, "insert", 1, ts[1]) for i in range(4)]
+        + [(i, "delete", 2, ts[2]) for i in range(4)]
+        + [(i, "insert", 2, ts[2]) for i in (0, 1, 3)]
+    )
 
 
 def test_manifestlog_change_feed_still_raises_on_overwrite(spark, tmp_path):
@@ -1340,8 +1348,8 @@ def test_manifestlog_cdf_two_replaces_one_batch_parquet(spark, tmp_path):
     availableNow batch on a parquet-format log — the second replace
     removes a file staged BY the first, which the old build-once fmt
     map never covered (it froze at the first replace), sending parquet
-    bytes through the jsonl reader. Formats now resolve from the staged
-    name's extension."""
+    bytes through the jsonl reader. Every staged file is parquet now, so
+    a removed file needs no format lookup at all."""
     from tests.test_manifest_log_v2 import _tail_once
 
     d, out, ckpt = (str(tmp_path / x) for x in ("t", "out", "ckpt"))
@@ -1397,11 +1405,11 @@ def test_checkpoint_by_version_reads_pre_r14_json_name(tmp_path):
     absent), and a version with neither name raises FileNotFoundError —
     the stale-hint signal the resolve fast path falls back on."""
     d = str(tmp_path)
-    ck = {"version": 4, "files": ["part-a.jsonl"], "metas": [],
-          "file_stats": {"part-a.jsonl": {"id": [1, 9]}}}
+    ck = {"version": 4, "files": ["part-a.parquet"], "metas": [],
+          "file_stats": {"part-a.parquet": {"id": [1, 9]}}}
     pysink._publish_exclusive(d, "_CHECKPOINT.v00000004", ck)
     got = pysink._load_checkpoint_by_version(d, 4)
-    assert got["files"] == ["part-a.jsonl"]
+    assert got["files"] == ["part-a.parquet"]
     assert got["file_stats"] == ck["file_stats"]
     with pytest.raises(FileNotFoundError):
         pysink._load_checkpoint_by_version(d, 7)
@@ -1624,7 +1632,7 @@ def test_disjoint_merge_race_multiprocess(tmp_path):
 @pytest.mark.slow
 def test_cdf_planning_flat_at_depth(tmp_path, monkeypatch):
     """r15 gate: CDF replace-batch planning opens exactly ONE manifest
-    per in-range commit at any log depth (extension-carried formats);
+    per in-range commit at any log depth (no per-file format lookup);
     the assertions live inside run_cdf_planning."""
     import sys
 
@@ -1789,9 +1797,9 @@ def test_describe_manifest_detail(spark, tmp_path):
     assert det.n_renamed_columns == 1 and det.n_dropped_columns == 0
     assert det.size_bytes == sum(
         os.path.getsize(os.path.join(d, f))
-        for f in os.listdir(d) if f.endswith(".jsonl")
+        for f in os.listdir(d) if f.startswith("part-")
     ) and det.size_bytes > 0
-    assert det.format == "jsonl"
+    assert det.format == "parquet"
     # a stats-less table reports honest NULL rows, zero tier coverage
     d2 = str(tmp_path / "t2")
     _write(spark, d2, 0, 3)
@@ -2049,7 +2057,7 @@ def test_publish_replace_staging_failure_leaves_nothing(spark, tmp_path):
 
     frame = spark.range(0, 40, 1, 4).select(boom("id").alias("id"))
     with pytest.raises(Exception, match="staging task fails"):
-        pysink._publish_replace(frame, d, "jsonl", [], 2, snap[4])
+        pysink._publish_replace(frame, d, [], 2, snap[3])
     assert sorted(os.listdir(d)) == before
     assert pysink._resolve_state(d)["version"] == 1
     assert _ids(read_manifest_sink(spark, d)) == [0, 1, 2, 3, 4]
@@ -2117,10 +2125,9 @@ def test_pruned_read_sees_one_snapshot_under_a_racing_overwrite(
     spark, tmp_path, monkeypatch
 ):
     """A pruned read at the latest version resolves the log ONCE: an
-    overwrite landing right after that resolve — parquet-staged over a
-    jsonl table, with other rows — must not leak into the read. A second
-    resolve for the pruning would scan the new parquet files under the
-    first snapshot's jsonl schema pin."""
+    overwrite landing right after that resolve, with other rows, must
+    not leak into the read. A second resolve for the pruning would scan
+    the overwrite's files instead of the pinned snapshot's."""
     d = str(tmp_path / "t")
     spark.dataSource.register(ManifestSinkDataSource)
     _write(spark, d, 0, 5, statsColumns="id")
@@ -2159,10 +2166,10 @@ def test_failed_publish_leaves_no_temp_file(tmp_path, monkeypatch):
         raise OSError(28, "No space left on device")
 
     monkeypatch.setattr(pq, "write_table", disk_full)
-    ck = {"version": 4, "files": ["part-a.jsonl"], "metas": [], "file_stats": {}}
+    ck = {"version": 4, "files": ["part-a.parquet"], "metas": [], "file_stats": {}}
     with pytest.raises(OSError, match="No space"):
         pysink._publish_checkpoint(d, 4, ck)
-    unserializable = {"files": ["part-a.jsonl"], "ts": object()}
+    unserializable = {"files": ["part-a.parquet"], "ts": object()}
     with pytest.raises(TypeError):
         pysink._publish_exclusive(d, "_MANIFEST.v00000001", unserializable)
     with pytest.raises(TypeError):

@@ -293,8 +293,14 @@ def test_manifest_sink_commit_protocol(spark, tmp_path):
     assert man["mode"] == "append"
 
     # orphaned attempt: staged but never committed -> invisible
-    with open(os.path.join(d, "part-99999-deadbeef.jsonl"), "w") as f:
-        f.write('{"id": -1, "g": -1, "v": -1.0}\n')
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"id": pa.array([-1], pa.int64()), "g": pa.array([-1], pa.int64()),
+                  "v": pa.array([-1.0])}),
+        os.path.join(d, "part-99999-deadbeef.parquet"),
+    )
 
     back = read_manifest_sink(spark, d)
     assert back.count() == 100
@@ -345,7 +351,7 @@ def test_manifest_sink_abort_leaves_no_manifest(spark, tmp_path):
     # (swept by job abort) AND the failing task's own in-progress file
     # (removed by its mid-write cleanup before the task error propagated —
     # it never produced a commit message, so abort() alone couldn't see it)
-    staged = [p for p in os.listdir(d) if p.endswith(".jsonl")] if os.path.exists(d) else []
+    staged = [p for p in os.listdir(d) if p.endswith(".parquet")] if os.path.exists(d) else []
     assert staged == [], f"abort left staged files: {staged}"
 
 
@@ -445,9 +451,13 @@ def test_manifest_sink_vacuum_sweeps_only_unreferenced(spark, tmp_path):
     spark.range(50).repartition(2).write.format("manifestsink").option(
         "path", d
     ).mode("append").save()
-    for orphan in ("part-90000-dead.jsonl", "part-90001-beef.jsonl"):
-        with open(os.path.join(d, orphan), "w") as f:
-            f.write('{"id": -1}\n')
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for orphan in ("part-90000-dead.parquet", "part-90001-beef.parquet"):
+        pq.write_table(
+            pa.table({"id": pa.array([-1], pa.int64())}), os.path.join(d, orphan)
+        )
 
     before = read_manifest_sink(spark, d).agg(F.sum("id")).collect()[0][0]
     # default grace period: the just-written orphans are indistinguishable
@@ -455,8 +465,8 @@ def test_manifest_sink_vacuum_sweeps_only_unreferenced(spark, tmp_path):
     # refuses them until they age past the grace window
     assert vacuum_manifest_sink(d) == []
     removed = vacuum_manifest_sink(d, grace_seconds=0)  # no writer in flight
-    assert removed == ["part-90000-dead.jsonl", "part-90001-beef.jsonl"]
-    assert len([p for p in os.listdir(d) if p.endswith(".jsonl")]) == 2
+    assert removed == ["part-90000-dead.parquet", "part-90001-beef.parquet"]
+    assert len([p for p in os.listdir(d) if p.endswith(".parquet")]) == 2
     after = read_manifest_sink(spark, d).agg(F.sum("id")).collect()[0][0]
     assert before == after == sum(range(50))
     assert vacuum_manifest_sink(d, grace_seconds=0) == []  # idempotent
@@ -535,11 +545,13 @@ def test_manifest_sink_concurrent_appends_lose_nothing(spark, tmp_path):
     wb = ManifestSinkWriter({"path": d}, schema, overwrite=False)
     # both jobs stage BEFORE either commits — the interleaving that
     # loses data under last-publish-wins
-    for name, ids in (("part-00000-aaaa.jsonl", [1, 2]), ("part-00000-bbbb.jsonl", [3])):
-        with open(os.path.join(d, name), "w") as f:
-            f.writelines(f'{{"id": {i}}}\n' for i in ids)
-    wa.commit([_StagedFile("part-00000-aaaa.jsonl", 2)])
-    wb.commit([_StagedFile("part-00000-bbbb.jsonl", 1)])
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name, ids in (("part-00000-aaaa.parquet", [1, 2]), ("part-00000-bbbb.parquet", [3])):
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), os.path.join(d, name))
+    wa.commit([_StagedFile("part-00000-aaaa.parquet", 2)])
+    wb.commit([_StagedFile("part-00000-bbbb.parquet", 1)])
     back = read_manifest_sink(spark, d)
     assert sorted(r.id for r in back.collect()) == [1, 2, 3]
     assert vacuum_manifest_sink(d) == []
@@ -567,8 +579,13 @@ def test_manifest_sink_time_travel_pins_snapshot(spark, tmp_path):
     assert read_manifest_sink(spark, d, version=2).count() == 30
     assert read_manifest_sink(spark, d).count() == 60
     # an in-flight job: staged, not committed — invisible everywhere
-    with open(os.path.join(d, "part-00000-inflight.jsonl"), "w") as f:
-        f.write('{"id": 999}\n')
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"id": pa.array([999], pa.int64())}),
+        os.path.join(d, "part-00000-inflight.parquet"),
+    )
     assert read_manifest_sink(spark, d, version=2).count() == 30
     assert read_manifest_sink(spark, d).count() == 60
     assert (
@@ -630,7 +647,7 @@ def test_manifest_sink_midwrite_failure_cleans_own_staging(spark, tmp_path):
     never returns a commit message, so job abort can't sweep it; the
     task's own except-path cleanup must. Pipelines the poison UDF into
     the write stage (no shuffle barrier after it) so the raise happens
-    mid-iteration, then asserts no .jsonl survives. Single-partition so
+    mid-iteration, then asserts no staged .parquet survives. Single-partition so
     the assertion isolates the except-path cleanup itself (a multi-task
     job's SIBLING files are abort()-swept, but a sibling completing
     after the sweep can land later — those are invisible-by-protocol and
@@ -660,7 +677,7 @@ def test_manifest_sink_midwrite_failure_cleans_own_staging(spark, tmp_path):
             "append"
         ).save()
     leftovers = (
-        [p for p in os.listdir(d) if p.endswith(".jsonl")]
+        [p for p in os.listdir(d) if p.endswith(".parquet")]
         if os.path.exists(d)
         else []
     )

@@ -54,7 +54,7 @@ def _commit(d: str, v: int, name: str, stats: dict, mode: str = "append",
              "fields": [{"name": "id", "type": "long",
                          "nullable": True, "metadata": {}}]}
         ),
-        "format": "jsonl",
+        "format": "parquet",
         "mode": mode,
         "ts": time.time(),
     }
@@ -77,18 +77,18 @@ def run_bloom(n_files: int, per_file: int) -> dict:
         vals = [i + j * n_files for j in range(per_file)]
         # touch a real (empty) data file so nothing downstream trips on
         # a missing name; the stress is about the metadata tier
-        open(os.path.join(d, f"f{i:05d}.jsonl"), "w").close()
+        open(os.path.join(d, f"f{i:05d}.parquet"), "w").close()
         stats = {
             "min": min(vals), "max": max(vals),
             "nulls": 0, "rows": per_file,
             "bloom": _bloom_build(set(vals)),
         }
-        man_bytes += _commit(d, i + 1, f"f{i:05d}.jsonl", {"id": stats})
+        man_bytes += _commit(d, i + 1, f"f{i:05d}.parquet", {"id": stats})
     probe = 1 + 7 * n_files  # held ONLY by file 1
     t0 = time.perf_counter()
     kept, total = prune_manifest_files(d, {"id": [(probe, probe)]})
     prune_ms = (time.perf_counter() - t0) * 1e3
-    holder = os.path.join(d, "f00001.jsonl")
+    holder = os.path.join(d, "f00001.parquet")
     assert holder in kept, "bloom lost the true holder — superset violated"
     assert total == n_files
     # range control: the same lookup as a range keeps everything
@@ -141,11 +141,11 @@ def run_cdf_planning(depth: int) -> dict:
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     for v in range(1, depth + 1):
-        open(os.path.join(d, f"f{v:05d}.jsonl"), "w").close()
-        _commit(d, v, f"f{v:05d}.jsonl", {})
-    open(os.path.join(d, f"f{depth + 1:05d}.jsonl"), "w").close()
-    _commit(d, depth + 1, f"f{depth + 1:05d}.jsonl", {}, mode="replace",
-            removed=["f00001.jsonl"])
+        open(os.path.join(d, f"f{v:05d}.parquet"), "w").close()
+        _commit(d, v, f"f{v:05d}.parquet", {})
+    open(os.path.join(d, f"f{depth + 1:05d}.parquet"), "w").close()
+    _commit(d, depth + 1, f"f{depth + 1:05d}.parquet", {}, mode="replace",
+            removed=["f00001.parquet"])
     reader = ManifestLogStreamReader(
         {"path": d, "readchangefeed": "true"}, schema
     )
@@ -157,8 +157,8 @@ def run_cdf_planning(depth: int) -> dict:
         plan_ms = (time.perf_counter() - t0) * 1e3
         replace_opens = opens["n"]
         assert {(p.filename, p.change) for p in parts} == {
-            ("f00001.jsonl", "delete"),
-            (f"f{depth + 1:05d}.jsonl", "insert"),
+            ("f00001.parquet", "delete"),
+            (f"f{depth + 1:05d}.parquet", "insert"),
         }
         opens["n"] = 0
         t0 = time.perf_counter()

@@ -42,6 +42,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _stage(d: str, name: str, row_id: int) -> None:
+    """Stage a one-row parquet data file, as a writer task would."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"id": pa.array([row_id], pa.int64())}), os.path.join(d, name)
+    )
+
+
 def _worker(args: tuple) -> float:
     """One writer process: stage + commit `n` times in a shared directory.
     Returns its wall time. (Module-level so mp can pickle it on spawn.)"""
@@ -56,9 +66,8 @@ def _worker(args: tuple) -> float:
     schema = StructType([StructField("id", LongType())])
     t0 = time.time()
     for i in range(n):
-        name = f"part-{wid:05d}-{i:08d}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {wid * 1000000 + i}}}\n')
+        name = f"part-{wid:05d}-{i:08d}.parquet"
+        _stage(d, name, wid * 1000000 + i)
         ManifestSinkWriter({"path": d}, schema, overwrite=False).commit(
             [_StagedFile(name, 1)]
         )
@@ -103,7 +112,7 @@ def run_concurrency(d: str, n_procs: int, commits_per_proc: int) -> dict:
     os.rename(hint_path + ".bak", hint_path)
     assert sorted(fast) == sorted(slow), "fast/slow resolution diverged"
     assert len(fast) == total and len(set(fast)) == total
-    staged = {f for f in os.listdir(d) if f.endswith(".jsonl")}
+    staged = {f for f in os.listdir(d) if f.startswith("part-")}
     assert staged == {os.path.basename(p) for p in fast}
 
     # 3. every published checkpoint equals the slow-scan resolution at
@@ -159,9 +168,8 @@ def _overwrite_worker(args: tuple) -> None:
     schema = StructType([StructField("id", LongType())])
     while len(_scan_names(d)[1]) < min_depth:
         time.sleep(0.005)
-    name = f"base-{wid:05d}.jsonl"
-    with open(os.path.join(d, name), "w") as f:
-        f.write(f'{{"id": {9000000 + wid}}}\n')
+    name = f"base-{wid:05d}.parquet"
+    _stage(d, name, 9000000 + wid)
     ManifestSinkWriter({"path": d}, schema, overwrite=True).commit(
         [_StagedFile(name, 1)]
     )
@@ -251,9 +259,8 @@ def _cas_worker(args: tuple) -> int:
     start.wait(timeout=120)
     while done < n:
         base = _resolve_state(d)["version"]
-        name = f"rmw-{wid:05d}-{done:04d}-base{base:08d}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {wid * 1000000 + done}}}\n')
+        name = f"rmw-{wid:05d}-{done:04d}-base{base:08d}.parquet"
+        _stage(d, name, wid * 1000000 + done)
         w = ManifestSinkWriter(
             {"path": d, "expectedversion": str(base + 1)}, schema, overwrite=False
         )
@@ -373,6 +380,8 @@ def run_disjoint_merge_race(d: str, n_procs: int, merges_per_proc: int) -> dict:
     - the resolved snapshot's rows are EXACTLY each worker's seed range
       plus its inserted keys, each once (no lost update, no duplicate
       key from a merge that failed to see a winner's file)."""
+    import pyarrow.parquet as pq
+
     from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (
         _V_PREFIX,
         resolve_manifest_files,
@@ -397,8 +406,7 @@ def run_disjoint_merge_race(d: str, n_procs: int, merges_per_proc: int) -> dict:
     )
     ids: list[int] = []
     for path in resolve_manifest_files(d):
-        with open(path) as f:
-            ids.extend(json.loads(line)["id"] for line in f)
+        ids.extend(pq.read_table(path, columns=["id"]).column("id").to_pylist())
     expect = sorted(
         v
         for w in range(n_procs)

@@ -32,6 +32,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pyarrow as pa  # noqa: E402
+import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql.types import LongType, StructField, StructType  # noqa: E402
 
 from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (  # noqa: E402
@@ -45,6 +47,13 @@ from fiap_machine_learning_tech_challenge_2_etl_spark.sources.pysink import (  #
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _stage(d: str, name: str, row_id: int) -> None:
+    """Stage a one-row parquet data file, as a writer task would."""
+    pq.write_table(
+        pa.table({"id": pa.array([row_id], pa.int64())}), os.path.join(d, name)
+    )
+
+
 def run_depth(d: str, n: int) -> dict:
     """Drive n commits + the full pin/overwrite/expire/vacuum cycle in
     directory ``d`` (must exist, empty); every invariant is asserted
@@ -54,9 +63,8 @@ def run_depth(d: str, n: int) -> dict:
 
     t0 = time.time()
     for i in range(1, n + 1):
-        name = f"part-00000-{i:08d}.jsonl"
-        with open(os.path.join(d, name), "w") as f:
-            f.write(f'{{"id": {i}}}\n')
+        name = f"part-00000-{i:08d}.parquet"
+        _stage(d, name, i)
         w = ManifestSinkWriter({"path": d}, schema, overwrite=False)
         w.commit([_StagedFile(name, 1)])
     t_commit = time.time() - t0
@@ -67,15 +75,14 @@ def run_depth(d: str, n: int) -> dict:
     for k in checks:
         files = resolve_manifest_files(d, version=k)
         assert len(files) == k, (k, len(files))
-        assert os.path.basename(files[0]) == "part-00000-00000001.jsonl"
+        assert os.path.basename(files[0]) == "part-00000-00000001.parquet"
     t_resolve = (time.time() - t0) / len(checks)
 
     # mid-log overwrite: resolution restarts at the base; older pins live on
     base_v = n + 1
-    with open(os.path.join(d, "part-00000-base.jsonl"), "w") as f:
-        f.write('{"id": -1}\n')
+    _stage(d, "part-00000-base.parquet", -1)
     ManifestSinkWriter({"path": d}, schema, overwrite=True).commit(
-        [_StagedFile("part-00000-base.jsonl", 1)]
+        [_StagedFile("part-00000-base.parquet", 1)]
     )
     assert len(resolve_manifest_files(d)) == 1
     assert len(resolve_manifest_files(d, version=n)) == n  # pre-base pin intact

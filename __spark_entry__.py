@@ -54,9 +54,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #     drops right rows with NULL timestamps (SQL semantics — NULL ts can
 #     never satisfy ts <= left.ts; property test extended with NULL
 #     keys/ts on both sides), the touched-partition pruning in
-#     run_incremental_pipeline now shares upsert_by_key's two-regime
-#     helper (literal OR-chain <= 100 partitions, broadcast semi-join
-#     beyond — sinks.filter_touched_partitions), the incremental sink
+#     run_incremental_pipeline now shares upsert_by_key's two regimes
+#     (literal OR-chain <= 100 partitions, broadcast semi-join beyond —
+#     today both run on sinks._merge_touched_partitions), the incremental sink
 #     raises on a reserved __ingest_epoch column in transform output,
 #     read_parquet_dir raises on MIXED partition layouts instead of
 #     silently skipping plain subdirs, and stream_stream_interval_join

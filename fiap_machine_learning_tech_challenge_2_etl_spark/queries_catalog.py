@@ -8998,7 +8998,7 @@ ORDER BY l_returnflag, l_linestatus
 
 
 @_register("tpch_q1_pricing_summary", sql=_Q1_SQL)
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 (pricing summary report) as a first-class named row —
     the canonical wide scan-aggregate: one lineitem pass, ~6 output
     groups, four money expressions folded into the map-side partial agg

@@ -8,7 +8,6 @@ from fiap_machine_learning_tech_challenge_2_etl_spark.sources.parquet import (
 )
 from fiap_machine_learning_tech_challenge_2_etl_spark.sources.sinks import (
     write_partitioned_parquet,
-    write_partitioned_table,
 )
 from fiap_machine_learning_tech_challenge_2_etl_spark.sources.text_formats import (
     quarantine_corrupt,
@@ -24,7 +23,6 @@ __all__ = [
     "read_table",
     "load_testdata",
     "write_partitioned_parquet",
-    "write_partitioned_table",
     "read_csv",
     "read_jsonl",
     "quarantine_corrupt",

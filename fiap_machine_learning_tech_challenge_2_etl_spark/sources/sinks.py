@@ -17,7 +17,7 @@ keeps post-shuffle partitions sane.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
@@ -99,33 +99,6 @@ def write_bucketed_table(
     writer.saveAsTable(table)
 
 
-def write_partitioned_table(
-    df: DataFrame,
-    table: str,
-    partition_by: Sequence[str],
-    path: str | None = None,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-) -> None:
-    """K1 — partitioned write registered in the session catalog.
-
-    The native equivalent of the reference's Glue sink with
-    enableUpdateCatalog/UPDATE_IN_DATABASE (etl/etl.py:94-107): the table is
-    created on first write and partitions are upserted on subsequent dynamic
-    overwrites.
-    """
-    writer = (
-        df.repartition(*partition_by)
-        .write.mode(mode)
-        .option("compression", compression)
-        .partitionBy(*partition_by)
-        .format("parquet")
-    )
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
 def _fs_path_exists(spark, path: str) -> bool:
     """Existence probe through the Hadoop FileSystem API, so it works for
     any scheme the session can read (s3a://, hdfs://, file:), not just the
@@ -143,41 +116,71 @@ def _fs_path_exists(spark, path: str) -> bool:
 _MAX_LITERAL_PARTITION_FILTER = 100
 
 
-def filter_touched_partitions(
-    existing: DataFrame,
-    source: DataFrame,
+def _merge_touched_partitions(
+    spark,
+    rows: DataFrame,
+    path: str,
     partition_by: Sequence[str],
-    touched: Sequence[tuple],
-) -> DataFrame:
-    """Two-regime touched-partition pruning, shared by ``upsert_by_key``
-    and ``streaming.incremental.run_incremental_pipeline``.
+    survivors: Callable[[DataFrame], DataFrame],
+    max_partitions: int | None = None,
+    compression: str = "snappy",
+    over_cap: str = "",
+) -> None:
+    """Read-modify-write of the partitions ``rows`` touches — the one
+    skeleton behind ``upsert_by_key`` and the
+    ``streaming.incremental.run_incremental_pipeline`` sink.
 
-    Up to ``_MAX_LITERAL_PARTITION_FILTER`` touched partitions: a null-safe
-    literal OR-chain (statically pruned at plan time; null-safe because a
-    null partition value — the Hive default partition — must still match
-    its survivors). Beyond that a literal mega-expression bloats the plan,
-    so prune via a broadcast LEFT SEMI join on the distinct partition
-    tuples of ``source`` (runtime pruning through the broadcast hash
-    join's pushed filter). ``touched`` is the already-collected list of
-    partition-value tuples (the caller needs it anyway for its batch-size
-    cap), so the literal regime costs no extra job.
+    ``survivors`` maps the existing rows of the touched partitions (an
+    empty frame when ``path`` does not exist yet) to the full content
+    those partitions hold after the merge; dynamic partition overwrite
+    then rewrites only them. Cost is O(touched partitions + batch), never
+    O(table). A batch touching no partition writes nothing. With
+    ``max_partitions``, the driver-side probe collects at most the cap
+    + 1 partition tuples and a batch over the cap raises
+    ``ValueError(over_cap)`` before anything is read or written.
+
+    The read-back is pinned to ``rows.schema``: inferring it would turn a
+    string partition value such as ``"007"`` or ``"2024-01-02"`` into an
+    int or date, and the rewrite would land it in a new directory
+    (``code=7``) beside the untouched old one. Pruning has two regimes:
+    up to ``_MAX_LITERAL_PARTITION_FILTER`` touched partitions a
+    null-safe literal OR-chain (statically pruned at plan time;
+    null-safe so the Hive default partition still matches); beyond it a
+    literal mega-expression would bloat the plan, so the read becomes a
+    broadcast LEFT SEMI join on the distinct partition tuples (runtime
+    pruning through the broadcast hash join's pushed filter).
     """
     from pyspark.sql import functions as F
 
-    if len(touched) <= _MAX_LITERAL_PARTITION_FILTER:
-        pfilter = F.lit(False)
-        for vals in touched:
-            clause = F.lit(True)
-            for c, v in zip(partition_by, vals):
-                clause = clause & F.col(c).eqNullSafe(F.lit(v))
-            pfilter = pfilter | clause
-        return existing.filter(pfilter)
-    parts = source.select(*partition_by).distinct()
-    cond = None
-    for c in partition_by:
-        cl = existing[c].eqNullSafe(parts[c])
-        cond = cl if cond is None else (cond & cl)
-    return existing.join(F.broadcast(parts), on=cond, how="left_semi")
+    rows = rows.persist()  # read twice: partition probe + merge/write
+    try:
+        parts = rows.select(*partition_by).distinct()
+        probe = parts if max_partitions is None else parts.limit(max_partitions + 1)
+        touched = probe.collect()
+        if not touched:
+            return
+        if max_partitions is not None and len(touched) > max_partitions:
+            raise ValueError(over_cap)
+        existing = rows.limit(0)
+        if _fs_path_exists(spark, path):
+            existing = spark.read.schema(rows.schema).parquet(path)
+            if len(touched) <= _MAX_LITERAL_PARTITION_FILTER:
+                pfilter = F.lit(False)
+                for vals in touched:
+                    clause = F.lit(True)
+                    for c, v in zip(partition_by, vals):
+                        clause = clause & F.col(c).eqNullSafe(F.lit(v))
+                    pfilter = pfilter | clause
+                existing = existing.filter(pfilter)
+            else:
+                cond = F.lit(True)
+                for c in partition_by:
+                    cond = cond & existing[c].eqNullSafe(parts[c])
+                existing = existing.join(F.broadcast(parts), on=cond, how="left_semi")
+        merged = survivors(existing.select(*rows.columns))
+        write_partitioned_parquet(merged, path, partition_by, compression=compression)
+    finally:
+        rows.unpersist()
 
 
 def upsert_by_key(
@@ -222,70 +225,33 @@ def upsert_by_key(
 
     This is the row-level semantics the reference's Glue sink gestures at
     with UPDATE_IN_DATABASE (etl/etl.py:94-107, which actually only
-    upserts whole partitions) done properly on plain parquet:
-    read-back is restricted to the partitions present in the incoming
-    batch (partition-pruned scan), existing rows matching an incoming key
-    are anti-joined out, and dynamic partition overwrite rewrites only
-    those partitions. Cost at 100 TB is O(touched partitions + batch),
-    never O(table). The key joins carry no broadcast hint: AQE
-    broadcasts the batch's distinct keys when small (the common
-    incremental case) and degrades a giant backfill batch to a shuffle
-    join instead of a forced-broadcast driver OOM.
-
-    Touched-partition pruning has two regimes: up to
-    ``_MAX_LITERAL_PARTITION_FILTER`` touched partitions the filter is an
-    OR-chain of null-safe literal clauses (statically pruned at plan
-    time); past that a literal mega-expression would bloat the plan, so
-    the probe becomes a broadcast semi-join on the partition tuple and
-    partition pruning happens at runtime via dynamic partition pruning /
-    the broadcast hash join's pushed filter.
+    upserts whole partitions) done properly on plain parquet, through
+    ``_merge_touched_partitions``: the touched partitions are read back
+    under ``new_rows``' schema (never an inferred one, so a partition
+    value like ``"007"`` keeps its directory), existing rows matching an
+    incoming key are anti-joined out, and dynamic partition overwrite
+    rewrites only those partitions. The key joins carry no broadcast
+    hint: AQE broadcasts the batch's distinct keys when small (the
+    common incremental case) and degrades a giant backfill batch to a
+    shuffle join instead of a forced-broadcast driver OOM.
     """
-    from pyspark.sql import functions as F
+    new_keys = new_rows.select(*keys).distinct()
 
-    new_rows = new_rows.cache()  # read twice: partition probe + union
-    try:
-        if _fs_path_exists(spark, path):
-            touched = [
-                tuple(r[c] for c in partition_by)
-                for r in new_rows.select(*partition_by).distinct().collect()
-            ]
-            existing = spark.read.parquet(path)
-            in_touched = filter_touched_partitions(
-                existing, new_rows, partition_by, touched
-            )
-            # no broadcast HINT on the batch's distinct keys: AQE
-            # broadcasts them when they're small (the common micro-batch
-            # case); a giant backfill batch degrades to a shuffle join
-            # instead of a forced-broadcast driver OOM
-            if order_col is None:
-                survivors = in_touched.join(
-                    new_rows.select(*keys).distinct(),
-                    on=list(keys),
-                    how="left_anti",
-                )
-                out = survivors.select(*new_rows.columns).unionByName(new_rows)
-            else:
-                # only CONTESTED existing rows (key present in the batch)
-                # enter the version window; the rest of the touched
-                # partitions survive the merge untouched, same as blind mode
-                new_keys = new_rows.select(*keys).distinct()
-                aligned = in_touched.select(*new_rows.columns)
-                contested = aligned.join(new_keys, on=list(keys), how="left_semi")
-                uncontested = aligned.join(new_keys, on=list(keys), how="left_anti")
-                out = uncontested.unionByName(
-                    _versioned_winners(contested, new_rows, keys, order_col)
-                )
-        else:
-            out = (
-                new_rows
-                if order_col is None
-                else _versioned_winners(None, new_rows, keys, order_col)
-            )
-        write_partitioned_parquet(
-            out, path, partition_by, mode="overwrite", compression=compression
+    def survivors(existing: DataFrame) -> DataFrame:
+        if order_col is None:
+            kept = existing.join(new_keys, on=list(keys), how="left_anti")
+            return kept.unionByName(new_rows)
+        # only CONTESTED existing rows (key present in the batch) enter
+        # the version window; the rest survive untouched, as in blind mode
+        contested = existing.join(new_keys, on=list(keys), how="left_semi")
+        uncontested = existing.join(new_keys, on=list(keys), how="left_anti")
+        return uncontested.unionByName(
+            _versioned_winners(contested, new_rows, keys, order_col)
         )
-    finally:
-        new_rows.unpersist()
+
+    _merge_touched_partitions(
+        spark, new_rows, path, partition_by, survivors, compression=compression
+    )
 
 
 def _is_orderable(dt) -> bool:

@@ -97,25 +97,25 @@ def run_incremental_pipeline(
     and late-landing files produce). Each batch therefore (1) tags its
     rows with ``__ingest_epoch`` = the micro-batch epoch (reserved —
     raises if the transform output already carries it), (2) reads back
-    ONLY the touched partitions (``sinks.filter_touched_partitions``:
-    null-safe literal OR-chain up to ~100 partitions, broadcast semi-join
-    on the partition tuple beyond), (3) drops prior
-    rows of the SAME epoch — that filter is what makes a replay after a
-    mid-write crash idempotent instead of doubling the batch — and
-    (4) dynamic-overwrites the touched partitions with survivors + new
-    rows. Cost is O(touched partitions + batch), never O(table);
+    ONLY the touched partitions, under the batch's own schema rather
+    than an inferred one, (3) drops prior rows of the SAME epoch — that
+    filter is what makes a replay after a mid-write crash idempotent
+    instead of doubling the batch — and (4) dynamic-overwrites the
+    touched partitions with survivors + new rows. Steps (2) and (4) are
+    the read-modify-write skeleton ``sources.sinks.upsert_by_key`` also
+    runs on. Cost is O(touched partitions + batch), never O(table);
     ``max_partitions_per_batch`` bounds the driver-side touched-partition
-    probe the same way ``materialized_rollup`` bounds its day probe.
-    Checkpoint and output directory are a unit: wiping the checkpoint but
-    keeping the output restarts epochs at 0 and breaks the replay filter.
+    probe the same way ``materialized_rollup`` bounds its day probe: a
+    batch over it raises before anything is written, and the checkpoint
+    does not commit it. Checkpoint and output directory are a unit:
+    wiping the checkpoint but keeping the output restarts epochs at 0 and
+    breaks the replay filter.
     """
     stream = _parquet_stream(spark, schema, input_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         from fiap_machine_learning_tech_challenge_2_etl_spark.sources.sinks import (
-            _fs_path_exists,
-            filter_touched_partitions,
-            write_partitioned_parquet,
+            _merge_touched_partitions,
         )
 
         transformed = transform(batch_df)
@@ -129,41 +129,21 @@ def run_incremental_pipeline(
         out = transformed.withColumn(
             "__ingest_epoch", F.lit(int(epoch_id)).cast("long")
         )
-        out = out.persist()  # read twice: partition probe + merge/write
-        try:
-            touched = (
-                out.select(*partition_by)
-                .distinct()
-                .limit(max_partitions_per_batch + 1)
-                .collect()
+
+        def survivors(existing: DataFrame) -> DataFrame:
+            keep = existing.filter(
+                F.col("__ingest_epoch").isNull()
+                | (F.col("__ingest_epoch") != F.lit(int(epoch_id)))
             )
-            if not touched:
-                return
-            if len(touched) > max_partitions_per_batch:
-                raise ValueError(
-                    f"micro-batch {epoch_id} touches > {max_partitions_per_batch} "
-                    "output partitions; lower maxFilesPerTrigger or raise "
-                    "max_partitions_per_batch"
-                )
-            merged = out
-            if _fs_path_exists(spark, output_dir):
-                # two-regime pruning shared with sinks.upsert_by_key:
-                # literal OR-chain for small batches, broadcast semi-join
-                # past _MAX_LITERAL_PARTITION_FILTER touched partitions
-                existing = filter_touched_partitions(
-                    spark.read.schema(out.schema).parquet(output_dir),
-                    out,
-                    partition_by,
-                    [tuple(row[c] for c in partition_by) for row in touched],
-                )
-                keep = existing.filter(
-                    F.col("__ingest_epoch").isNull()
-                    | (F.col("__ingest_epoch") != F.lit(int(epoch_id)))
-                )
-                merged = keep.unionByName(out)
-            write_partitioned_parquet(merged, output_dir, partition_by)
-        finally:
-            out.unpersist()
+            return keep.unionByName(out)
+
+        _merge_touched_partitions(
+            spark, out, output_dir, partition_by, survivors,
+            max_partitions=max_partitions_per_batch,
+            over_cap=f"micro-batch {epoch_id} touches > {max_partitions_per_batch} "
+            "output partitions; lower maxFilesPerTrigger or raise "
+            "max_partitions_per_batch",
+        )
 
     _drain_available_now(stream, sink, checkpoint_dir)
 

@@ -1012,6 +1012,69 @@ def test_incremental_pipeline_semi_join_pruning_regime(spark, tmp_path):
     assert (per["lo"], per["hi"]) == (2, 2)
 
 
+def test_incremental_pipeline_partition_cap_refuses_batch_without_commit(spark, tmp_path):
+    """``max_partitions_per_batch`` is enforced before anything is read
+    or written: a micro-batch touching cap + 1 output partitions raises
+    the over-cap error (naming the micro-batch and both remedies), leaves
+    the output directory byte-for-byte unchanged, and is not committed to
+    the checkpoint — a re-run with a larger cap drains it to the same
+    rows as a run that never hit the cap."""
+    from collections import Counter
+
+    import pyspark.errors
+
+    from fiap_machine_learning_tech_challenge_2_etl_spark.streaming.incremental import (
+        run_incremental_pipeline,
+    )
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    schema = "id long, day string"
+    sch = T._parse_datatype_string(schema)
+
+    def land(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+
+    def drain(name, **kw):
+        run_incremental_pipeline(
+            spark, src, sch, lambda df: df, str(tmp_path / name),
+            str(tmp_path / f"{name}_ck"), partition_by=["day"], **kw,
+        )
+
+    def snapshot(name):
+        root = tmp_path / name
+        return {
+            str(f.relative_to(root)): f.read_bytes()
+            for f in sorted(root.rglob("*"))
+            if f.is_file()
+        }
+
+    def rows(name):
+        return Counter(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / name)).collect()
+        )
+
+    land([(1, "d1"), (2, "d2")])  # epoch 0: two partitions, at the cap
+    drain("capped", max_partitions_per_batch=2)
+    drain("uncapped")
+    before = snapshot("capped")
+
+    land([(3, "d1"), (4, "d2"), (5, "d3")])  # epoch 1: cap + 1 partitions
+    with pytest.raises(
+        (ValueError, pyspark.errors.PySparkException),
+        match=r"micro-batch 1 touches > 2 output partitions; lower "
+        r"maxFilesPerTrigger or raise max_partitions_per_batch",
+    ):
+        drain("capped", max_partitions_per_batch=2)
+    assert snapshot("capped") == before
+    assert not os.path.exists(tmp_path / "capped_ck" / "commits" / "1")
+
+    drain("capped", max_partitions_per_batch=3)
+    drain("uncapped")
+    assert sum(rows("capped").values()) == 5
+    assert rows("capped") == rows("uncapped")
+
+
 def test_stream_interval_join_outer_unmatched_exactly_once(spark, tmp_path):
     """LEFT-OUTER interval join: a click with no view in its window emits
     exactly ONE NULL-padded row, and only after the watermark passes its

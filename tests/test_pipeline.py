@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fiap_machine_learning_tech_challenge_2_etl_spark.plans.pipeline import (
@@ -153,6 +154,43 @@ def test_upsert_by_key_many_partitions_semi_join_path(spark, tmp_path):
     want.add((999_999, -1.0, "untouched"))
     assert got == want
     assert set(os.listdir(os.path.join(path, "day=untouched"))) == un_files
+
+
+@pytest.mark.parametrize("order_col", [None, "ver"], ids=["blind", "versioned"])
+@pytest.mark.parametrize(
+    "codes", [("007", "010"), ("2024-01-02", "2024-01-03")], ids=["zero_padded", "date_like"]
+)
+def test_upsert_by_key_keeps_string_partition_values(spark, tmp_path, order_col, codes):
+    """String partition values that partition type inference would read
+    back as an int ("007" -> 7) or a date keep their directory across
+    upserts: the touched partitions are read back under the incoming
+    rows' schema, so the rewrite neither opens a ``code=7`` directory nor
+    leaves the old rows behind in ``code=007``."""
+    from fiap_machine_learning_tech_challenge_2_etl_spark.sources.sinks import upsert_by_key
+
+    a, b = codes
+    path = str(tmp_path / "tbl")
+    schema = "id long, ver long, v string, code string"
+    kw = dict(keys=["id"], partition_by=["code"], order_col=order_col)
+
+    def part_dirs():
+        return sorted(d for d in os.listdir(path) if d.startswith("code="))
+
+    upsert_by_key(
+        spark,
+        spark.createDataFrame([(1, 1, "old", a), (2, 1, "old", a), (3, 1, "old", b)], schema),
+        path,
+        **kw,
+    )
+    before = part_dirs()
+    assert before == [f"code={a}", f"code={b}"]
+    upsert_by_key(spark, spark.createDataFrame([(1, 2, "new", a)], schema), path, **kw)
+    assert part_dirs() == before
+    got = sorted(
+        (r["id"], r["v"], r["code"])
+        for r in spark.read.schema(schema).parquet(path).collect()
+    )
+    assert got == [(1, "new", a), (2, "old", a), (3, "old", b)]
 
 
 def test_range_clustered_write_produces_disjoint_sorted_files(spark, tmp_path):
@@ -442,3 +480,28 @@ def test_v2_stream_foreachbatch_per_file_micro_batches(spark, tmp_path):
         for r in spark.read.parquet(out1).collect()
     }
     assert ("ELETROBRAS", "UNKNOWN", "1970-01-01") in filled
+
+
+def test_no_module_level_name_defined_twice():
+    """A second module-level ``def`` (or ``class``) of the same name
+    silently shadows the first: the module attribute, tracebacks and any
+    tool that resolves a function by ``__name__`` all see only the last
+    one. No package module may repeat a top-level name."""
+    import ast
+    import collections
+    import pathlib
+
+    import fiap_machine_learning_tech_challenge_2_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    repeated = {}
+    for path in sorted(root.rglob("*.py")):
+        names = collections.Counter(
+            node.name
+            for node in ast.parse(path.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        )
+        dups = sorted(n for n, c in names.items() if c > 1)
+        if dups:
+            repeated[str(path.relative_to(root))] = dups
+    assert repeated == {}
